@@ -10,7 +10,8 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 Each query is forced end-to-end with a noop-format write (full execution,
 no driver collect). The KG pipeline throughput number runs the fused
 extract->consensus->triples chain over BENCH_DOCS synthetic interleaved
-docs (deterministic generator; same rows at any parallelism).
+docs (deterministic generator; same rows at any parallelism). Cores and
+driver heap default to this machine's (ner_spark.session.machine_size).
 """
 
 import json
@@ -46,7 +47,6 @@ def _probe_gbps(seconds: float = 2.0) -> float:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_bench_docs = int(os.environ.get("BENCH_DOCS", "200000"))
 
     from ner_spark import queries as Qmod
@@ -55,8 +55,9 @@ def main() -> int:
     from ner_spark.operators.clean import clean
     from ner_spark.operators.relations import extract_triples
     from ner_spark.plans.pipeline import KGPipeline
-    from ner_spark.session import get_spark
+    from ner_spark.session import get_spark, machine_size
 
+    cpus, driver_mem = machine_size()
     probe_before = _probe_gbps()
 
     spark = get_spark("bench", master=f"local[{cpus}]", shuffle_partitions=cpus)
@@ -138,6 +139,7 @@ def main() -> int:
                 "kg_docs_per_sec_warm": round(n_bench_docs / kg_sec_warm, 1),
                 "n_bench_docs": n_bench_docs,
                 "cpus": cpus,
+                "driver_mem": driver_mem,
                 "probe_gbps_before": probe_before,
                 "probe_gbps_mid_pipe": probe_mid,
                 "probe_gbps_after": _probe_gbps(),

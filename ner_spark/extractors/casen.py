@@ -17,6 +17,7 @@ Aho-Corasick automaton instead of a regex alternation; the plumbing
 
 from __future__ import annotations
 
+import math
 import re
 
 import pandas as pd
@@ -69,6 +70,31 @@ def _scan_doc(text: str, gaz_re, by_surface, pats, gaz_grf: dict[str, str]):
     ]
 
 
+def _asc(v) -> tuple:
+    return (v is not None, v or "")
+
+
+def gazetteer_rows(gazetteer: DataFrame) -> tuple:
+    """(alias, label) in match-priority order, sorted in the driver (the
+    table is small) exactly as Spark's ``orderBy(desc("weight"), "alias",
+    "label")``: ascending puts nulls first, and ``desc`` on a double puts
+    NaN first and nulls last."""
+
+    def desc(w):
+        return (2, 0.0) if w is None else (0, 0.0) if math.isnan(w) else (1, -w)
+
+    rows = gazetteer.select("alias", "label", "weight").collect()
+    rows.sort(key=lambda r: (desc(r[2]), _asc(r[0]), _asc(r[1])))
+    return tuple((r[0], r[1]) for r in rows)
+
+
+def pattern_rows(patterns: DataFrame) -> tuple:
+    """(pattern_id, regex, label) sorted as Spark's ``orderBy("pattern_id")``."""
+    rows = patterns.select("pattern_id", "regex", "label").collect()
+    rows.sort(key=lambda r: _asc(r[0]))
+    return tuple(map(tuple, rows))
+
+
 def rule_mentions(
     docs: DataFrame,
     gazetteer: DataFrame,
@@ -85,19 +111,11 @@ def rule_mentions(
     if gaz_grf is None:
         from ..synth import GAZ_GRF as gaz_grf  # default rule-id map
 
-    gaz_rows = [
-        (r["alias"], r["label"])
-        for r in gazetteer.select("alias", "label", "weight")
-        .orderBy(F.desc("weight"), "alias", "label")
-        .collect()
-    ]
-    pattern_rows = [
-        (r["pattern_id"], r["regex"], r["label"])
-        for r in patterns.select("pattern_id", "regex", "label")
-        .orderBy("pattern_id")
-        .collect()
-    ]
-    payload = (tuple(gaz_rows), tuple(pattern_rows), tuple(sorted(gaz_grf.items())))
+    payload = (
+        gazetteer_rows(gazetteer),
+        pattern_rows(patterns),
+        tuple(sorted(gaz_grf.items())),
+    )
 
     @F.pandas_udf(MENTION_ARR)
     def extract(texts: pd.Series) -> pd.Series:

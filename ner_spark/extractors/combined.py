@@ -24,7 +24,7 @@ from pyspark.sql import types as T
 from .. import schemas
 from ..functions.text import context_window
 from .casen import _COMPILED as _RULE_CACHE
-from .casen import _compile, _scan_doc
+from .casen import _compile, _scan_doc, gazetteer_rows, pattern_rows
 from .model_stub import _stub_scan
 
 TAGGED_MENTION = T.StructType(
@@ -53,19 +53,11 @@ def combined_mentions(
     if gaz_grf is None:
         from ..synth import GAZ_GRF as gaz_grf
 
-    gaz_rows = tuple(
-        (r["alias"], r["label"])
-        for r in gazetteer.select("alias", "label", "weight")
-        .orderBy(F.desc("weight"), "alias", "label")
-        .collect()
+    payload = (
+        gazetteer_rows(gazetteer),
+        pattern_rows(patterns),
+        tuple(sorted(gaz_grf.items())),
     )
-    pattern_rows = tuple(
-        (r["pattern_id"], r["regex"], r["label"])
-        for r in patterns.select("pattern_id", "regex", "label")
-        .orderBy("pattern_id")
-        .collect()
-    )
-    payload = (gaz_rows, pattern_rows, tuple(sorted(gaz_grf.items())))
     model_sources = [
         (rank, name) for rank, name in enumerate(source_order) if name != "casEN"
     ]

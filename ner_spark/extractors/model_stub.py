@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .base import MENTION_ARR, explode_mentions
+from .casen import gazetteer_rows
 
 _ROTATE = {"PER": "LOC", "LOC": "ORG", "ORG": "PER"}
 _COMPILED: dict[int, tuple] = {}
@@ -187,12 +188,7 @@ def model_mentions(
     """
     if use_model is None:
         use_model = _have_stanza() if method == "stanza" else _have_spacy()
-    gaz_rows = tuple(
-        (r["alias"], r["label"])
-        for r in gazetteer.select("alias", "label", "weight")
-        .orderBy(F.desc("weight"), "alias", "label")
-        .collect()
-    )
+    gaz_rows = gazetteer_rows(gazetteer)
 
     @F.pandas_udf(MENTION_ARR)
     def extract(doc_uids: pd.Series, texts: pd.Series) -> pd.Series:

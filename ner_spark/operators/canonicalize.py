@@ -71,8 +71,8 @@ def connected_components(
     of the component (lexicographic for strings — stable, deterministic).
 
     Graphs whose distinct edge count is <= ``small_graph_threshold`` resolve
-    driver-side (one collect + union-find, same output) — the iterative
-    star rounds are pure fixed scheduling cost at that size.
+    driver-side (one bounded collect + union-find, same output) — the
+    iterative star rounds are pure fixed scheduling cost at that size.
 
     Alternating large-star / small-star (Kiveris et al., SOCC'14):
     - edges are kept oriented larger -> smaller (``src > dst``);
@@ -100,9 +100,9 @@ def connected_components(
     from .scratch import session_scratch_dir
 
     spark = edges.sparkSession
-    # the initial distinct edge set feeds _edge_stats AND round 0 (or the
-    # fast-path collect); persist — not localCheckpoint — keeps the lineage
-    # recoverable while preventing a recompute between the two consumers
+    # the initial distinct edge set feeds the bounded collect, _edge_stats
+    # AND round 0; persist — not localCheckpoint — keeps the lineage
+    # recoverable while preventing a recompute between the consumers
     e = (
         _symmetrize(edges)
         .select(F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst"))
@@ -110,24 +110,25 @@ def connected_components(
         .persist()
     )
     e0 = e
-    n_edges, chk = _edge_stats(e)
-    if n_edges <= small_graph_threshold:
-        # Small-graph fast path: each large/small-star round is ~6 Spark jobs
-        # of pure scheduling cost; below the threshold the distinct edge set
-        # fits trivially in the driver, and one collect + union-find returns
-        # the identical (node, component) assignment. The distributed path
-        # below is the 10^12-doc scale recipe; pass small_graph_threshold=0
-        # to force it (tests compare both). The collect is bounded by the
-        # threshold and e is already materialized by the _edge_stats pass.
+    # Small-graph fast path: each large/small-star round is ~6 Spark jobs of
+    # pure scheduling cost; below the threshold the distinct edge set fits
+    # trivially in the driver, and union-find returns the identical (node,
+    # component) assignment. One collect bounded at threshold + 1 rows both
+    # picks the path and feeds union-find. The distributed path below is
+    # the 10^12-doc scale recipe; pass small_graph_threshold=0 to force it
+    # (tests compare both).
+    head = e.limit(small_graph_threshold + 1).collect()
+    if len(head) <= small_graph_threshold:
         from pyspark.sql.types import StructField, StructType
 
-        mapping = _driver_union_find([(r["src"], r["dst"]) for r in e.collect()])
+        mapping = _driver_union_find([(r["src"], r["dst"]) for r in head])
         node_t = e.schema["src"].dataType
         out_schema = StructType(
             [StructField("node", node_t), StructField("component", node_t)]
         )
         e0.unpersist()
         return spark.createDataFrame(sorted(mapping.items()), out_schema)
+    n_edges, chk = _edge_stats(e)
     scratch = session_scratch_dir(spark, prefix="cc_rounds")
     for i in range(max_iter):
         # --- large-star ---

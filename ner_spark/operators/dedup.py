@@ -877,6 +877,8 @@ def prefix_filter_pairs(
 
     from .scratch import scratch_persist
 
+    if on_exceed not in ("degrade", "error"):
+        raise ValueError(f"on_exceed must be 'degrade' or 'error', got {on_exceed!r}")
     # four consumers read the shingle sets (posting x2 via ranked, sa, sb)
     # and `shingled` output is provably non-empty — barrier + explode_ne,
     # the same shield every sibling multi-consumer operator carries

@@ -22,6 +22,7 @@ both branches.
 from __future__ import annotations
 
 import hashlib
+import re
 import struct
 from collections.abc import Iterator
 
@@ -184,8 +185,8 @@ def _decode_ppm(payload: bytes):
             sums[0] += raster[3 * i]
             sums[1] += raster[3 * i + 1]
             sums[2] += raster[3 * i + 2]
-    else:  # P3: ASCII samples
-        vals = payload[pos:].split()
+    else:  # P3: ASCII samples; '#' comments may sit between them too
+        vals = re.sub(rb"#[^\n]*", b"", payload[pos:]).split()
         if len(vals) < npx * 3:
             raise ValueError("PPM raster truncated")
         for i in range(npx):
@@ -215,6 +216,8 @@ def _decode_wav(payload: bytes):
         pos += 8 + size + (size & 1)  # chunks pad to even offsets
     if fmt is None or data is None:
         raise ValueError("WAV missing fmt/data chunk")
+    if len(fmt) < 16:
+        raise ValueError(f"WAV fmt chunk is {len(fmt)} bytes, PCM needs 16")
     audio_fmt, n_ch, rate = struct.unpack_from("<HHI", fmt, 0)
     bits = struct.unpack_from("<H", fmt, 14)[0]
     if audio_fmt != 1 or bits not in (8, 16):

@@ -202,24 +202,6 @@ class Runner:
                         out_bucketed, name, fingerprint, stage=name, buckets=missing
                     )
                     rows_written = sum(r["rows"] for r in manifest)
-                    # buckets with zero output rows still count as completed
-                    written = {r["bucket"] for r in manifest}
-                    empty = [
-                        {
-                            "stage": name,
-                            "table": name,
-                            "bucket": b,
-                            "fingerprint": fingerprint,
-                            "rows": 0,
-                            "wall_ms": 0,
-                            "ts": time.time(),
-                        }
-                        for b in missing
-                        if b not in written
-                    ]
-                    if empty:
-                        self._check_lease(name, lost)
-                        self.catalog.record(name, empty)
                 break
             except LeaseLost:
                 done, missing, rows_written = set(), [], 0
@@ -275,41 +257,15 @@ class Runner:
                     self.catalog.prune_unmanifested(name, set())
                     out = compute()
                     self._check_lease(name, lost)
-                    manifest = self.catalog.write_buckets(
-                        out.withColumn(BUCKET_COL, F.lit(0)), name, fingerprint, stage=name
+                    # the whole table is bucket 0, written from one task;
+                    # an empty result still records bucket 0 as completed
+                    self.catalog.write_buckets(
+                        out.withColumn(BUCKET_COL, F.lit(0)),
+                        name,
+                        fingerprint,
+                        stage=name,
+                        buckets=[0],
                     )
-                    if not manifest:
-                        # a legitimately-empty result writes no parquet and
-                        # hence no manifest row; without an explicit
-                        # completion marker every resume would re-run the
-                        # whole compute() (the per-bucket stage above
-                        # handles this with its empty-bucket rows). The
-                        # empty frame is rewritten UNPARTITIONED: a
-                        # partitioned empty write leaves only _SUCCESS and
-                        # the read-back cannot infer a schema, while the
-                        # unpartitioned form writes one schema-bearing
-                        # (0-row) parquet file. Built from the schema, NOT
-                        # from `out` — write_buckets already executed the
-                        # full compute() DAG once to learn it was empty,
-                        # and re-writing `out` would run that whole DAG a
-                        # second time just to produce 0 rows.
-                        self.spark.createDataFrame([], out.schema).withColumn(
-                            BUCKET_COL, F.lit(0)
-                        ).write.mode("overwrite").parquet(self.catalog.table_dir(name))
-                        self.catalog.record(
-                            name,
-                            [
-                                {
-                                    "stage": name,
-                                    "table": name,
-                                    "bucket": 0,
-                                    "fingerprint": fingerprint,
-                                    "rows": 0,
-                                    "wall_ms": 0,
-                                    "ts": time.time(),
-                                }
-                            ],
-                        )
                 break
             except LeaseLost:
                 done = set()

@@ -13,6 +13,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def machine_size() -> tuple[int, str]:
+    """(cores, driver memory) to size a local session by. Each comes from
+    its env var when set (``SPARK_GRAFT_CPUS``, ``SPARK_DRIVER_MEM``),
+    otherwise from this machine: the cores this process may run on, and a
+    quarter of physical memory clamped to 1g..8g (the JVM shares the box
+    with the Python workers and the driver process)."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    mem = os.environ.get("SPARK_DRIVER_MEM")
+    if not mem:
+        with open("/proc/meminfo", encoding="utf-8") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+        mem = f"{max(1, min(8, kb // (4 * 1024 * 1024)))}g"
+    return cpus, mem
+
+
 def get_spark(
     app_name: str = "ner_spark",
     master: str | None = None,
@@ -21,11 +36,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    ``shuffle_partitions`` defaults to the core count of the master string —
-    at cluster scale you would set this to ~2-3x total cores instead.
+    ``master`` defaults to ``local[cores]`` and the driver heap to the
+    memory of :func:`machine_size`. ``shuffle_partitions`` defaults to the
+    core count of the master string — at cluster scale you would set this
+    to ~2-3x total cores instead.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus, driver_mem = machine_size()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -43,7 +59,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # InferFiltersFromGenerate synthesizes `size(arr) > 0` from every

@@ -9,20 +9,31 @@ JSONL manifest recording (stage, bucket, fingerprint, rows, wall_ms) per
 completed partition. Swapping in Iceberg means replacing ``write_buckets``
 with ``overwritePartitions`` and the manifest with a snapshot query — the
 runner API does not change.
+
+As in an Iceberg commit, the metadata comes from the write: manifest row
+counts from the written files' parquet footers, and the schema stored in
+``_schema.json`` (Spark skips ``_`` files) so ``read`` infers nothing and
+an empty table stays readable. Older tables without it are inferred.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
+import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 BUCKET_COL = "_bucket"
+SCHEMA_FILE = "_schema.json"
 
 
 def with_bucket(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
@@ -55,6 +66,9 @@ class Catalog:
 
     def manifest_path(self, table: str) -> str:
         return os.path.join(self.root, f"{table}.manifest.jsonl")
+
+    def schema_path(self, table: str) -> str:
+        return os.path.join(self.table_dir(table), SCHEMA_FILE)
 
     def fingerprint_path(self, table: str) -> str:
         return os.path.join(self.root, f"{table}.fingerprint")
@@ -242,22 +256,19 @@ class Catalog:
         only after the write). On resume, dynamic partition overwrite
         replaces exactly the buckets PRESENT in the new write — so a
         bucket whose recompute legitimately emits zero rows would keep the
-        dead writer's partial file, and the read-back row count would
-        record those stale rows as the bucket's content. Pruning
-        un-manifested bucket dirs (and commit-protocol ``_temporary``
-        leftovers) before the recompute closes that torn-write window;
-        manifested buckets are never touched. Returns the pruned ids.
+        dead writer's partial file, and its footer row count would be
+        recorded as the bucket's content. Pruning un-manifested bucket
+        dirs (and commit-protocol ``_temporary`` leftovers) before the
+        recompute closes that torn-write window; manifested buckets and
+        the stored schema are never touched. Returns the pruned ids.
         """
-        import re
-        import shutil
-
         tdir = self.table_dir(table)
         if not os.path.isdir(tdir):
             return []
         pruned = []
         for d in os.listdir(tdir):
             full = os.path.join(tdir, d)
-            m = re.fullmatch(rf"{BUCKET_COL}=(-?\d+)", d)
+            m = re.fullmatch(rf"{BUCKET_COL}=(\d+)", d)
             if m and os.path.isdir(full):
                 if int(m.group(1)) not in keep:
                     shutil.rmtree(full, ignore_errors=True)
@@ -267,8 +278,6 @@ class Catalog:
         return sorted(pruned)
 
     def reset_table(self, table: str) -> None:
-        import shutil
-
         if os.path.isdir(self.table_dir(table)):
             shutil.rmtree(self.table_dir(table))
         self.clear_manifest(table)
@@ -308,65 +317,63 @@ class Catalog:
         table: str,
         fingerprint: str,
         stage: str,
-        buckets: list[int] | None = None,
+        buckets: list[int],
     ) -> list[dict]:
         """Write a (already bucketed) DataFrame partitioned by bucket, then
-        append one manifest row per bucket written. Idempotent per bucket:
-        dynamic partition overwrite replaces exactly the buckets present in
-        ``df`` and leaves the rest of the table untouched.
-
-        Row counts for the manifest come from reading BACK the written
-        parquet (restricted to ``buckets`` when given) — counting ``df``
-        itself would re-execute the whole stage transform a second time.
-        """
+        append one manifest row per bucket in ``buckets`` (an empty bucket
+        is completed with 0 rows). Idempotent per bucket: dynamic partition
+        overwrite replaces exactly the buckets present in ``df`` and leaves
+        the rest of the table untouched. The write is the only Spark job:
+        counts come from the footers in the bucket dirs it replaced (the
+        Runner prunes un-manifested dirs first), and ``df``'s schema is
+        stored for ``read``."""
         t0 = time.time()
-        spark = df.sparkSession
-        with_conf(spark)
+        with_conf(df.sparkSession)
+        tdir = self.table_dir(table)
         # cluster rows by bucket before writing: each bucket dir receives
         # exactly one file, independent of task parallelism — otherwise
         # every one of N tasks opens a writer in every one of B bucket dirs
         # (N x B small files; at 16 cores x 128 buckets that file storm
         # dominates the stage and *anti-scales* with cores)
-        n_part = max(len(buckets), 1) if buckets else 64
-        df.repartition(n_part, F.col(BUCKET_COL)).write.mode("overwrite").partitionBy(
-            BUCKET_COL
-        ).parquet(self.table_dir(table))
-        # an all-empty write leaves no parquet footer behind (only _SUCCESS),
-        # which would make every later read fail schema inference — write an
-        # explicit zero-row file with the schema in that case
-        import glob as _glob
-
-        if not _glob.glob(os.path.join(self.table_dir(table), "**", "*.parquet"), recursive=True):
-            df.drop(BUCKET_COL).limit(0).write.mode("overwrite").parquet(
-                os.path.join(self.table_dir(table), f"{BUCKET_COL}=-1")
-            )
+        df.repartition(len(buckets), F.col(BUCKET_COL)).write.mode(
+            "overwrite"
+        ).partitionBy(BUCKET_COL).parquet(tdir)
+        # write-then-rename: a reader never sees a torn schema file
+        tmp = f"{self.schema_path(table)}.{uuid.uuid4().hex}"
+        with open(tmp, "w", encoding="utf-8") as f:
+            f.write(df.schema.json())
+        os.replace(tmp, self.schema_path(table))
         wall_ms = int((time.time() - t0) * 1000)
-        written = spark.read.parquet(self.table_dir(table))
-        if buckets is not None:
-            written = written.filter(F.col(BUCKET_COL).isin(list(buckets)))
         counts = {
-            r[BUCKET_COL]: r["cnt"]
-            for r in written.groupBy(BUCKET_COL)
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
+            b: sum(
+                pq.read_metadata(p).num_rows
+                for p in glob.glob(os.path.join(tdir, f"{BUCKET_COL}={b}", "*.parquet"))
+            )
+            for b in buckets
         }
         rows = [
             {
                 "stage": stage,
                 "table": table,
-                "bucket": int(b),
+                "bucket": b,
                 "fingerprint": fingerprint,
-                "rows": int(c),
+                "rows": counts[b],
                 "wall_ms": wall_ms,
                 "ts": time.time(),
             }
-            for b, c in sorted(counts.items())
+            # buckets with rows first, then the empty ones, each by id
+            for b in sorted(buckets, key=lambda b: (counts[b] == 0, b))
         ]
         self.record(table, rows)
         return rows
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self.table_dir(table))
+        path = self.schema_path(table)
+        if not os.path.exists(path):
+            return spark.read.parquet(self.table_dir(table))
+        with open(path, encoding="utf-8") as f:
+            schema = StructType.fromJson(json.load(f))
+        return spark.read.schema(schema).parquet(self.table_dir(table))
 
     def exists(self, table: str) -> bool:
         return os.path.isdir(self.table_dir(table))
@@ -387,13 +394,10 @@ class Catalog:
         {files_before, files_after, rows} and appends a ``compact`` row per
         bucket to the manifest.
         """
-        import glob as _glob
-        import shutil
-
         src = self.table_dir(table)
         staging = src + ".compact"
-        before = _glob.glob(os.path.join(src, "**", "*.parquet"), recursive=True)
-        df = spark.read.parquet(src)
+        before = glob.glob(os.path.join(src, "**", "*.parquet"), recursive=True)
+        df = self.read(spark, table)
         n_rows = df.count()
         buckets = [r[0] for r in df.select(BUCKET_COL).distinct().collect()]
         if os.path.isdir(staging):
@@ -415,9 +419,11 @@ class Catalog:
             raise RuntimeError(
                 f"compact {table}: staged {n_staged} rows != source {n_rows}"
             )
+        if os.path.exists(self.schema_path(table)):
+            shutil.copy(self.schema_path(table), os.path.join(staging, SCHEMA_FILE))
         shutil.rmtree(src)
         os.replace(staging, src)
-        after = _glob.glob(os.path.join(src, "**", "*.parquet"), recursive=True)
+        after = glob.glob(os.path.join(src, "**", "*.parquet"), recursive=True)
         self.record(
             table,
             [

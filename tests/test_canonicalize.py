@@ -68,6 +68,24 @@ def test_cc_matches_union_find_on_random_graph(spark):
     assert _run_cc(spark, edges, threshold=0) == want
 
 
+def test_cc_threshold_boundary_picks_path_from_one_bounded_collect(spark, monkeypatch):
+    """The bounded collect decides the path: exactly ``threshold`` distinct
+    edges resolve in the driver (no distributed convergence probe),
+    ``threshold + 1`` take the star rounds, and both give the same answer."""
+    from ner_spark.operators import canonicalize
+
+    edges = [(f"a{i}", f"a{i + 1}") for i in range(9)] + [("b1", "b0"), ("b2", "b1")]
+    want = _cc_oracle(edges)
+    probes = []
+    stats = canonicalize._edge_stats
+    monkeypatch.setattr(canonicalize, "_edge_stats", lambda e: probes.append(1) or stats(e))
+    n = len(edges)  # 11 distinct undirected edges
+    assert _run_cc(spark, edges, threshold=n) == want
+    assert probes == []
+    assert _run_cc(spark, edges, threshold=n - 1) == want
+    assert probes
+
+
 def test_cc_idempotent(spark):
     edges = [("b", "a"), ("c", "b"), ("z", "c"), ("y", "x")]
     df = spark.createDataFrame(edges, ["src", "dst"])

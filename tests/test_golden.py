@@ -128,3 +128,33 @@ def test_engine_equals_oracle_across_seeds(
         for r in oracle["triples"].itertuples(index=False)
     }
     assert gt == wt and len(gt) > 50
+
+
+def test_rule_rows_sort_in_spark_order(spark, gazetteer, patterns, gaz_rows, pattern_rows):
+    """The extractors' driver-side sort of the dimension tables reproduces
+    Spark's ``orderBy``: on the fixture tables, and on tables with NaN and
+    null weights, null names and ties."""
+    from pyspark.sql import functions as F
+
+    from ner_spark.extractors import casen
+
+    assert casen.gazetteer_rows(gazetteer) == tuple(gaz_rows)
+    assert casen.pattern_rows(patterns) == tuple(pattern_rows)
+    nan = float("nan")
+    gaz = spark.createDataFrame(
+        [("b", "PER", 1.0), ("a", "LOC", 1.0), ("a", "ORG", 1.0), ("c", None, None),
+         ("d", "LOC", nan), (None, "PER", 2.0), ("é", "PER", -0.0), ("e", "PER", 0.0),
+         ("z", "LOC", -3.5), ("y", "LOC", None), ("x", "PER", nan)],
+        "alias string, label string, weight double",
+    )
+    pats = spark.createDataFrame(
+        [("p2", "x", "LOC"), (None, "y", "PER"), ("p10", "z", "ORG")],
+        "pattern_id string, regex string, label string",
+    )
+    assert casen.gazetteer_rows(gaz) == tuple(
+        (r["alias"], r["label"])
+        for r in gaz.orderBy(F.desc("weight"), "alias", "label").collect()
+    )
+    assert casen.pattern_rows(pats) == tuple(
+        tuple(r) for r in pats.orderBy("pattern_id").collect()
+    )

@@ -128,3 +128,21 @@ def test_range_clustered_write_produces_disjoint_file_ranges(spark, tmp_path):
     assert sum(hits) == 1
     # and the data round-trips
     assert spark.read.parquet(out).count() == docs.count()
+
+
+def test_compact_keeps_stored_schema(spark, tmp_path):
+    """A Runner-written table keeps its stored schema across the compaction
+    swap, so reads after compaction still skip schema inference."""
+    from ner_spark.plans.runner import Runner
+
+    cat = Catalog(str(tmp_path / "cat"))
+    docs = spark.range(40).selectExpr("cast(id as string) as doc_uid", "id * 2 as v")
+    out, _ = Runner(spark=spark, catalog=cat, n_buckets=4).stage(
+        "t", docs, lambda d: d, key="doc_uid"
+    )
+    before = sorted(map(tuple, out.collect()))
+    cat.compact_table(spark, "t")
+    assert os.path.exists(cat.schema_path("t"))
+    after = cat.read(spark, "t").drop(BUCKET_COL)
+    assert after.schema == out.schema
+    assert sorted(map(tuple, after.collect())) == before

@@ -144,6 +144,13 @@ def test_prefix_filter_budget_exceeded_error_mode(spark, corpus):
         release_scratch()
 
 
+def test_prefix_filter_on_exceed_typo_rejected(spark, corpus):
+    """An unknown on_exceed mode (a typo like "raise") is rejected up
+    front instead of silently taking the degrade path."""
+    with pytest.raises(ValueError, match="on_exceed"):
+        prefix_filter_pairs(corpus, threshold_pct=70, max_candidates=0, on_exceed="raise")
+
+
 # ---------------------------------------------------------------------------
 # CUSUM: prefix-scan factorization == literal sequential recurrence
 # ---------------------------------------------------------------------------

@@ -473,3 +473,88 @@ def test_slow_live_writer_keeps_lease_via_heartbeat(spark, tmp_path_factory):
     cat = Catalog(str(out))
     seen = [(r["bucket"], r["fingerprint"]) for r in cat.manifest_rows("s0_normalize")]
     assert len(seen) == len(set(seen)) == N_BUCKETS, seen
+
+
+def test_empty_stage_resume_skips_all_buckets(spark, tmp_path_factory):
+    """Every bucket of a per-bucket stage emits zero rows. The stored
+    schema keeps the row-less table readable, so the second run skips all
+    buckets instead of failing to infer a schema from no parquet files."""
+    out = tmp_path_factory.mktemp("empty_stage")
+    docs = synth.synth_docs(spark, 20, seed=3)
+    for want in ((N_BUCKETS, 0), (0, N_BUCKETS)):
+        runner = Runner(spark=spark, catalog=Catalog(str(out)), n_buckets=N_BUCKETS)
+        df, _ = runner.stage("s0_empty", docs, lambda d: d.filter("false"),
+                             key="doc_id", input_fingerprint="empty")
+        m = runner.metrics[0]
+        assert (m.computed_buckets, m.skipped_buckets) == want
+        assert df.columns == docs.columns and df.count() == 0
+
+
+def test_manifest_counts_equal_written_table(spark, tmp_path_factory):
+    """Manifest row counts come from parquet footers; they must equal a
+    scan of the written table, for a cold run and for a resume that
+    recomputes damaged buckets. The stored-schema read has the schema an
+    inferred read finds."""
+    out = tmp_path_factory.mktemp("footer_counts")
+    runner, _ = _build(spark, out)
+    cat = runner.catalog
+    tables = ("s0_normalize", "s1_dedup", "s3_consensus")
+
+    def check():
+        for t in tables:
+            manifest = {r["bucket"]: r["rows"] for r in cat.manifest_rows(t)}
+            scanned = spark.read.parquet(cat.table_dir(t)).groupBy("_bucket").count()
+            assert set(manifest) == set(range(N_BUCKETS)), t
+            assert {b: n for b, n in manifest.items() if n} == {
+                r["_bucket"]: r["count"] for r in scanned.collect()
+            }, t
+            assert cat.read(spark, t).schema == spark.read.parquet(cat.table_dir(t)).schema
+
+    check()
+    # damage: s3 loses two buckets' manifest rows, s1 one bucket's data
+    import shutil
+
+    damaged = {0, 2}
+    kept = [r for r in cat.manifest_rows("s3_consensus") if r["bucket"] not in damaged]
+    cat.clear_manifest("s3_consensus")
+    cat.record("s3_consensus", kept)
+    kept = [r for r in cat.manifest_rows("s1_dedup") if r["bucket"] != 1]
+    cat.clear_manifest("s1_dedup")
+    cat.record("s1_dedup", kept)
+    shutil.rmtree(f"{cat.table_dir('s1_dedup')}/_bucket=1", ignore_errors=True)
+    runner2, _ = _build(spark, out)
+    by_stage = {m.table: m.computed_buckets for m in runner2.metrics}
+    assert by_stage == {"s0_normalize": 0, "s1_dedup": 1, "s3_consensus": len(damaged)}
+    check()
+
+
+def test_resumed_read_and_bookkeeping_submit_no_spark_jobs(spark, first_run):
+    """A fully checkpointed stage costs no Spark job: ``Catalog.read``
+    uses the stored schema instead of an inference job, and the manifest
+    bookkeeping is file I/O."""
+    import time
+
+    out, _, _ = first_run
+    cat = Catalog(str(out))
+    sc = spark.sparkContext
+    group = "catalog_no_jobs"
+    sc.setJobGroup(group, "resumed catalog reads")
+    try:
+        for t in ("s0_normalize", "s1_dedup", "s3_consensus"):
+            assert cat.read(spark, t).columns
+            fp = cat.manifest_rows(t)[0]["fingerprint"]
+            assert not cat.claim_fingerprint(t, fp)
+            done = cat.completed_buckets(t, fp)
+            assert done == set(range(N_BUCKETS))
+            assert cat.prune_unmanifested(t, done) == []
+        # sentinel: events reach the status tracker in order, so once this
+        # job is visible every earlier job of the group is too
+        spark.range(1).collect()
+        ids: list[int] = []
+        deadline = time.time() + 30
+        while not ids and time.time() < deadline:
+            time.sleep(0.05)
+            ids = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(ids) == 1, ids

@@ -157,3 +157,27 @@ def test_resize_and_frame_sampling(spark):
     # images have n_frames=1 -> exactly one frame (index 0) each
     assert frames.count() == decoded.count()
     assert frames.filter(F.col("frame_idx") != 0).count() == 0
+
+
+def test_real_decode_wav_short_fmt_chunk_raises():
+    """A fmt chunk under the 16 bytes PCM needs is a malformed payload
+    (ValueError), not a struct.error from reading past its end."""
+    import struct as _s
+
+    from ner_spark.operators.multimodal import _decode_wav
+
+    fmt = _s.pack("<HHI", 1, 1, 8000)  # 8 of the 16 bytes
+    body = b"WAVE" + b"fmt " + _s.pack("<I", len(fmt)) + fmt
+    body += b"data" + _s.pack("<I", 2) + b"\x00\x00"
+    with pytest.raises(ValueError, match="fmt chunk"):
+        _decode_wav(b"RIFF" + _s.pack("<I", len(body)) + body)
+
+
+def test_real_decode_p3_comment_inside_raster():
+    """P3 comments are skipped between samples as well as in the header:
+    the commented raster decodes like the plain one."""
+    from ner_spark.operators.multimodal import _decode_ppm
+
+    plain = b"P3\n2 2\n255\n255 0 0  0 255 0\n0 0 255  255 255 255\n"
+    commented = b"P3\n2 2\n255\n255 0 0 # red\n0 255 0\n# row 2\n0 0 255  255 255 255\n"
+    assert _decode_ppm(commented) == _decode_ppm(plain) == (2, 2, 1, [0.5, 0.5, 0.5])

@@ -19,7 +19,6 @@ Usage: python tools/sf1_stress.py [out_json]
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 
@@ -92,9 +91,9 @@ def main() -> int:
     out_path = sys.argv[1] if len(sys.argv) > 1 else "BENCH/sf1_stress_r04.json"
     import __spark_entry__ as E
     from ner_spark.operators.scratch import release_scratch
-    from ner_spark.session import get_spark
+    from ner_spark.session import get_spark, machine_size
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus, _ = machine_size()
     spark = get_spark("sf1_stress", master=f"local[{cpus}]", shuffle_partitions=cpus)
     qs = E.queries()
 

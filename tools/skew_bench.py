@@ -171,11 +171,10 @@ def selfjoin_micro(spark, n_rows: int = 60_000, reps: int = 3) -> dict:
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 4_800_000
     out_path = sys.argv[2] if len(sys.argv) > 2 else "BENCH/skew_bench_r04.json"
-    import os
 
-    from ner_spark.session import get_spark
+    from ner_spark.session import get_spark, machine_size
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus, _ = machine_size()
     spark = get_spark("skew_bench", master=f"local[{cpus}]", shuffle_partitions=cpus)
     gaz = build_gazetteer(spark).persist()
     gaz.count()
