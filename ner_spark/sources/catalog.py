@@ -14,10 +14,17 @@ As in an Iceberg commit, the metadata comes from the write: manifest row
 counts from the written files' parquet footers, and the schema stored in
 ``_schema.json`` (Spark skips ``_`` files) so ``read`` infers nothing and
 an empty table stays readable. Older tables without it are inferred.
+
+One writer per table at a time: an exclusive ``flock`` on
+``<table>.writer.lock``. The kernel drops it when its holder dies, so the
+successor of a killed run takes over at once, without waiting. That
+holds on a local or POSIX filesystem; on shared object storage Iceberg's
+optimistic commit replaces the lock, as it replaces the rest of the shim.
 """
 
 from __future__ import annotations
 
+import fcntl
 import glob
 import json
 import os
@@ -55,10 +62,7 @@ def with_bucket(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
 @dataclass
 class Catalog:
     root: str
-    # owner tokens for writer locks THIS catalog instance acquired
-    # (lock path -> token); release/heartbeat verify against the on-disk
-    # token so a broken-then-reissued lease is never removed by its old
-    # owner (round-5 ADVICE: ownership-less release defeats the lease)
+    # writer locks THIS catalog holds: lock path -> locked file descriptor
     _owned: dict = field(default_factory=dict, repr=False, compare=False)
 
     def table_dir(self, table: str) -> str:
@@ -99,154 +103,67 @@ class Catalog:
             f.write(fingerprint)
         return True
 
-    # -- concurrent-writer fencing ----------------------------------------
-    # Two Runners racing the same (table, fingerprint) must not interleave:
-    # dynamic partition overwrite is only idempotent for ONE writer at a
-    # time (two concurrent Spark writes to one directory fight over the
-    # commit protocol's _temporary dir), and both would append duplicate
-    # manifest rows. The fence is an O_CREAT|O_EXCL marker file per
-    # (table, fingerprint) with a lease: a lock whose mtime is older than
-    # ``lease_sec`` belongs to a dead writer and is broken. This is the
-    # parquet-shim analogue of Iceberg's optimistic-concurrency commit
-    # (the production swap point, like the rest of this module).
+    # -- concurrent-writer fence -------------------------------------------
+    # Two Runners writing one stage table must not interleave: dynamic
+    # partition overwrite is only idempotent for ONE writer at a time (two
+    # concurrent Spark writes to one directory fight over the commit
+    # protocol's _temporary dir), and both would append duplicate manifest
+    # rows (the module docstring has the lock's scope).
 
-    def writer_lock_path(self, table: str, fingerprint: str = "") -> str:
-        """One lock per TABLE (the fingerprint arg is kept for API
-        stability but is not part of the key): ``claim_fingerprint`` wipes
-        the whole table dir + manifest on a fingerprint change, so two
-        runners racing the same stage with DIFFERENT fingerprints still
-        contend on the same directory — a per-(table, fingerprint) lock
-        would let them interleave reset_table with each other's data
-        writes (round-5 ADVICE). Table-granular locking serializes them;
-        last writer wins the fingerprint, which is the claim semantics."""
+    def writer_lock_path(self, table: str) -> str:
+        """One lock per TABLE, not per fingerprint: ``claim_fingerprint``
+        wipes the whole table dir + manifest on a fingerprint change, so
+        runners racing one stage with different fingerprints must
+        serialize too; last writer wins the fingerprint."""
         return os.path.join(self.root, f"{table}.writer.lock")
 
-    def try_acquire_writer(
-        self, table: str, fingerprint: str = "", lease_sec: float = 600.0
-    ) -> bool:
-        """Atomically claim write ownership of ``table``.
+    def try_acquire_writer(self, table: str) -> bool:
+        """Take the writer lock of ``table`` without blocking.
 
-        Returns True iff this process is now the single writer; the caller
-        must ``release_writer`` when its buckets (data AND manifest rows)
-        are fully recorded. False means a live writer holds the lease —
-        poll ``completed_buckets`` instead of writing.
-
-        The lock file carries a unique owner token. Breaking a stale lease
-        goes through an atomic ``os.rename`` to a unique tombstone (one
-        renamer wins; losers fall back to the O_CREAT|O_EXCL race) with a
-        token re-verify after the rename, so racing survivors of a dead
-        writer cannot both remove "the" stale lock (the round-5 ADVICE
-        double-admission race). Exact guarantee: plain-filesystem lock
-        files cannot make ADMISSION perfectly atomic — in a sub-ms window
-        a breaker can yank a just-reissued live lock and a third racer can
-        create before the restore, transiently double-admitting — but
-        OWNERSHIP (the on-disk token, what ``owns_writer`` checks and the
-        Runner verifies synchronously before every write) is always
-        singular, so at most one admitted writer ever writes; the other
-        aborts on its pre-write verify. Production on shared storage swaps
-        this shim for the table format's commit protocol (Iceberg),
-        like the rest of this module.
+        True means this catalog is now the single writer and must
+        ``release_writer`` once its data AND manifest rows are recorded;
+        False means a live writer holds it. A lock file left by a killed
+        writer is unlocked, so it is taken over at once. The inode check
+        skips a file its previous holder unlinked on release (see
+        ``release_writer``): a lock on it would fence nothing.
         """
         os.makedirs(self.root, exist_ok=True)
         path = self.writer_lock_path(table)
-        # bounded retry: each pass either creates, sees a live lock
-        # (return False), or breaks/observes a broken stale lock and
-        # retries the create — a successful break ALWAYS earns another
-        # create attempt (returning False right after breaking would
-        # orphan the lock: every racer could break-and-bail, admitting
-        # nobody)
-        for _ in range(8):
-            token = uuid.uuid4().hex
+        while True:
+            fd = os.open(path, os.O_RDWR | os.O_CREAT, 0o644)
             try:
-                fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, f"{token} {os.getpid()} {time.time()}".encode("utf-8"))
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except BlockingIOError:
                 os.close(fd)
-                self._owned[path] = token
-                return True
-            except FileExistsError:
-                try:
-                    # observe (token, age) of the SAME lock instance; the
-                    # re-stat immediately before the break decision honors
-                    # a heartbeat between our first sight of the lock and
-                    # now
-                    with open(path, encoding="utf-8") as f:
-                        stale_token = f.read().split(" ", 1)[0]
-                    age = time.time() - os.path.getmtime(path)
-                except OSError:
-                    continue  # released between the two checks — retry
-                if age <= lease_sec:
-                    return False
-                tomb = f"{path}.tomb.{token}"
-                try:
-                    os.rename(path, tomb)  # atomic: one breaker wins
-                except FileNotFoundError:
-                    continue  # another breaker / a release got it — retry
-                # verify we yanked the lock we MEASURED as stale: a racing
-                # breaker may have broken it and recreated a fresh lock
-                # between our stat and our rename — renaming that live
-                # lock away would admit a second writer
-                try:
-                    with open(tomb, encoding="utf-8") as f:
-                        yanked_token = f.read().split(" ", 1)[0]
-                except OSError:
-                    yanked_token = None
-                if yanked_token == stale_token:
-                    os.remove(tomb)  # correct break — retry the create
-                    continue
-                # yanked a LIVE lock: restore it atomically (link fails if
-                # a third racer already created a new lock at path; that
-                # survivor keeps it, and the yanked owner's token-verified
-                # heartbeat flags the loss so it aborts before writing)
-                try:
-                    os.link(tomb, path)
-                except (FileExistsError, OSError):
-                    pass
-                os.remove(tomb)
                 return False
-        return False
+            try:
+                if os.fstat(fd).st_ino == os.stat(path).st_ino:
+                    self._owned[path] = fd
+                    return True
+            except FileNotFoundError:
+                pass
+            os.close(fd)
 
-    def owns_writer(self, table: str, fingerprint: str = "") -> bool:
-        """True iff the lock on disk still carries THIS catalog's token."""
+    def owns_writer(self, table: str) -> bool:
+        return self.writer_lock_path(table) in self._owned
+
+    # kept only as a name: perfbench's tracer wraps the four fence methods
+    # by name, and a kernel lock needs no heartbeat
+    heartbeat_writer = owns_writer
+
+    def release_writer(self, table: str) -> None:
+        """Unlink the lock file while still holding the lock, then unlock.
+        A waiter that opened the old file finds it unlinked and retries on
+        a fresh one, so a clean run leaves no lock file. A no-op for a
+        catalog that does not hold the lock."""
         path = self.writer_lock_path(table)
-        token = self._owned.get(path)
-        if token is None:
-            return False
-        try:
-            with open(path, encoding="utf-8") as f:
-                return f.read().split(" ", 1)[0] == token
-        except OSError:
-            return False
-
-    def heartbeat_writer(self, table: str, fingerprint: str = "") -> bool:
-        """Refresh the lease iff we still own it. Returns False — and
-        touches nothing — when the lock was broken and reissued to another
-        writer (the caller must treat that as a lost lease, not keep
-        beating someone else's lock)."""
-        if not self.owns_writer(table):
-            return False
-        try:
-            os.utime(self.writer_lock_path(table), None)
-            return True
-        except OSError:
-            return False
-
-    def release_writer(self, table: str, fingerprint: str = "") -> None:
-        """Remove the lock only if this catalog still owns it (token
-        verify immediately before the unlink). If the lease was broken and
-        reissued while we ran, the new owner's lock is left untouched —
-        the old owner's finally-block must not admit a third writer by
-        deleting a live lock it no longer holds."""
-        path = self.writer_lock_path(table)
-        token = self._owned.pop(path, None)
-        if token is None:
+        fd = self._owned.pop(path, None)
+        if fd is None:
             return
         try:
-            with open(path, encoding="utf-8") as f:
-                if f.read().split(" ", 1)[0] != token:
-                    return  # lease was broken + reissued: not ours anymore
-            os.remove(path)
-        except OSError:
-            pass
+            os.unlink(path)
+        finally:
+            os.close(fd)
 
     def prune_unmanifested(self, table: str, keep: set[int]) -> list[int]:
         """Remove bucket dirs that are NOT in the completed-manifest set.

@@ -30,12 +30,10 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--n-buckets", type=int, default=32)
     p.add_argument("--shuffle-partitions", type=int, default=None)
     p.add_argument(
-        "--writer-lease-sec", type=float, default=600.0,
-        help="writer-fence lease; a successor of a KILLED run waits this "
-        "long before breaking the dead writer's lock (live writers "
-        "heartbeat every lease/3, so short leases are safe)",
+        "--writer-wait-sec", type=float, default=600.0,
+        help="how long a stage waits for a live run that holds its writer "
+        "lock (a killed run's lock is taken over at once)",
     )
-    p.add_argument("--writer-wait-sec", type=float, default=600.0)
     p.add_argument("--skip-canonical", action="store_true")
     p.add_argument(
         "--compact",
@@ -96,7 +94,6 @@ def main(argv: list[str] | None = None) -> int:
         spark=spark,
         catalog=Catalog(args.out),
         n_buckets=args.n_buckets,
-        writer_lease_sec=args.writer_lease_sec,
         writer_wait_sec=args.writer_wait_sec,
     )
 

@@ -1,8 +1,7 @@
 """Round-5 directive 7: kill-resume through the real CLI, via the
 kill_resume_bench orchestrator (SIGKILL mid-stage, identical re-run,
 manifest-diff zero-recompute invariant, value-identical tables vs an
-uninterrupted control, stale-lease takeover under the round-5 token
-fence).
+uninterrupted control, takeover of the killed writer's lock file).
 
 This is the small-scale CI version (3 subprocess pipeline runs at 20k
 docs, ~2-3 min); the at-scale 4.8M-doc evidence is a dated BENCH section
@@ -34,8 +33,6 @@ def test_kill_resume_cli_small_scale(tmp_path):
             str(out_json),
             "--kill-stage",
             "s3_consensus",
-            "--lease",
-            "5",
             "--work-root",
             str(tmp_path / "work"),
         ],

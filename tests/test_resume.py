@@ -8,6 +8,7 @@ reproduce the identical final table.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -168,7 +169,6 @@ def test_concurrent_runners_one_winner_zero_duplicates(spark, tmp_path_factory):
     def run(tag: str):
         runner = Runner(
             spark=spark, catalog=Catalog(str(out)), n_buckets=N_BUCKETS,
-            writer_poll_sec=0.05,
         )
         started.wait()
         s0, _ = runner.stage(
@@ -210,33 +210,47 @@ def test_concurrent_runners_one_winner_zero_duplicates(spark, tmp_path_factory):
     assert not any(f.endswith(".writer.lock") for f in os.listdir(out))
 
 
-def test_dead_writer_lease_is_taken_over(spark, tmp_path_factory):
-    """A writer that died mid-run leaves its lock behind; a new Runner
-    breaks the stale lease after writer_lease_sec and completes the
-    remaining buckets instead of deadlocking."""
-    out = tmp_path_factory.mktemp("kg_stale_lease")
-    docs = synth.synth_docs(spark, 60, seed=9)
+def test_sigkilled_writer_lock_is_taken_over_at_once(spark, tmp_path_factory):
+    """A writer process SIGKILLed while holding a stage's lock leaves the
+    lock file behind, but the kernel drops its flock with the process: a
+    new Runner computes every bucket without waiting out writer_wait_sec."""
+    import pathlib
+    import subprocess
+    import sys
+
+    out = tmp_path_factory.mktemp("kg_killed_writer")
     cat = Catalog(str(out))
-    runner = Runner(
-        spark=spark, catalog=cat, n_buckets=N_BUCKETS,
-        writer_lease_sec=0.5, writer_wait_sec=30.0, writer_poll_sec=0.05,
-    )
-    fp = "stale:60:9"
-    # simulate the dead writer: its lock exists, no manifest progress
-    import hashlib
+    with subprocess.Popen(
+        [
+            sys.executable, "-c",
+            "import sys, time\n"
+            "from ner_spark.sources.catalog import Catalog\n"
+            "assert Catalog(sys.argv[1]).try_acquire_writer('s0_normalize')\n"
+            "print('held', flush=True)\n"
+            "time.sleep(600)\n",
+            str(out),
+        ],
+        cwd=str(pathlib.Path(__file__).resolve().parent.parent),
+        stdout=subprocess.PIPE,
+        text=True,
+    ) as child:
+        try:
+            assert child.stdout.readline().strip() == "held"
+            assert not cat.try_acquire_writer("s0_normalize")  # held across processes
+        finally:
+            child.kill()  # SIGKILL: no cleanup runs in the holder
+    assert os.path.exists(cat.writer_lock_path("s0_normalize"))  # left behind
 
-    stage_fp = hashlib.sha256(
-        "\x1f".join(["s0_normalize", fp, "", str(N_BUCKETS)]).encode()
-    ).hexdigest()[:16]
-    assert cat.try_acquire_writer("s0_normalize", stage_fp, lease_sec=0.5)
-    import time as _time
-
-    _time.sleep(0.6)  # let the lease expire
+    docs = synth.synth_docs(spark, 60, seed=9)
+    runner = Runner(spark=spark, catalog=cat, n_buckets=N_BUCKETS)
     s0, _ = runner.stage(
-        "s0_normalize", docs, normalize_docs, key="doc_id", input_fingerprint=fp
+        "s0_normalize", docs, normalize_docs, key="doc_id", input_fingerprint="killed:60:9"
     )
-    assert runner.metrics[0].computed_buckets == N_BUCKETS
+    m = runner.metrics[0]
+    assert m.computed_buckets == N_BUCKETS
+    assert m.wall_ms < runner.writer_wait_sec * 1000 / 10
     assert s0.count() == normalize_docs(docs).count()
+    assert not os.path.exists(cat.writer_lock_path("s0_normalize"))
 
 
 def test_torn_write_unmanifested_bucket_is_pruned_on_resume(spark, tmp_path_factory):
@@ -287,22 +301,15 @@ def test_torn_write_unmanifested_bucket_is_pruned_on_resume(spark, tmp_path_fact
 
 
 def test_stale_break_yields_exactly_one_owner(tmp_path_factory):
-    """Round-5 ADVICE (medium): breaking a stale lease must not admit two
-    writers. Many survivors of a dead writer race the break in the same
-    poll window; with a plain getmtime+remove, two could both remove
-    "the" stale lock and both acquire AND own. The tombstone-rename break
-    with post-rename token verify guarantees: at least one racer is
-    admitted (liveness), and exactly ONE holds on-disk ownership — the
-    predicate the Runner verifies synchronously before every write, so
-    only that one can write. Run several rounds to exercise the race."""
+    """Many survivors of a dead writer race for its leftover lock file in
+    the same instant: exactly one of them is admitted and owns the lock.
+    Run several rounds to exercise the race."""
     import threading
-    import time as _time
 
     for trial in range(5):
-        out = tmp_path_factory.mktemp(f"lease_break{trial}")
+        out = tmp_path_factory.mktemp(f"lock_takeover{trial}")
         dead = Catalog(str(out))
-        assert dead.try_acquire_writer("t", "fp", lease_sec=0.2)
-        _time.sleep(0.25)  # lease now stale
+        open(dead.writer_lock_path("t"), "w").close()  # a killed writer's file
 
         n = 8
         gate = threading.Barrier(n)
@@ -311,131 +318,118 @@ def test_stale_break_yields_exactly_one_owner(tmp_path_factory):
 
         def racer(i: int) -> None:
             gate.wait()
-            wins[i] = cats[i].try_acquire_writer("t", "fp", lease_sec=0.2)
+            wins[i] = cats[i].try_acquire_writer("t")
 
         ts = [threading.Thread(target=racer, args=(i,)) for i in range(n)]
         for t in ts:
             t.start()
         for t in ts:
-            t.join()
-        assert sum(wins) >= 1, wins  # the break is never orphaned
+            t.join(30)
+        assert not any(t.is_alive() for t in ts)
+        assert sum(wins) == 1, wins
         owners = [i for i in range(n) if cats[i].owns_writer("t")]
-        assert len(owners) == 1, (wins, owners)
-        assert wins[owners[0]]  # the owner is among the admitted
+        assert owners == [wins.index(True)], (wins, owners)
+        cats[owners[0]].release_writer("t")
+
+
+def test_acquire_release_cycling_never_overlaps_holders(tmp_path_factory):
+    """Release unlinks the lock file while still holding it; a racer that
+    opened the old file must not be admitted beside the holder of a fresh
+    one. 8 threads cycle acquire/release: at most one holder at any
+    instant, and the lock keeps changing hands."""
+    import sys
+    import threading
+    import time
+
+    out = tmp_path_factory.mktemp("lock_cycling")
+    n, cycles = 8, 500
+    gate = threading.Barrier(n)
+    count_lock = threading.Lock()
+    state = {"holders": 0, "max": 0, "acquired": 0}
+
+    def cycler() -> None:
+        cat = Catalog(str(out))
+        gate.wait()
+        for _ in range(cycles):
+            if not cat.try_acquire_writer("t"):
+                continue
+            with count_lock:
+                state["holders"] += 1
+                state["acquired"] += 1
+                state["max"] = max(state["max"], state["holders"])
+            time.sleep(0.0001)  # hold the lock across a thread switch
+            with count_lock:
+                state["holders"] -= 1
+            cat.release_writer("t")
+
+    ts = [threading.Thread(target=cycler) for _ in range(n)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # switch threads inside the fence's steps
+    try:
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in ts)
+    assert state["max"] == 1, state
+    assert state["acquired"] > n, state  # the lock changed hands
+    assert not os.path.exists(Catalog(str(out)).writer_lock_path("t"))
 
 
 def test_release_ignores_foreign_lock(tmp_path_factory):
-    """Round-5 ADVICE (medium): release verifies the owner token. Writer A
-    loses its lease (stall), writer B takes over; A's finally-block release
-    must NOT delete B's live lock (which would admit a third writer C)."""
-    import time as _time
-
-    out = tmp_path_factory.mktemp("lease_owner")
+    """release_writer on a catalog that does not hold the lock is a no-op:
+    it must not unlink the holder's file and so admit a third writer."""
+    out = tmp_path_factory.mktemp("lock_owner")
     a = Catalog(str(out))
     b = Catalog(str(out))
     c = Catalog(str(out))
-    assert a.try_acquire_writer("t", "fp", lease_sec=0.2)
-    _time.sleep(0.3)  # A stalls past its lease
-    assert b.try_acquire_writer("t", "fp", lease_sec=0.2)  # takeover
-    assert not a.owns_writer("t") and b.owns_writer("t")
-    assert not a.heartbeat_writer("t")  # A's heartbeat refuses to touch it
-    a.release_writer("t", "fp")  # A's finally-block fires
-    assert b.owns_writer("t")  # B's lock survived
-    assert not c.try_acquire_writer("t", "fp", lease_sec=60.0)  # C stays out
-    b.release_writer("t", "fp")
-    assert c.try_acquire_writer("t", "fp", lease_sec=60.0)
+    assert a.try_acquire_writer("t")
+    assert not b.try_acquire_writer("t")
+    assert a.owns_writer("t") and not b.owns_writer("t")
+    b.release_writer("t")  # a non-owner's finally-block fires
+    assert a.owns_writer("t")
+    assert os.path.exists(a.writer_lock_path("t"))
+    assert not c.try_acquire_writer("t")  # C stays out
+    a.release_writer("t")
+    assert c.try_acquire_writer("t")
+    c.release_writer("t")
 
 
-def test_lost_lease_discards_write_then_recovers_from_dead_usurper(spark, tmp_path_factory):
-    """A writer whose lease is broken and reissued mid-transform must NOT
-    write (round-5 ADVICE: the pre-write token verify gates the write);
-    it discards the attempt and re-enters acquire-or-wait. Here the
-    usurper dies immediately (never heartbeats), so the original breaks
-    the now-stale lock on its second attempt and completes — liveness and
-    safety together: exactly one manifest row set, correct output."""
-    import time as _time
-
-    out = tmp_path_factory.mktemp("lease_lost")
+def test_live_holder_times_out_and_writes_nothing(spark, tmp_path_factory):
+    """A live peer holds the stage's lock and never finishes: the Runner
+    must not write, must not take the lock, and must fail loudly after
+    writer_wait_sec."""
+    out = tmp_path_factory.mktemp("lock_live_holder")
     docs = synth.synth_docs(spark, 40, seed=3)
     cat = Catalog(str(out))
-    runner = Runner(
-        spark=spark, catalog=cat, n_buckets=N_BUCKETS,
-        writer_lease_sec=0.3, writer_wait_sec=10.0, writer_poll_sec=0.05,
-    )
-    thief = Catalog(str(out))
+    runner = Runner(spark=spark, catalog=cat, n_buckets=N_BUCKETS, writer_wait_sec=1.0)
+    holder = Catalog(str(out))
+    assert holder.try_acquire_writer("s0_normalize")
     calls = {"n": 0}
 
-    def stealing_normalize(df):
+    def counting_normalize(df):
         calls["n"] += 1
-        if calls["n"] == 1:
-            # simulate a takeover: the thief yanks our lock and issues its
-            # own while our transform still runs — then dies (no heartbeat)
-            import os
-
-            os.remove(cat.writer_lock_path("s0_normalize"))
-            assert thief.try_acquire_writer("s0_normalize", lease_sec=60.0)
-            _time.sleep(0.5)  # > one heartbeat interval: the loss is noticed
         return normalize_docs(df)
 
-    s0, _ = runner.stage(
-        "s0_normalize", docs, stealing_normalize, key="doc_id",
-        input_fingerprint="steal:40:3",
-    )
-    assert calls["n"] == 2  # attempt 1 discarded, attempt 2 recomputed
-    assert s0.count() == normalize_docs(docs).count()
-    seen = [(r["bucket"], r["fingerprint"]) for r in cat.manifest_rows("s0_normalize")]
-    assert len(seen) == len(set(seen)) == N_BUCKETS  # no duplicate writes
-
-
-def test_lost_lease_waits_for_live_new_owner_then_times_out(spark, tmp_path_factory):
-    """Same takeover, but the usurper stays LIVE (keeps its lease fresh)
-    and never finishes: the dispossessed writer must not write, must not
-    break the live lock, and must fail loudly after writer_wait_sec."""
-    import os
-    import threading
-    import time as _time
-
-    out = tmp_path_factory.mktemp("lease_lost_live")
-    docs = synth.synth_docs(spark, 40, seed=3)
-    cat = Catalog(str(out))
-    runner = Runner(
-        spark=spark, catalog=cat, n_buckets=N_BUCKETS,
-        writer_lease_sec=0.3, writer_wait_sec=2.0, writer_poll_sec=0.05,
-    )
-    thief = Catalog(str(out))
-    stop_beat = threading.Event()
-
-    def stealing_normalize(df):
-        os.remove(cat.writer_lock_path("s0_normalize"))
-        assert thief.try_acquire_writer("s0_normalize", lease_sec=60.0)
-
-        def beat():
-            while not stop_beat.wait(0.1):
-                thief.heartbeat_writer("s0_normalize")
-
-        threading.Thread(target=beat, daemon=True).start()
-        _time.sleep(0.5)
-        return normalize_docs(df)
-
-    try:
-        with pytest.raises(TimeoutError, match="still held"):
-            runner.stage(
-                "s0_normalize", docs, stealing_normalize, key="doc_id",
-                input_fingerprint="steal:40:3",
-            )
-    finally:
-        stop_beat.set()
+    with pytest.raises(TimeoutError, match="still held"):
+        runner.stage(
+            "s0_normalize", docs, counting_normalize, key="doc_id",
+            input_fingerprint="live:40:3",
+        )
+    assert calls["n"] == 0
     assert cat.manifest_rows("s0_normalize") == []  # nothing was written
-    assert thief.owns_writer("s0_normalize")  # thief's live lock untouched
+    assert holder.owns_writer("s0_normalize")  # the live lock is untouched
+    holder.release_writer("s0_normalize")
 
 
 def test_slow_live_writer_keeps_lease_via_heartbeat(spark, tmp_path_factory):
-    """A winner whose stage outlives writer_lease_sec must NOT lose its
-    lock to a waiting peer: the heartbeat refreshes the lease while the
-    transform runs. Lease 0.4s, transform pause 2s — without the
-    heartbeat the second Runner breaks the lease mid-write and both
-    compute (duplicate manifest rows); with it there is still exactly one
-    winner."""
+    """A winner whose transform runs for 2 s keeps its lock for the whole
+    stage: a peer that arrives mid-transform waits, then finds every
+    bucket manifested, so there is exactly one winner and no duplicate
+    manifest rows. (The name is from the lease fence this test first
+    covered; the kernel lock needs no heartbeat.)"""
     import threading
     import time as _time
 
@@ -445,7 +439,7 @@ def test_slow_live_writer_keeps_lease_via_heartbeat(spark, tmp_path_factory):
 
     def slow_normalize(df):
         entered.set()
-        _time.sleep(2.0)  # > 4 lease periods
+        _time.sleep(2.0)
         return normalize_docs(df)
 
     results: dict[str, object] = {}
@@ -453,7 +447,7 @@ def test_slow_live_writer_keeps_lease_via_heartbeat(spark, tmp_path_factory):
     def run(tag: str, delay: float):
         runner = Runner(
             spark=spark, catalog=Catalog(str(out)), n_buckets=N_BUCKETS,
-            writer_lease_sec=0.4, writer_wait_sec=60.0, writer_poll_sec=0.05,
+            writer_wait_sec=60.0,
         )
         if delay:
             entered.wait(10.0)
@@ -465,7 +459,7 @@ def test_slow_live_writer_keeps_lease_via_heartbeat(spark, tmp_path_factory):
         results[tag] = runner.metrics[0]
 
     t1 = threading.Thread(target=run, args=("a", 0.0))
-    t2 = threading.Thread(target=run, args=("b", 0.6))  # past the bare lease
+    t2 = threading.Thread(target=run, args=("b", 0.6))  # mid-transform
     t1.start(); t2.start(); t1.join(); t2.join()
 
     computed = sorted([results["a"].computed_buckets, results["b"].computed_buckets])

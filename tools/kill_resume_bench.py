@@ -1,24 +1,25 @@
-"""Kill-resume at scale (round-5 directive 7).
+"""Kill-resume at scale.
 
 Exercises the north rule's resume semantics at bench scale with the
-round-5 lease fence active: run the full KG pipeline over N synthetic
-docs, SIGKILL the process mid-stage, re-run the identical command, and
-verify
+writer lock active: run the full KG pipeline over N synthetic docs,
+SIGKILL the process mid-stage, re-run the identical command, and verify
 
 1. the resumed run recomputes ONLY what the killed run had not finished —
    per stage, ``computed_buckets(resumed) == n_buckets -
    manifest_rows_at_kill(stage)`` (zero recomputation of completed
    partitions, by manifest diff);
-2. the dead writer's lease is taken over (the killed process leaves its
-   lock behind; the successor breaks it after ``--writer-lease-sec`` via
-   the atomic tombstone rename) — measured as takeover wait;
+2. the dead writer's lock is taken over: the killed process leaves its
+   lock file behind, but the kernel dropped its ``flock`` — the wait until
+   that file can be locked is reported as ``takeover_wait_sec``;
 3. the final tables are value-identical to an uninterrupted control run
    into a separate directory (count + order-insensitive row-hash per
    table, via DuckDB).
 
+The pipeline sizes its session from the machine (``session.machine_size``).
+
 Usage:
     python tools/kill_resume_bench.py [n_docs] [out_json]
-        [--kill-stage s3_consensus] [--lease 45]
+        [--kill-stage s3_consensus]
 
 Writes one JSON report; exits nonzero on any failed invariant.
 """
@@ -26,6 +27,7 @@ Writes one JSON report; exits nonzero on any failed invariant.
 from __future__ import annotations
 
 import argparse
+import fcntl
 import json
 import os
 import shutil
@@ -60,7 +62,7 @@ def _manifest_buckets(out_dir: str) -> dict[str, int]:
     return got
 
 
-def _cmd(n_docs: int, out_dir: str, lease: float) -> list[str]:
+def _cmd(n_docs: int, out_dir: str) -> list[str]:
     return [
         sys.executable,
         "run_pipeline.py",
@@ -68,15 +70,26 @@ def _cmd(n_docs: int, out_dir: str, lease: float) -> list[str]:
         str(n_docs),
         "--out",
         out_dir,
-        "--master",
-        "local[32]",
         "--n-buckets",
         "32",
-        "--writer-lease-sec",
-        str(lease),
         "--writer-wait-sec",
         "600",
     ]
+
+
+def _takeover_wait(lock_path: str, limit: float = 600.0) -> float:
+    """Seconds until the killed writer's lock file can be locked. The file
+    is closed unlocked and left in place for the resumed run to take over."""
+    t0 = time.time()
+    with open(lock_path, "a") as f:
+        while True:
+            try:
+                fcntl.flock(f, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                return round(time.time() - t0, 3)
+            except BlockingIOError:
+                if time.time() - t0 > limit:
+                    raise
+                time.sleep(0.05)
 
 
 def _table_hash(out_dir: str, table: str) -> tuple[int, int]:
@@ -98,7 +111,6 @@ def main() -> int:
     ap.add_argument("n_docs", nargs="?", type=int, default=4_800_000)
     ap.add_argument("out_json", nargs="?", default="BENCH/kill_resume_r05.json")
     ap.add_argument("--kill-stage", default="s3_consensus")
-    ap.add_argument("--lease", type=float, default=45.0)
     ap.add_argument("--work-root", default="/dev/shm/kill_resume")
     args = ap.parse_args()
 
@@ -110,7 +122,6 @@ def main() -> int:
     report: dict = {
         "n_docs": args.n_docs,
         "kill_stage": args.kill_stage,
-        "lease_sec": args.lease,
         "ts": time.strftime("%Y-%m-%d %H:%M:%S"),
     }
 
@@ -118,7 +129,7 @@ def main() -> int:
     # fingerprint (i.e. it is mid-compute, prior stages complete)
     t0 = time.time()
     proc = subprocess.Popen(
-        _cmd(args.n_docs, victim_dir, args.lease),
+        _cmd(args.n_docs, victim_dir),
         cwd=REPO,
         stdout=subprocess.DEVNULL,
         stderr=subprocess.DEVNULL,
@@ -137,11 +148,14 @@ def main() -> int:
     report["manifest_buckets_at_kill"] = at_kill
     lock_left = [f for f in os.listdir(victim_dir) if f.endswith(".writer.lock")]
     report["stale_locks_left_by_kill"] = lock_left
+    report["takeover_wait_sec"] = max(
+        (_takeover_wait(os.path.join(victim_dir, f)) for f in lock_left), default=0.0
+    )
 
     # -- run 2: resume the identical command
     t1 = time.time()
     out = subprocess.run(
-        _cmd(args.n_docs, victim_dir, args.lease),
+        _cmd(args.n_docs, victim_dir),
         cwd=REPO,
         capture_output=True,
         text=True,
@@ -175,7 +189,7 @@ def main() -> int:
     # -- run 3: uninterrupted control
     t2 = time.time()
     out = subprocess.run(
-        _cmd(args.n_docs, control_dir, args.lease),
+        _cmd(args.n_docs, control_dir),
         cwd=REPO,
         capture_output=True,
         text=True,
