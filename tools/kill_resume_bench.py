@@ -38,6 +38,8 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+WRITER_WAIT_SEC = 600
+
 STAGES = [
     "s0_normalize",
     "s1_dedup",
@@ -73,13 +75,14 @@ def _cmd(n_docs: int, out_dir: str) -> list[str]:
         "--n-buckets",
         "32",
         "--writer-wait-sec",
-        "600",
+        str(WRITER_WAIT_SEC),
     ]
 
 
-def _takeover_wait(lock_path: str, limit: float = 600.0) -> float:
-    """Seconds until the killed writer's lock file can be locked. The file
-    is closed unlocked and left in place for the resumed run to take over."""
+def _takeover_wait(lock_path: str) -> float:
+    """Seconds until the killed writer's lock file can be locked, as the
+    resumed run's writer-wait bound allows. The file is closed unlocked and
+    left in place for the resumed run to take over."""
     t0 = time.time()
     with open(lock_path, "a") as f:
         while True:
@@ -87,8 +90,8 @@ def _takeover_wait(lock_path: str, limit: float = 600.0) -> float:
                 fcntl.flock(f, fcntl.LOCK_EX | fcntl.LOCK_NB)
                 return round(time.time() - t0, 3)
             except BlockingIOError:
-                if time.time() - t0 > limit:
-                    raise
+                if time.time() - t0 > WRITER_WAIT_SEC:
+                    raise TimeoutError(f"{lock_path} still locked") from None
                 time.sleep(0.05)
 
 
