@@ -3,8 +3,9 @@
 The reference's CasEN stage shells out to an external Unitex notebook and
 parses its XML back (reference: src/utils/casen_config.py:178-182, 226-314).
 Per the north_star, the external process is replaced by in-engine matchers:
-a broadcast gazetteer (alias dictionary) and a regex rule bank, run together
-in ONE pandas-UDF pass per document batch. Rule hits landing on the same
+a broadcast gazetteer (alias dictionary) and a regex rule bank, which the
+fused extractor (``combined.combined_mentions``) runs together in its one
+pandas-UDF pass per document batch. Rule hits landing on the same
 (surface, label, span) merge their rule ids into a sorted ``grfs`` array —
 the Spark form of the reference's ``grf_1..grf_n`` wide columns
 (reference: casen_config.py:295-304).
@@ -20,14 +21,7 @@ from __future__ import annotations
 import math
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from .base import MENTION_ARR, explode_mentions
-
-# per-worker compiled matcher cache, keyed by id of the broadcast payload
-_COMPILED: dict[int, tuple] = {}
 
 
 def _compile(gaz_rows: list[tuple], pattern_rows: list[tuple]):
@@ -94,38 +88,3 @@ def pattern_rows(patterns: DataFrame) -> tuple:
     rows.sort(key=lambda r: _asc(r[0]))
     return tuple(map(tuple, rows))
 
-
-def rule_mentions(
-    docs: DataFrame,
-    gazetteer: DataFrame,
-    patterns: DataFrame,
-    gaz_grf: dict[str, str] | None = None,
-    method: str = "casEN",
-) -> DataFrame:
-    """(doc_uid, text) -> MENTIONS rows for the rule system.
-
-    ``gazetteer``/``patterns`` are small dimension tables: collected once on
-    the driver and broadcast to Python workers via the UDF closure (the same
-    broadcast-small-dim pattern as SURVEY.md §2 A2).
-    """
-    if gaz_grf is None:
-        from ..synth import GAZ_GRF as gaz_grf  # default rule-id map
-
-    payload = (
-        gazetteer_rows(gazetteer),
-        pattern_rows(patterns),
-        tuple(sorted(gaz_grf.items())),
-    )
-
-    @F.pandas_udf(MENTION_ARR)
-    def extract(texts: pd.Series) -> pd.Series:
-        key = hash(payload)
-        if key not in _COMPILED:
-            _COMPILED[key] = _compile(list(payload[0]), list(payload[1]))
-        gaz_re, by_surface, pats = _COMPILED[key]
-        grf_map = dict(payload[2])
-        return texts.map(
-            lambda t: _scan_doc(t, gaz_re, by_surface, pats, grf_map) if t else []
-        )
-
-    return explode_mentions(docs, extract(F.col("text")), method)

@@ -1,15 +1,16 @@
-"""Model-based extractors ("spaCy"/"stanza" analogues).
+"""Model-based taggers ("spaCy"/"stanza" analogues) for the fused extractor.
 
 The reference wraps spaCy ``fr_core_news_sm`` (reference:
 src/utils/spacy_config.py:136-167, driver-side iterrows) and Stanza
 (reference: src/utils/stanza_config.py:101-166, one giant concat string and a
-linear offset re-attribution scan). Here each model is an Arrow-batched
-pandas UDF; with a real model installed the batch would go through
-``nlp.pipe`` loaded lazily once per Python worker.
+linear offset re-attribution scan). Here each model scans whole Arrow
+batches inside ``combined.combined_mentions``: when the driver probe finds
+the model, each batch goes through one ``nlp.pipe``/``bulk_process`` call on
+a model loaded lazily once per Python worker.
 
-This container has neither model, so behind an import-try the UDF falls back
-to a *deterministic stub*: it finds the same gazetteer surface forms a model
-would recognize but — keyed by a stable crc32 of (doc_uid, span, salt) —
+Without the model (an import-try fails) the batch falls back to a
+*deterministic stub*: it finds the same gazetteer surface forms a model
+would recognize but — keyed by a stable md5 of (doc_uid, span, salt) —
 skips ~20% of them and relabels ~10%/5%. That is exactly the phenomenon mix
 (1/2/3-way agreement, conflicting labels) the consensus and priority-vote
 stages exist to resolve, and it is reproducible bit-for-bit at any
@@ -19,17 +20,8 @@ parallelism, which the correctness oracle and the scaling bench both need.
 from __future__ import annotations
 
 import hashlib
-import re
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from .base import MENTION_ARR, explode_mentions
-from .casen import gazetteer_rows
 
 _ROTATE = {"PER": "LOC", "LOC": "ORG", "ORG": "PER"}
-_COMPILED: dict[int, tuple] = {}
 
 
 def _crc(*parts) -> int:
@@ -70,7 +62,8 @@ def _have_spacy(model: str = _SPACY_MODEL) -> bool:
     """Driver-side probe: True iff spaCy AND the model load here.
 
     (Round 1 returned False unconditionally — dead code; now installing
-    ``fr_core_news_sm`` activates the real ``nlp.pipe`` branch below.)
+    ``fr_core_news_sm`` activates the real ``nlp.pipe`` branch below on
+    every entry point.)
     """
     if model not in _PROBE:
         _PROBE[model] = _load_nlp(model) is not None
@@ -168,54 +161,8 @@ def _stub_scan(doc_uid: str, text: str, gaz_re, by_surface, skip_mod: int, flip_
     return out
 
 
-def model_mentions(
-    docs: DataFrame,
-    gazetteer: DataFrame,
-    method: str = "spaCy",
-    skip_mod: int = 4,
-    flip_mod: int = 20,
-    use_model: bool | None = None,
-) -> DataFrame:
-    """(doc_uid, text) -> MENTIONS rows for one model system.
-
-    ``use_model=None`` probes the driver once for the real model behind
-    ``method`` — spaCy ``fr_core_news_sm`` for "spaCy", the Stanza fr
-    pipeline for "stanza" — and routes the Arrow batches through it when
-    available (each Python worker loads the model lazily, once); otherwise
-    the deterministic stub runs. ``method`` doubles as the determinism
-    salt, so "spaCy" and "stanza" stubs disagree with each other and with
-    the rule system in a controlled, seeded way.
-    """
-    if use_model is None:
-        use_model = _have_stanza() if method == "stanza" else _have_spacy()
-    gaz_rows = gazetteer_rows(gazetteer)
-
-    @F.pandas_udf(MENTION_ARR)
-    def extract(doc_uids: pd.Series, texts: pd.Series) -> pd.Series:
-        if use_model:  # pragma: no cover - needs a model in the container
-            nlp = _load_stanza() if method == "stanza" else _load_nlp()
-            if nlp is not None:
-                scan = _stanza_scan_batch if method == "stanza" else _spacy_scan_batch
-                return pd.Series(scan(doc_uids, texts, nlp))
-        key = hash(gaz_rows)
-        if key not in _COMPILED:
-            by_surface: dict[str, str] = {}
-            for alias, label in gaz_rows:
-                by_surface.setdefault(alias, label)
-            surfaces = sorted(by_surface, key=lambda a: (-len(a), a))
-            if surfaces:
-                rx = re.compile(
-                    r"\b(?:" + "|".join(re.escape(a) for a in surfaces) + r")\b"
-                )
-            else:
-                rx = re.compile(r"(?!x)x")  # empty gazetteer matches nothing
-            _COMPILED[key] = (rx, by_surface)
-        rx, by_surface = _COMPILED[key]
-        return pd.Series(
-            [
-                _stub_scan(u, t, rx, by_surface, skip_mod, flip_mod, method) if t else []
-                for u, t in zip(doc_uids, texts)
-            ]
-        )
-
-    return explode_mentions(docs, extract(F.col("doc_uid"), F.col("text")), method)
+#: model source -> (driver probe, per-worker loader, real batch scan)
+MODELS = {
+    "spaCy": (_have_spacy, _load_nlp, _spacy_scan_batch),
+    "stanza": (_have_stanza, _load_stanza, _stanza_scan_batch),
+}

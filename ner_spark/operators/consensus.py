@@ -14,7 +14,7 @@ Everything here is pure column expressions + window functions — whole-stage
 codegen, no UDFs (the reference's own history vectorized two of these ops,
 SURVEY.md §4 O4; we go the rest of the way).
 
-Shuffle plan at scale: ``fuse`` repartitions the unioned mentions by
+Shuffle plan at scale: ``fuse_ranked`` repartitions the unioned mentions by
 ``doc_uid`` ONCE; the aggregation keys and every window partition key are
 supersets of ``doc_uid``, so the aggregate, the priority vote, and any
 downstream per-doc operator all reuse that single hash partitioning with no
@@ -57,35 +57,12 @@ def _first_by_rank(col: Column, rank: Column) -> Column:
     )["v"]
 
 
-def fuse(
-    mention_dfs: dict[str, DataFrame],
-    source_order: tuple[str, ...] = SOURCE_ORDER,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """C1: union + groupBy fusion of per-source mention tables.
-
-    ``mention_dfs`` maps source name -> MENTIONS-schema DataFrame whose
-    ``method`` column equals that source name.
-    """
-    ranked = []
-    for rank, name in enumerate(source_order):
-        if name not in mention_dfs:
-            continue
-        ranked.append(
-            mention_dfs[name]
-            .select("doc_uid", "NE", "label", "start", "end", "method", "grfs", "context")
-            .withColumn("_rank", F.lit(rank))
-        )
-    return fuse_ranked(
-        reduce(DataFrame.unionByName, ranked), num_partitions, n_ranks=len(source_order)
-    )
-
-
 def fuse_ranked(
     unioned: DataFrame, num_partitions: int | None = None, n_ranks: int = 3
 ) -> DataFrame:
-    """C1 on a single pre-ranked mentions table (``_rank`` = fold position
-    in [0, n_ranks), e.g. from the fused one-pass extractor). One
+    """C1: union + groupBy fusion of one ranked mentions table (``_rank`` =
+    fold position in [0, n_ranks): the fused one-pass extractor's output,
+    plus any other source unioned on under its own rank). One
     repartition on doc_uid — the aggregation and every downstream per-doc
     window reuse it.
 

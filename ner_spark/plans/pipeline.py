@@ -7,13 +7,12 @@ of the same stages lives in ner_spark.plans.runner.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..extractors.casen import rule_mentions
 from ..extractors.combined import combined_mentions
-from ..extractors.model_stub import model_mentions
 from ..operators import consensus as C
 from ..operators import relations as R
 from ..operators.clean import clean
@@ -36,37 +35,29 @@ class KGPipeline:
     def clean_docs(self, docs: DataFrame) -> DataFrame:
         return clean(docs)
 
-    def mentions_by_source(self, clean_docs: DataFrame) -> dict[str, DataFrame]:
-        """Per-source mention tables (three separate Arrow passes) — kept for
-        operator-level tests; the pipeline hot path uses the fused one-pass
-        extractor below."""
-        return {
-            "casEN": rule_mentions(clean_docs, self.gazetteer, self.patterns),
-            "spaCy": model_mentions(clean_docs, self.gazetteer, method="spaCy"),
-            "stanza": model_mentions(clean_docs, self.gazetteer, method="stanza"),
-            **self.extra_sources,
-        }
-
     def ranked_mentions(self, clean_docs: DataFrame) -> DataFrame:
         return combined_mentions(clean_docs, self.gazetteer, self.patterns)
 
     def consensus(self, clean_docs: DataFrame) -> DataFrame:
+        # extra sources extend the fold order after the built-ins (rank =
+        # registration order); an extra named like a built-in takes over
+        # that built-in's rank and replaces its rows
+        order = C.SOURCE_ORDER + tuple(
+            k for k in self.extra_sources if k not in C.SOURCE_ORDER
+        )
+        ranked = self.ranked_mentions(clean_docs)
         if self.extra_sources:
-            # extend the fold order with the extra sources (registration
-            # order = rank order after the built-ins): fuse() iterates its
-            # source_order, so extras absent from it would silently never
-            # enter the union
-            by_source = self.mentions_by_source(clean_docs)
-            order = C.SOURCE_ORDER + tuple(
-                k for k in self.extra_sources if k not in C.SOURCE_ORDER
-            )
-            fused = C.fuse(
-                by_source, source_order=order, num_partitions=self.num_partitions
-            )
-        else:
-            fused = C.fuse_ranked(
-                self.ranked_mentions(clean_docs), num_partitions=self.num_partitions
-            )
+            extras = [
+                df.select(*C.KEYS, "method", "grfs", "context").withColumn(
+                    "_rank", F.lit(order.index(name))
+                )
+                for name, df in self.extra_sources.items()
+            ]
+            kept = ranked.filter(~F.col("method").isin(list(self.extra_sources)))
+            ranked = reduce(DataFrame.unionByName, extras, kept)
+        fused = C.fuse_ranked(
+            ranked, num_partitions=self.num_partitions, n_ranks=len(order)
+        )
         voted = C.priority_vote(fused, self.labels_priority)
         promoted = C.promote_trusted(voted, self.trusted_combos)
         with_ids = promoted.join(

@@ -44,10 +44,8 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
 
     from ner_spark import synth
-    from ner_spark.operators import consensus as C
     from ner_spark.operators.clean import dedup_docs, normalize_docs
     from ner_spark.operators.canonicalize import canonical_entities
-    from ner_spark.operators.corrections import apply_corrections
     from ner_spark.operators.linking import link_mentions
     from ner_spark.operators.relations import extract_triples
     from ner_spark.plans.pipeline import KGPipeline
@@ -107,12 +105,7 @@ def main(argv: list[str] | None = None) -> int:
     def consensus_transform(clean_part):
         clean_part = clean_part.cache()
         stage_caches.append(clean_part)
-        fused = C.fuse_ranked(pipe.ranked_mentions(clean_part))
-        voted = C.priority_vote(fused, pipe.labels_priority)
-        promoted = C.promote_trusted(voted, pipe.trusted_combos)
-        return promoted.join(
-            clean_part.select("doc_uid", "files_id"), "doc_uid", "left"
-        )
+        return pipe.consensus(clean_part)
 
     s3, fp3 = runner.stage("s3_consensus", s1, consensus_transform, key="doc_uid",
                            input_fingerprint=fp1)

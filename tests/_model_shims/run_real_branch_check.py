@@ -9,7 +9,8 @@ oracle-pinned to the stub.
 Asserts the stub-vs-real contract the round-5 directive names:
 
 1. real branch actually routes (probes True) through ``nlp.pipe`` /
-   ``bulk_process`` per Arrow batch;
+   ``bulk_process`` per Arrow batch — on the default
+   ``combined_mentions`` call too, the one every entry point makes;
 2. schema parity: real and stub outputs have identical schemas;
 3. row accounting: the real branch emits mentions for exactly the input
    docs that contain entities (empty text rows contribute zero, no doc is
@@ -38,10 +39,12 @@ def main() -> int:
 
     from ner_spark import synth
     from ner_spark.extractors import model_stub as M
+    from ner_spark.extractors.combined import combined_mentions
     from ner_spark.session import get_spark
 
     spark = get_spark("real_model_check", master="local[2]", shuffle_partitions=2)
     gaz = synth.synth_gazetteer(spark)
+    pat = synth.synth_patterns(spark)
 
     texts = {
         "d1": "Marie Curie visite Paris avec Victor Hugo.",
@@ -54,10 +57,20 @@ def main() -> int:
     # 1. the probes see the shims -> use_model=None routes to the real branch
     assert M._have_spacy() and M._have_stanza(), "shim probes did not flip"
 
+    # ... on the default call every entry point makes: "La Sorbonne" is
+    # not in the synth gazetteer (it holds "Sorbonne"), so only the shim
+    # model can emit this spaCy row
+    default = {
+        (r["doc_uid"], r["NE"], r["label"])
+        for r in combined_mentions(docs, gaz, pat).collect()
+        if r["method"] == "spaCy"
+    }
+    assert ("d2", "La Sorbonne", "ORG") in default, sorted(default)
+
     out = {}
     for method in ("spaCy", "stanza"):
-        real = M.model_mentions(docs, gaz, method=method)
-        stub = M.model_mentions(docs, gaz, method=method, use_model=False)
+        real = combined_mentions(docs, gaz, pat, source_order=(method,))
+        stub = combined_mentions(docs, gaz, pat, source_order=(method,), use_model=False)
         # 2. schema parity between the branches
         assert real.schema == stub.schema, (method, real.schema, stub.schema)
         rows = real.collect()

@@ -126,23 +126,29 @@ def test_strip_tags(spark):
     assert r["s"] == "a b c"
 
 
-def test_model_extractor_stub_and_real_branch(spark, gazetteer):
+def test_model_extractor_stub_and_real_branch(spark, gazetteer, patterns):
     """use_model=False pins the deterministic stub. The real nlp.pipe
     branch is exercised every run via the API shims in
     tests/test_real_model_branch.py (round-5 directive 6 — no more
     env-forced skip); if a native fr_core_news_sm is ever installed, the
     tail below additionally runs against it."""
     from ner_spark.extractors import model_stub as M
+    from ner_spark.extractors.combined import combined_mentions
 
     docs = spark.createDataFrame(
         [("d1", "Marie Curie visite Paris avec Victor Hugo.")], ["doc_uid", "text"]
     )
-    stub_rows = M.model_mentions(docs, gazetteer, use_model=False).collect()
+    spacy = ("spaCy",)
+    stub_rows = combined_mentions(
+        docs, gazetteer, patterns, source_order=spacy, use_model=False
+    ).collect()
     assert all(r["method"] == "spaCy" for r in stub_rows)
 
     assert isinstance(M._have_spacy(), bool)
     if M._have_spacy():  # pragma: no cover - only with a native model
-        real_rows = M.model_mentions(docs, gazetteer, use_model=True).collect()
+        real_rows = combined_mentions(
+            docs, gazetteer, patterns, source_order=spacy, use_model=True
+        ).collect()
         assert any(r["NE"] == "Marie Curie" for r in real_rows)
 
 
@@ -167,29 +173,36 @@ def test_excel_shim_roundtrip(spark, tmp_path):
         ("Marie Curie", "PER", "doc00000001", "personne")
     ]
 
-def test_stanza_branch_probe_and_stub(spark, gazetteer):
-    """method="stanza" routes through the Stanza probe (not the spaCy one);
+def test_stanza_branch_probe_and_stub(spark, gazetteer, patterns):
+    """source "stanza" routes through the Stanza probe (not the spaCy one);
     with the model absent the deterministic stub runs, and the stub output
     differs from the spaCy-salted stub on the same doc. The real
     bulk_process branch is exercised every run via the API shims in
     tests/test_real_model_branch.py; the tail below additionally runs
     against a native Stanza fr pipeline if one is ever installed."""
     from ner_spark.extractors import model_stub as M
+    from ner_spark.extractors.combined import combined_mentions
 
     docs = spark.createDataFrame(
         [("d1", "Marie Curie visite Paris avec Victor Hugo et Marie Curie.")],
         ["doc_uid", "text"],
     )
-    stanza_rows = M.model_mentions(docs, gazetteer, method="stanza", use_model=False).collect()
+
+    def mentions(method, use_model):
+        return combined_mentions(
+            docs, gazetteer, patterns, source_order=(method,), use_model=use_model
+        ).collect()
+
+    stanza_rows = mentions("stanza", False)
     assert all(r["method"] == "stanza" for r in stanza_rows)
-    spacy_rows = M.model_mentions(docs, gazetteer, method="spaCy", use_model=False).collect()
+    spacy_rows = mentions("spaCy", False)
     key = lambda rows: sorted((r["NE"], r["label"], r["start"]) for r in rows)  # noqa: E731
     # different salts => different skip/flip decisions at equal spans
     assert key(stanza_rows) != key(spacy_rows)
 
     assert isinstance(M._have_stanza(), bool)
     if M._have_stanza():  # pragma: no cover - only with a native model
-        real_rows = M.model_mentions(docs, gazetteer, method="stanza", use_model=True).collect()
+        real_rows = mentions("stanza", True)
         assert any(r["NE"] == "Marie Curie" for r in real_rows)
 
 
@@ -266,7 +279,8 @@ def test_correction_dedup_survivor_is_a_whole_row(spark):
 
 def test_pipeline_extra_sources_enter_consensus(spark, docs, gazetteer, patterns, combos):
     """Mentions from extra_sources must flow into the consensus fold (a
-    fold order missing the extra keys silently dropped them)."""
+    fold order missing the extra keys silently dropped them), and an extra
+    that shares a built-in's name replaces that built-in."""
     from pyspark.sql import functions as F
 
     from ner_spark.operators.clean import clean
@@ -298,20 +312,34 @@ def test_pipeline_extra_sources_enter_consensus(spark, docs, gazetteer, patterns
     }
     assert any("myNER" in m for m in methods), methods
 
+    # an extra named like a built-in replaces that built-in's rows
+    override = KGPipeline(
+        gazetteer=gazetteer,
+        patterns=patterns,
+        trusted_combos=combos,
+        extra_sources={"spaCy": extra.withColumn("method", F.lit("spaCy"))},
+    )
+    rows = override.consensus(cd).select("NE", "method").collect()
+    spacy_surfaces = {r["NE"] for r in rows if "spaCy" in r["method"].split("_")}
+    assert spacy_surfaces == {"EXTRA_SURFACE"}, spacy_surfaces
+    builtin = {r["NE"] for r in base.consensus(cd).select("NE", "method").collect()
+               if "spaCy" in r["method"].split("_")}
+    assert builtin and "EXTRA_SURFACE" not in builtin
+
 
 def test_empty_gazetteer_extracts_nothing_instead_of_crashing(spark, docs, patterns):
     """An empty gazetteer used to compile to r'\\b(?:)\\b' (zero-width match
     at every word boundary) and KeyError inside the executor UDF; it must
     simply produce zero gazetteer mentions."""
-    from ner_spark.extractors.casen import rule_mentions
-    from ner_spark.extractors.model_stub import model_mentions
+    from ner_spark.extractors.combined import combined_mentions
     from ner_spark.operators.clean import clean
 
     cd = clean(docs)
     empty_gaz = spark.createDataFrame(
         [], "alias string, label string, grf string, weight double"
     )
-    rm = rule_mentions(cd, empty_gaz, patterns)
+    rm = combined_mentions(cd, empty_gaz, patterns, source_order=("casEN",))
     # pattern mentions may still fire; no gazetteer-sourced rows, no crash
     assert rm.filter(rm.method == "casEN").count() >= 0
-    assert model_mentions(cd, empty_gaz, method="spaCy").count() == 0
+    spacy = combined_mentions(cd, empty_gaz, patterns, source_order=("spaCy",))
+    assert spacy.count() == 0

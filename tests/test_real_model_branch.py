@@ -1,19 +1,21 @@
 """Round-5 directive 6: execute the REAL model branches in CI.
 
-The spaCy/Stanza real paths (``_spacy_scan_batch`` / ``_stanza_scan_batch``
-in ner_spark/extractors/model_stub.py — per-worker lazy load, ``nlp.pipe``/
-``bulk_process`` per Arrow batch; reference: src/utils/spacy_config.py:
-136-167, stanza_config.py:101-166) were the only code in the repo whose
-behavior had never been observed: this container has no spaCy/Stanza
-wheels, so the branch tests skipped env-forced in rounds 1-4.
+There is one extraction pass, ``combined_mentions``
+(ner_spark/extractors/combined.py), and it uses a real spaCy/Stanza model
+whenever the driver probe finds one (``_spacy_scan_batch`` /
+``_stanza_scan_batch`` in ner_spark/extractors/model_stub.py — per-worker
+lazy load, ``nlp.pipe``/``bulk_process`` per Arrow batch; reference:
+src/utils/spacy_config.py:136-167, stanza_config.py:101-166). Models are
+absent here (no spaCy/Stanza wheels), so the real branch is run through
+deterministic API shims (tests/_model_shims/{spacy,stanza}).
 
-This test vendors deterministic API shims (tests/_model_shims/{spacy,
-stanza}) and runs the contract check in a SUBPROCESS whose PYTHONPATH puts
-the shims first. Isolation is the point: importable-as-``spacy`` code on
-the MAIN session's path would flip the driver probe and reroute the
-flagship pipeline off its oracle-pinned stub, so the shims must never
-leak onto this process's path. The subprocess asserts the stub-vs-real
-contract (probe routing, schema parity, row accounting, row-relative
+The contract check runs in a SUBPROCESS whose PYTHONPATH puts the shims
+first. Isolation is the point: importable-as-``spacy`` code on the MAIN
+session's path would flip the driver probe and route every entry point —
+the pipeline, the flagship queries, the streaming ingest — off the
+oracle-pinned stub, so the shims must never leak onto this process's
+path. The subprocess asserts the stub-vs-real contract (default routing
+reaches the real model, schema parity, row accounting, row-relative
 offsets, lazy-singleton per-process loads); see
 tests/_model_shims/run_real_branch_check.py for the assertions.
 """

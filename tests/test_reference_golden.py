@@ -28,7 +28,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ner_spark.operators.consensus import fuse
+from ner_spark.operators.consensus import fuse_ranked
 from ner_spark.sources.excel import read_xlsx_records
 
 RESSOURCES = "/root/reference/src/Ressources"
@@ -84,10 +84,11 @@ def test_consensus_round_trip_vs_reference_golden(spark, date):
         MENTION_SCHEMA,
     )
 
-    fused = fuse(
-        {"spaCy": spacy_df, "casEN": casen_df},
-        source_order=("spaCy", "casEN"),
-    ).withColumn(
+    # fold order spaCy, casEN: each input tagged with its rank
+    ranked = spacy_df.withColumn("_rank", F.lit(0)).unionByName(
+        casen_df.withColumn("_rank", F.lit(1))
+    )
+    fused = fuse_ranked(ranked, n_ranks=2).withColumn(
         "method",
         F.when(F.col("method") == "spaCy_casEN", "intersection")
         .when(F.col("method") == "spaCy", "spacy")
