@@ -8,9 +8,10 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
      "kg_docs_per_sec": ..., "n_bench_docs": ...}
 
 Each query is forced end-to-end with a noop-format write (full execution,
-no driver collect). The KG pipeline throughput number runs the fused
-extract->consensus->triples chain over BENCH_DOCS synthetic interleaved
-docs (deterministic generator; same rows at any parallelism). Cores and
+no driver collect). The KG pipeline throughput number runs
+KGPipeline.run (clean -> extract -> consensus -> triples) over BENCH_DOCS
+synthetic interleaved docs (deterministic generator; same rows at any
+parallelism), forcing its triples with a noop write. Cores and
 driver heap default to this machine's (ner_spark.session.machine_size).
 """
 
@@ -51,9 +52,6 @@ def main() -> int:
 
     from ner_spark import queries as Qmod
     from ner_spark import synth
-    from ner_spark.operators import consensus as C
-    from ner_spark.operators.clean import clean
-    from ner_spark.operators.relations import extract_triples
     from ner_spark.plans.pipeline import KGPipeline
     from ner_spark.session import get_spark, machine_size
 
@@ -101,18 +99,9 @@ def main() -> int:
     docs = synth.synth_docs(spark, n_bench_docs, seed=42)
     def run_pipe() -> float:
         t0 = time.time()
-        cd = clean(docs).cache()
-        fused = C.fuse_ranked(pipe.ranked_mentions(cd))
-        voted = C.promote_trusted(C.priority_vote(fused), combos).cache()
-        # populate the caches eagerly: extract_triples fans out into three
-        # consumers of `voted`; against a cold cache each branch recomputes
-        # the whole extraction chain concurrently (measured 3x the chain
-        # cost; eager also measured faster on interleaved repeats)
-        voted.count()
-        _force(extract_triples(voted, cd))
+        _force(pipe.run(docs)["triples"])
         sec = time.time() - t0
-        cd.unpersist()
-        voted.unpersist()
+        pipe.unpersist()
         return sec
 
     # first run pays per-stage JIT + codegen + Python-worker module imports

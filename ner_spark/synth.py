@@ -3,8 +3,8 @@
 The document generator is *distributed and pure-column*: every random choice
 is ``xxhash64(content_key, salt) mod n``, so the corpus is a pure function of
 ``(seed, n_docs)`` regardless of parallelism — the same rows come out of
-``local[8]`` and ``local[32]``, which the scaling bench requires. No Python
-runs per row.
+``local[1]`` and ``local[4]``, so runs at two core counts compare like for
+like. No Python runs per row.
 
 Controlled phenomena (mirroring the reference's data, SURVEY.md §1):
 - ~20% exact-duplicate documents (``content_key = id*4 div 5``) to exercise

@@ -14,7 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from ner_spark import synth
-from ner_spark.operators import consensus as C
 from ner_spark.operators.clean import dedup_docs, normalize_docs
 from ner_spark.plans.pipeline import KGPipeline
 from ner_spark.plans.runner import Runner
@@ -36,11 +35,7 @@ def _build(spark, out_dir):
     s1, fp1 = runner.stage("s1_dedup", s0, dedup_docs, key="text",
                            input_fingerprint=fp0)
 
-    def consensus_transform(clean_part):
-        fused = C.fuse_ranked(pipe.ranked_mentions(clean_part))
-        return C.promote_trusted(C.priority_vote(fused), combos)
-
-    s3, fp3 = runner.stage("s3_consensus", s1, consensus_transform,
+    s3, fp3 = runner.stage("s3_consensus", s1, pipe.consensus,
                            key="doc_uid", input_fingerprint=fp1)
     return runner, s3
 

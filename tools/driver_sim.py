@@ -1,6 +1,8 @@
 """Simulate the driver's verify: entry() smoke + queries() vs oracle_sql().
 
 Usage: python tools/driver_sim.py [sf_dir] [only_query1,only_query2,...]
+A name in the subset list that is not a registry query exits 2 before any
+Spark session starts. The session is sized by ner_spark.session.machine_size.
 Mirrors the driver: registers the parquet tables as DuckDB views, runs each
 Spark query and its oracle SQL, compares row count, column names, and an
 order-insensitive value hash (columns sorted by name, rows sorted).
@@ -38,7 +40,13 @@ def main() -> int:
     import __spark_entry__ as E
     from ner_spark.session import get_spark
 
-    spark = get_spark("driver_sim", master="local[8]", shuffle_partitions=8)
+    qs = E.queries()
+    unknown = sorted(only - qs.keys()) if only is not None else []
+    if unknown:
+        print(f"unknown queries: {','.join(unknown)}", file=sys.stderr)
+        return 2
+
+    spark = get_spark("driver_sim")
 
     if only is None:
         print("== entry() smoke (sf0.001)")
@@ -58,7 +66,7 @@ def main() -> int:
 
     register_ivf_oracle(sf_dir)
 
-    qs, oracles = E.queries(), E.oracle_sql()
+    oracles = E.oracle_sql()
     n_pass = n_fail = n_rowsonly = 0
     for name, fn in qs.items():
         if only is not None and name not in only:

@@ -11,9 +11,9 @@ deterministic synthetic corpus (synth.synth_docs, the bench generator):
 
 - pandas side: single process, single thread — the reference's execution
   model (its pipeline is a sequence of per-DataFrame pandas calls);
-- engine side: the fused clean -> extract -> consensus -> vote -> promote
-  -> triples chain (identical to bench.py's kg_pipeline_synth) at
-  local[CPUS], forced end-to-end with a noop write.
+- engine side: ``KGPipeline.run`` (clean -> extract -> consensus -> vote
+  -> promote -> triples, the chain bench.py's kg_pipeline_synth times) at
+  local[CPUS], forced end-to-end by counting the triples.
 
 Timers exclude corpus generation/transfer on both sides (the pandas input
 is fully materialized in memory before its clock starts; the engine's
@@ -40,9 +40,6 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from ner_spark import synth
-    from ner_spark.operators import consensus as C
-    from ner_spark.operators.clean import clean
-    from ner_spark.operators.relations import extract_triples
     from ner_spark.plans.pipeline import KGPipeline
     from ner_spark.session import get_spark
     from oracle import pandas_oracle as O
@@ -74,20 +71,14 @@ def main() -> int:
     n_triples_pandas = len(out["triples"])
     pandas_sec = time.time() - t0
 
-    # ---- engine (same chain as bench.py's kg_pipeline_synth) ----
+    # ---- engine (KGPipeline.run, as bench.py's kg_pipeline_synth) ----
     pipe = KGPipeline(gazetteer=gaz, patterns=pat, trusted_combos=combos)
 
     def run_engine() -> tuple[float, int]:
         t0 = time.time()
-        cd = clean(docs).cache()
-        fused = C.fuse_ranked(pipe.ranked_mentions(cd))
-        voted = C.promote_trusted(C.priority_vote(fused), combos).cache()
-        voted.count()
-        tri = extract_triples(voted, cd)
-        n = tri.count()
+        n = pipe.run(docs)["triples"].count()
         sec = time.time() - t0
-        cd.unpersist()
-        voted.unpersist()
+        pipe.unpersist()
         return sec, n
 
     engine_sec, n_triples_engine = run_engine()  # cold: JIT + codegen + workers
