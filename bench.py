@@ -78,6 +78,33 @@ def main() -> int:
         "overwrite"
     ).save()
 
+    # KG pipeline throughput over synthetic interleaved docs
+    gaz = synth.synth_gazetteer(spark)
+    pat = synth.synth_patterns(spark)
+    combos = [c["slots"] for c in synth.TRUSTED_COMBOS]
+    pipe = KGPipeline(gazetteer=gaz, patterns=pat, trusted_combos=combos)
+    docs = synth.synth_docs(spark, n_bench_docs, seed=42)
+
+    def run_pipe() -> float:
+        t0 = time.time()
+        _force(pipe.run(docs)["triples"])
+        sec = time.time() - t0
+        pipe.unpersist()
+        return sec
+
+    # the KG passes run BEFORE the registry loop, whose flagship queries
+    # compile the same extraction/consensus/triples chain: the first run
+    # is cold (it pays that chain's JIT, codegen and Python-worker module
+    # imports, fixed costs that vanish on a long-running cluster app); the
+    # second, same-JVM run is the steady state, so the cold/warm split is
+    # that one-time cost. A probe stamp BETWEEN the two runs makes a
+    # mid-measurement throttle phase flip attributable: warm < cold with
+    # probe_mid far below probe_before is the hypervisor, not the code.
+    kg_sec = run_pipe()
+    probe_mid = _probe_gbps()
+    kg_sec_warm = run_pipe()
+    timings["kg_pipeline_synth"] = round(kg_sec, 3)
+
     # registry queries (oracle-checked operator set; includes the flagship
     # KG chain, registered with its SQL oracle in queries_flagship)
     from ner_spark.operators.scratch import release_scratch
@@ -90,30 +117,6 @@ def main() -> int:
         # so 184 queries don't accumulate pinned storage; the flagship
         # stage memo intentionally does not register and stays cached
         release_scratch()
-
-    # KG pipeline throughput over synthetic interleaved docs
-    gaz = synth.synth_gazetteer(spark)
-    pat = synth.synth_patterns(spark)
-    combos = [c["slots"] for c in synth.TRUSTED_COMBOS]
-    pipe = KGPipeline(gazetteer=gaz, patterns=pat, trusted_combos=combos)
-    docs = synth.synth_docs(spark, n_bench_docs, seed=42)
-    def run_pipe() -> float:
-        t0 = time.time()
-        _force(pipe.run(docs)["triples"])
-        sec = time.time() - t0
-        pipe.unpersist()
-        return sec
-
-    # first run pays per-stage JIT + codegen + Python-worker module imports
-    # (fixed costs that vanish on a long-running cluster app); the second,
-    # same-JVM run is the steady-state throughput (measured ~5x apart).
-    # A probe stamp BETWEEN the two runs (round-5 directive 1) makes a
-    # mid-measurement throttle phase flip attributable: warm < cold with
-    # probe_mid far below probe_before is the hypervisor, not the code.
-    kg_sec = run_pipe()
-    probe_mid = _probe_gbps()
-    kg_sec_warm = run_pipe()
-    timings["kg_pipeline_synth"] = round(kg_sec, 3)
 
     total = round(sum(timings.values()), 3)
     print(

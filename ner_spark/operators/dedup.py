@@ -148,12 +148,8 @@ def ngram_jaccard_pairs(
     shingles carry no dedup signal, so at corpus scale the cap loses
     nothing; ``max_df=None`` keeps the exact semantics for small inputs.
     """
-    inter = shingle_intersections(docs, n, text_col, id_col, max_df)
-    jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-    return (
-        inter.withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+    return _jaccard_at_least(
+        shingle_intersections(docs, n, text_col, id_col, max_df), threshold
     )
 
 
@@ -338,8 +334,6 @@ def _snm_candidates(
     ``key_expr`` overrides the default forward-normalized sort key (the
     multi-pass variant passes the reversed key). The lead() window is
     block-partitioned — never global."""
-    from pyspark.sql import Window
-
     norm = (
         key_expr
         if key_expr is not None
@@ -538,6 +532,40 @@ def minhash_lsh_pairs(
     )
 
 
+def _pair_overlaps(cand: DataFrame, sets: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_a, n_b, inter) for each (doc_a, doc_b) candidate
+    pair: the sizes of both docs' distinct shingle arrays (``sets`` is
+    :func:`shingled` output) and the exact size of their intersection,
+    computed map-side after two doc-keyed joins. The one verifier every
+    candidate generator here finishes with; each caller applies its own
+    threshold predicate and output schema."""
+    sa = sets.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
+    sb = sets.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"))
+    return (
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size("sh_a").cast("long").alias("n_a"),
+            F.size("sh_b").cast("long").alias("n_b"),
+            F.size(F.array_intersect("sh_a", "sh_b")).cast("long").alias("inter"),
+        )
+    )
+
+
+def _jaccard_at_least(overlaps: DataFrame, threshold: float) -> DataFrame:
+    """Rounded float Jaccard of (doc_a, doc_b, n_a, n_b, inter) rows, kept
+    where it reaches ``threshold`` — the predicate and 3-column output of
+    the float-threshold Jaccard operators."""
+    jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
+    return (
+        overlaps.withColumn("jaccard", F.round(jac, 4))
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
+    )
+
+
 def minhash_verified_pairs(
     docs: DataFrame,
     threshold: float = 0.1,
@@ -560,48 +588,15 @@ def minhash_verified_pairs(
     outputs coincide above the threshold (recall property, pinned by
     tests/test_dedup_similarity.py).
 
-    Join shape: the posting list is first semi-join-pruned to docs that
-    appear in any candidate pair (near-dups are rare at scale, so this
-    discards almost everything), then each pair counts its shingle
-    intersection via an equi-join on (doc, shingle).
+    Verify: :func:`_pair_overlaps` intersects each candidate pair's
+    shingle arrays. The shingle sets are persisted once; the signature
+    pass inside :func:`minhash_lsh_pairs` builds the identical
+    ``shingled`` subplan, so Spark's cache serves it too. A candidate with
+    no shared shingle scores 0.0 and passes only a threshold <= 0.
     """
-
-    # `cand` feeds cdocs (both union branches) AND the intersection join —
-    # three consumers of the full LSH candidate subtree; `sh` feeds the
-    # posting list and the n_sh sizes. Without barriers the candidate
-    # generation (the expensive half) recomputes three times per action.
-    cand = scratch_persist(
-        minhash_lsh_pairs(docs, k, bands, n, text_col, id_col, hash_mode)
-    )
-    sh = shingled(docs, n, text_col, id_col)
-    cdocs = (
-        cand.select(F.col("doc_a").alias("doc"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc")))
-        .distinct()
-    )
-    sh = scratch_persist(sh.join(cdocs, "doc", "left_semi"))
-    posting = sh.select("doc", F.explode("sh").alias("shingle"))
-    n_sh = sh.select("doc", F.size("sh").cast("long").alias("n_sh"))
-    inter = (
-        cand.join(posting.alias("pa"), F.col("doc_a") == F.col("pa.doc"))
-        .join(
-            posting.alias("pb"),
-            (F.col("doc_b") == F.col("pb.doc"))
-            & (F.col("pa.shingle") == F.col("pb.shingle")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    na = n_sh.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    nb = n_sh.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-    return (
-        inter.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    sets = scratch_persist(shingled(docs, n, text_col, id_col))
+    cand = minhash_lsh_pairs(docs, k, bands, n, text_col, id_col, hash_mode)
+    return _jaccard_at_least(_pair_overlaps(cand, sets), threshold)
 
 
 def simhash_fingerprints(
@@ -792,50 +787,12 @@ def winnow_fingerprints(
     )
 
 
-def _verify_pair_candidates(
-    cand: DataFrame, sets: DataFrame, threshold_pct: int
-) -> DataFrame:
-    """Exact integer-Jaccard verify of (doc_a, doc_b) candidate pairs
-    against collected shingle arrays; shared by the exact prefix-filter
-    path and its MinHash degrade path so both emit the same schema
-    (doc_a, doc_b, n_a, n_b, inter, jaccard)."""
-    sa = sets.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = sets.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"))
-    sized = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size("sh_a").cast("long").alias("n_a"),
-            F.size("sh_b").cast("long").alias("n_b"),
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("long").alias("inter"),
-        )
-    )
-    uni = F.col("n_a") + F.col("n_b") - F.col("inter")
-    return sized.filter(F.col("inter") * 100 >= uni * threshold_pct).select(
-        "doc_a",
-        "doc_b",
-        "n_a",
-        "n_b",
-        "inter",
-        F.round(F.col("inter") / uni, 4).alias("jaccard"),
-    )
-
-
-class CandidateBudgetExceeded(RuntimeError):
-    """Raised by prefix_filter_pairs(on_exceed='error') when the pre-flight
-    candidate estimate exceeds max_candidates."""
-
-
 def prefix_filter_pairs(
     docs: DataFrame,
     threshold_pct: int = 70,
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_candidates: int | None = None,
-    on_exceed: str = "degrade",
 ) -> DataFrame:
     """EXACT set-similarity self-join via prefix filtering (AllPairs /
     PPJoin, Bayardo et al. WWW'07): provably every pair with shingle
@@ -853,32 +810,13 @@ def prefix_filter_pairs(
     candidate self-join), one per-doc window sort for the ranking, prefix
     self-join volume sum(df_prefix^2) over rare shingles only (a
     stop-shingle is only in a doc's prefix if the doc consists almost
-    entirely of stop-shingles), then candidate-pair verify against the
-    collected shingle arrays — integer Jaccard, one rounded double at the
-    edge. Unlike ngram_jaccard_pairs (df-capped, drops hot-shingle-only
-    pairs by design) this returns the EXACT threshold join output.
-
-    Candidate-budget guard (round-5 directive 3): exactness has an honest
-    linear-per-doc cost — measured 10.2x wall at 10x docs
-    (BENCH/sf1_stress_r04.json) where every sibling is sublinear — so at
-    100x this is the first dedup query to die, and nothing used to guard
-    the knobs. With ``max_candidates`` set, a pre-flight audit computes
-    the candidate-pair bound sum(c*(c-1)/2) over per-shingle prefix
-    posting counts (one map-side-combinable aggregate + a 1-row collect,
-    the ``kg_linking_skew_audit`` pattern). Over budget, ``on_exceed``
-    picks the failure mode: ``"degrade"`` switches candidate generation
-    to the banded MinHash-LSH path (O(docs x bands), k=32/bands=16 —
-    ~1.0 recall at J>=0.7) with the SAME exact-verify step and output
-    schema, trading provable completeness for survival; ``"error"``
-    raises :class:`CandidateBudgetExceeded` with the estimate so a
-    scheduler can re-shard or raise the budget deliberately.
+    entirely of stop-shingles), then :func:`_pair_overlaps` over the
+    collected shingle arrays and an integer Jaccard test
+    (inter*100 >= union*pct), one rounded double at the edge. Unlike
+    ngram_jaccard_pairs (df-capped, drops hot-shingle-only pairs by
+    design) this returns the EXACT threshold join output at every input
+    size, and building it runs no Spark job.
     """
-    from pyspark.sql import Window
-
-    from .scratch import scratch_persist
-
-    if on_exceed not in ("degrade", "error"):
-        raise ValueError(f"on_exceed must be 'degrade' or 'error', got {on_exceed!r}")
     # four consumers read the shingle sets (posting x2 via ranked, sa, sb)
     # and `shingled` output is provably non-empty — barrier + explode_ne,
     # the same shield every sibling multi-consumer operator carries
@@ -897,30 +835,11 @@ def prefix_filter_pairs(
         - ((F.lit(threshold_pct) * F.col("n_sh") + 99) / 100).cast("long")
         + 1
     )
-    prefix = ranked.filter(F.col("rn") <= prefix_len).select("doc", "shingle")
-    if max_candidates is not None:
-        # the estimate and the candidate join both consume the ranked
-        # prefix (a df-join + two windows) — barrier it so the pre-flight
-        # does not double that work when the budget holds
-        prefix = scratch_persist(prefix)
-        est_row = (
-            prefix.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(F.sum(F.col("c") * (F.col("c") - 1) / 2).cast("long").alias("est"))
-            .collect()[0]
-        )
-        est = int(est_row["est"] or 0)
-        if est > max_candidates:
-            if on_exceed == "error":
-                raise CandidateBudgetExceeded(
-                    f"prefix-filter candidate estimate {est} exceeds budget "
-                    f"{max_candidates}; re-shard the corpus, raise the "
-                    f"budget, or accept the MinHash degrade path"
-                )
-            cand = minhash_lsh_pairs(
-                docs, k=32, bands=16, n=n, text_col=text_col, id_col=id_col
-            )
-            return _verify_pair_candidates(cand, sets, threshold_pct)
+    # both sides of the candidate self-join read the ranked prefix (a
+    # df-join + two windows); the barrier runs it once
+    prefix = scratch_persist(
+        ranked.filter(F.col("rn") <= prefix_len).select("doc", "shingle")
+    )
     cand = (
         prefix.alias("a")
         .join(
@@ -931,7 +850,19 @@ def prefix_filter_pairs(
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .distinct()
     )
-    return _verify_pair_candidates(cand, sets, threshold_pct)
+    uni = F.col("n_a") + F.col("n_b") - F.col("inter")
+    return (
+        _pair_overlaps(cand, sets)
+        .filter(F.col("inter") * 100 >= uni * threshold_pct)
+        .select(
+            "doc_a",
+            "doc_b",
+            "n_a",
+            "n_b",
+            "inter",
+            F.round(F.col("inter") / uni, 4).alias("jaccard"),
+        )
+    )
 
 
 def segment_firstseen(docs: DataFrame, width: int = 16) -> DataFrame:
@@ -1006,8 +937,10 @@ def minhash_incremental_pairs(
     layout (:func:`_banded_signatures`); candidates come from the
     ASYMMETRIC band-bucket join delta -> index (no delta-delta or
     index-index pairs — intra-batch dups are the self-join's job), then
-    exact n-gram Jaccard is verified only on candidates, exactly as
-    :func:`minhash_verified_pairs`.
+    exact n-gram Jaccard is verified only on candidates with the same
+    :func:`_pair_overlaps` and float threshold as
+    :func:`minhash_verified_pairs` (delta doc as ``doc_a``, index doc as
+    ``doc_b``, renamed back to ``doc_new``/``doc_idx`` on output).
 
     Scale shape: at production the index side is a MATERIALIZED
     (band, bucket, doc) table partitioned by band — the probe is then
@@ -1016,7 +949,9 @@ def minhash_incremental_pairs(
     banding shows up twice in the plan. Candidate volume is
     O(|delta| x bands x bucket-width), never O(|corpus|^2).
     """
-
+    # the shingle sets feed both banding sides and the verify; the
+    # signature pass's identical `shingled` subplan is served from cache
+    sets = scratch_persist(shingled(docs, n, text_col, id_col))
     is_delta = (
         F.pmod(md5_60(F.concat(F.lit("inc:"), F.col("doc").cast("string"))), F.lit(delta_mod))
         == 0
@@ -1031,36 +966,9 @@ def minhash_incremental_pairs(
             (F.col("d.band") == F.col("i.band"))
             & (F.col("d.bucket") == F.col("i.bucket")),
         )
-        .select(F.col("d.doc").alias("doc_new"), F.col("i.doc").alias("doc_idx"))
+        .select(F.col("d.doc").alias("doc_a"), F.col("i.doc").alias("doc_b"))
         .distinct()
     )
-    cand = scratch_persist(cand)
-    sh = shingled(docs, n, text_col, id_col)
-    cdocs = (
-        cand.select(F.col("doc_new").alias("doc"))
-        .unionByName(cand.select(F.col("doc_idx").alias("doc")))
-        .distinct()
-    )
-    sh = scratch_persist(sh.join(cdocs, "doc", "left_semi"))
-    posting = sh.select("doc", F.explode("sh").alias("shingle"))
-    n_sh = sh.select("doc", F.size("sh").cast("long").alias("n_sh"))
-    inter = (
-        cand.join(posting.alias("pa"), F.col("doc_new") == F.col("pa.doc"))
-        .join(
-            posting.alias("pb"),
-            (F.col("doc_idx") == F.col("pb.doc"))
-            & (F.col("pa.shingle") == F.col("pb.shingle")),
-        )
-        .groupBy("doc_new", "doc_idx")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    na = n_sh.select(F.col("doc").alias("doc_new"), F.col("n_sh").alias("n_a"))
-    nb = n_sh.select(F.col("doc").alias("doc_idx"), F.col("n_sh").alias("n_b"))
-    jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-    return (
-        inter.join(na, "doc_new")
-        .join(nb, "doc_idx")
-        .withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_new", "doc_idx", "jaccard")
+    return _jaccard_at_least(_pair_overlaps(cand, sets), threshold).select(
+        F.col("doc_a").alias("doc_new"), F.col("doc_b").alias("doc_idx"), "jaccard"
     )

@@ -227,14 +227,6 @@ _PREFIX_SQL = f"""
 """
 
 
-# enforced pre-flight budget for the exact AllPairs pass (round-5 directive
-# 3): the candidate estimate at sf1 (50k docs) is well under this, so the
-# oracle stays exact at every test scale, while a true at-scale corpus
-# (where the estimate blows past 50M pairs) degrades to the MinHash
-# candidate path instead of dying in the prefix self-join
-_PF_BUDGET = 50_000_000
-
-
 @query("dedup_prefix_filter_join", _PREFIX_SQL)
 def dedup_prefix_filter_join(spark, sf_dir):
     """Exact Jaccard>=0.7 pairs via prefix filtering (AllPairs): rank each
@@ -242,17 +234,11 @@ def dedup_prefix_filter_join(spark, sf_dir):
     (n - ceil(0.7n) + 1)-shingle prefixes, verify candidates with integer
     set Jaccard. Lossless (provably equal to the all-pairs join) yet the
     join never touches hot shingles — the deterministic alternative to
-    the MinHash candidate path. Runs under the enforced candidate budget
-    (pre-flight estimate + MinHash degrade, operators/dedup.py) so the
-    one linear-per-doc query of the family cannot be the silent scale
-    cliff."""
+    the MinHash candidate path. Exact at every input size; building the
+    query runs no Spark job of its own."""
     from .operators.dedup import prefix_filter_pairs
 
-    return prefix_filter_pairs(
-        _t(spark, sf_dir, "documents"),
-        threshold_pct=_PF_PCT,
-        max_candidates=_PF_BUDGET,
-    )
+    return prefix_filter_pairs(_t(spark, sf_dir, "documents"), threshold_pct=_PF_PCT)
 
 
 # ---------------------------------------------------------------------------

@@ -32,7 +32,21 @@ def test_unknown_query_name_is_rejected():
     assert "no_such_query" in proc.stdout + proc.stderr
 
 
-def test_named_subset_runs_only_those_queries():
-    proc = _driver_sim("dedup_exact_groups,tpch_q1")
+def _assert_subset_ok(names: str) -> None:
+    proc = _driver_sim(names)
     assert proc.returncode == 0, f"stdout:\n{proc.stdout[-2000:]}\nstderr:\n{proc.stderr[-3000:]}"
-    assert "== 2 OK, 0 FAIL" in proc.stdout, proc.stdout
+    assert f"== {len(names.split(','))} OK, 0 FAIL" in proc.stdout, proc.stdout
+
+
+def test_named_subset_runs_only_those_queries():
+    _assert_subset_ok("dedup_exact_groups,tpch_q1")
+
+
+def test_named_subset_exact_overlap_verifier_queries():
+    """Every registry query built on the shared exact-overlap verifier
+    (``dedup._pair_overlaps``), hash-checked against oracles that keep
+    the independent posting-join formulation."""
+    _assert_subset_ok(
+        "dedup_minhash_verified,dedup_cluster_survivors,dedup_prefix_filter_join,"
+        "dedup_incremental_minhash,dedup_blocking_eval,curation_flagship"
+    )

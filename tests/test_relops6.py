@@ -89,66 +89,41 @@ def test_prefix_filter_threshold_monotone(spark, corpus):
         assert r["inter"] * 100 >= (r["n_a"] + r["n_b"] - r["inter"]) * 50
 
 
-def test_prefix_filter_budget_holds_keeps_exact_output(spark, corpus):
-    """With the pre-flight estimate under budget, the guarded call is
-    byte-identical to the unguarded exact path."""
+def test_prefix_filter_join_builds_lazily(spark):
+    """Building the exact AllPairs registry query submits no Spark job
+    beyond the ones reading its input table needs: no pre-flight pass
+    runs before the caller's action."""
+    import time
+
     from ner_spark.operators.scratch import release_scratch
+    from ner_spark.queries import _t
+    from ner_spark.queries_relops6 import dedup_prefix_filter_join
+
+    sf = "/root/testdata/sf0.001"
+    sc = spark.sparkContext
+
+    def jobs_for(group: str, build) -> list[int]:
+        sc.setJobGroup(group, group)
+        try:
+            build()
+            # sentinel: events reach the status tracker in order, so once
+            # this job is visible every earlier job of the group is too
+            spark.range(1).collect()
+            ids: list[int] = []
+            deadline = time.time() + 30
+            while not ids and time.time() < deadline:
+                time.sleep(0.05)
+                ids = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return ids
 
     try:
-        plain = sorted(map(tuple, prefix_filter_pairs(corpus, threshold_pct=70).collect()))
-        guarded = sorted(
-            map(
-                tuple,
-                prefix_filter_pairs(
-                    corpus, threshold_pct=70, max_candidates=10_000_000
-                ).collect(),
-            )
-        )
-        assert guarded == plain and plain
+        base = jobs_for("pf_lazy_input", lambda: _t(spark, sf, "documents"))
+        built = jobs_for("pf_lazy_query", lambda: dedup_prefix_filter_join(spark, sf))
     finally:
         release_scratch()
-
-
-def test_prefix_filter_budget_exceeded_degrades_to_minhash(spark, corpus):
-    """Round-5 directive 3: over budget, candidate generation degrades to
-    the banded MinHash path with the SAME exact-verify and output schema.
-    On this fixture (high-J planted dups, k=32/bands=16) the degrade path
-    recalls every exact pair, so the outputs coincide."""
-    from ner_spark.operators.scratch import release_scratch
-
-    try:
-        exact = prefix_filter_pairs(corpus, threshold_pct=70)
-        degraded = prefix_filter_pairs(
-            corpus, threshold_pct=70, max_candidates=0, on_exceed="degrade"
-        )
-        assert degraded.columns == exact.columns
-        e = sorted(map(tuple, exact.collect()))
-        d = sorted(map(tuple, degraded.collect()))
-        assert d == e and e
-    finally:
-        release_scratch()
-
-
-def test_prefix_filter_budget_exceeded_error_mode(spark, corpus):
-    """on_exceed='error' must fail loudly with the estimate, never launch
-    the over-budget candidate join."""
-    from ner_spark.operators.dedup import CandidateBudgetExceeded
-    from ner_spark.operators.scratch import release_scratch
-
-    try:
-        with pytest.raises(CandidateBudgetExceeded, match="exceeds budget"):
-            prefix_filter_pairs(
-                corpus, threshold_pct=70, max_candidates=0, on_exceed="error"
-            )
-    finally:
-        release_scratch()
-
-
-def test_prefix_filter_on_exceed_typo_rejected(spark, corpus):
-    """An unknown on_exceed mode (a typo like "raise") is rejected up
-    front instead of silently taking the degrade path."""
-    with pytest.raises(ValueError, match="on_exceed"):
-        prefix_filter_pairs(corpus, threshold_pct=70, max_candidates=0, on_exceed="raise")
+    assert len(built) <= len(base), (built, base)
 
 
 # ---------------------------------------------------------------------------

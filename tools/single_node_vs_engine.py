@@ -21,6 +21,8 @@ generator is column expressions fused into its scan stage — it has no
 separate materialization to exclude).
 
 Usage: python tools/single_node_vs_engine.py [n_docs] [cpus]
+(``cpus`` defaults to this machine's usable cores,
+``ner_spark.session.machine_size``.)
 Prints one JSON line; append to BENCH/ for the record.
 """
 
@@ -34,15 +36,15 @@ sys.path.insert(0, ".")
 
 
 def main() -> int:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000
-    cpus = int(sys.argv[2]) if len(sys.argv) > 2 else 32
-
     from pyspark.sql import functions as F
 
     from ner_spark import synth
     from ner_spark.plans.pipeline import KGPipeline
-    from ner_spark.session import get_spark
+    from ner_spark.session import get_spark, machine_size
     from oracle import pandas_oracle as O
+
+    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000
+    cpus = int(sys.argv[2]) if len(sys.argv) > 2 else machine_size()[0]
 
     spark = get_spark(
         "single_node_vs_engine", master=f"local[{cpus}]", shuffle_partitions=cpus

@@ -73,7 +73,7 @@ def main() -> int:
 
     from ner_spark.session import get_spark
 
-    spark = get_spark("synth_sf1", master="local[16]", shuffle_partitions=32)
+    spark = get_spark("synth_sf1")
     out = os.path.join(out_root, "sf1")
     os.makedirs(out, exist_ok=True)
 
