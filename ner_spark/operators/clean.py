@@ -78,12 +78,6 @@ def clean(docs: DataFrame) -> DataFrame:
     return dedup_docs(normalize_docs(docs))
 
 
-def fan_out(df: DataFrame, id_col: str = "files_id") -> DataFrame:
-    """Inverse of dedup: explode results back to one row per source doc
-    (reference: the files_id tuple threading, epg_cleaner.py:66-69)."""
-    return df.withColumn("doc_id", F.explode(F.col(id_col)))
-
-
 def span_violations(input_docs: DataFrame, output_docs: DataFrame) -> DataFrame:
     """Span-sequence equality check (kind, text, media_ref, order).
 

@@ -10,6 +10,11 @@ is 1-(1-p^r)^B where p = 1-acos(c)/pi — a single band (the round-1 design)
 tops out at p^r, which at c=0.95, r=8 is ~0.43; the banded union pushes it
 past 0.95 (asserted against brute-force in tests).
 
+Every top-k operator is its own candidate generator (cross join, band
+join, IVF cell probe) followed by one shared verify and rank: exact
+rounded cosine (``_cosine_top_k``) and the per-query ``row_number`` window
+(``_top_k``); IVF+PQ ranks its ADC estimate through the same ``_top_k``.
+
 All dot products are JVM-side (``aggregate``/``zip_with``) — no Python in
 the scoring loop.
 """
@@ -40,38 +45,51 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _side(df: DataFrame, id_col: str, vec_col: str, p: str) -> DataFrame:
+    """``(p_id, p_vec array<double>)`` projection of one join side."""
+    return df.select(
+        F.col(id_col).alias(f"{p}_id"),
+        F.col(vec_col).cast("array<double>").alias(f"{p}_vec"),
+    )
+
+
+def _top_k(
+    scored: DataFrame, k: int, score: str = "score", ascending: bool = False
+) -> DataFrame:
+    """The one per-query ranking: ``row_number`` over ``(score, nb_id asc)``
+    per ``q_id``, keep ``rank <= k``. Ties break on the neighbor id, so the
+    order is reproducible across engines."""
+    order = F.asc(score) if ascending else F.desc(score)
+    w = Window.partitionBy("q_id").orderBy(order, F.asc("nb_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "nb_id", score, F.col("rank").cast("long").alias("rank"))
+    )
+
+
+def _cosine_top_k(cand: DataFrame, k: int) -> DataFrame:
+    """The one exact verify: drop self-matches, score each candidate
+    ``(q_id, q_vec, nb_id, nb_vec)`` by cosine rounded to 4 digits (rounding
+    first makes the order reproducible across summation orders), rank."""
+    scored = cand.filter(F.col("q_id") != F.col("nb_id")).withColumn(
+        "score", F.round(cosine(F.col("q_vec"), F.col("nb_vec")), 4)
+    )
+    return _top_k(scored, k)
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 4,
 ) -> DataFrame:
-    """Exact cosine top-k of every query against the vector table.
-
-    Deterministic ranking: (rounded score desc, neighbor id asc) — rounding
-    first makes the order reproducible across summation orders/engines.
-    Self-matches are excluded.
-    """
-    v = vectors.select(
-        F.col(id_col).alias("nb_id"),
-        F.col(vec_col).cast("array<double>").alias("nb_vec"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).cast("array<double>").alias("q_vec")
-    )
-    scored = (
-        q.crossJoin(v)
-        .filter(F.col("q_id") != F.col("nb_id"))
-        .withColumn("score", F.round(cosine(F.col("q_vec"), F.col("nb_vec")), round_digits))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("nb_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "nb_id", "score", F.col("rank").cast("long").alias("rank"))
-    )
+    """Exact cosine top-k of every query against the vector table: every
+    pair is a candidate. Self-matches are excluded."""
+    v = _side(vectors, id_col, vec_col, "nb")
+    q = _side(queries, id_col, vec_col, "q")
+    return _cosine_top_k(q.crossJoin(v), k)
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -101,12 +119,8 @@ def _dot_sql(vec_sql: str, plane: list[float]) -> str:
     )
 
 
-def lsh_signature(vec_col: str, planes: list[list[float]]) -> Column:
+def _sign_bits_sql(vec_sql: str, planes: list[list[float]]) -> str:
     """Random-hyperplane signature: bit j = sign(v . plane_j)."""
-    return F.expr(_lsh_signature_sql(vec_col, planes))
-
-
-def _lsh_signature_sql(vec_sql: str, planes: list[list[float]]) -> str:
     terms = " + ".join(
         f"(CASE WHEN {_dot_sql(vec_sql, p)} > 0 THEN {1 << j} ELSE 0 END)"
         for j, p in enumerate(planes)
@@ -117,7 +131,7 @@ def _lsh_signature_sql(vec_sql: str, planes: list[list[float]]) -> str:
 def banded_buckets(vec_col: str, plane_sets: list[list[list[float]]]) -> Column:
     """array<struct<band,bucket>> — one bucket id per band."""
     structs = ", ".join(
-        f"named_struct('band', {b}, 'bucket', {_lsh_signature_sql(vec_col, planes)})"
+        f"named_struct('band', {b}, 'bucket', {_sign_bits_sql(vec_col, planes)})"
         for b, planes in enumerate(plane_sets)
     )
     return F.expr(f"array({structs})")
@@ -154,67 +168,25 @@ def lsh_topk(
     before scoring so each pair is scored once.
     """
     plane_sets = band_planes(dim, bands, planes_per_band, seed)
-    v = vectors.select(
-        F.col(id_col).alias("nb_id"),
-        F.col(vec_col).cast("array<double>").alias("nb_vec"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).cast("array<double>").alias("q_vec")
-    )
-    vb = _explode_bands(v, "nb_vec", plane_sets)
-    qb = _explode_bands(q, "q_vec", plane_sets)
+    vb = _explode_bands(_side(vectors, id_col, vec_col, "nb"), "nb_vec", plane_sets)
+    qb = _explode_bands(_side(queries, id_col, vec_col, "q"), "q_vec", plane_sets)
     cand = (
         qb.join(vb, ["_band", "_bucket"])
-        .filter(F.col("q_id") != F.col("nb_id"))
         .select("q_id", "q_vec", "nb_id", "nb_vec")
         .dropDuplicates(["q_id", "nb_id"])
     )
-    scored = cand.withColumn("score", F.round(cosine(F.col("q_vec"), F.col("nb_vec")), 4))
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("nb_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "nb_id", "score", F.col("rank").cast("long").alias("rank"))
-    )
-
-
-def train_ivf_centroids(
-    vectors: DataFrame,
-    n_centroids: int = 16,
-    iters: int = 8,
-    sample_rows: int = 2048,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> list[list[float]]:
-    """Train IVF coarse-quantizer centroids on a driver-side sample.
-
-    IVF training is sample-based by design (FAISS trains its coarse
-    quantizer on ~1e5-1e6 of 1e9+ vectors); the sample here is the first
-    ``sample_rows`` ids (a bounded sorted limit — deterministic, and at
-    scale a TABLESAMPLE over the id-sorted table). Lloyd iterations run
-    in float64 numpy with a seeded init; centroids are rounded so they
-    inline as SQL-replayable literals (the hyperplane-LSH trick).
-    """
-    import numpy as np
-
-    rows = (
-        vectors.select(id_col, F.col(vec_col).cast("array<double>"))
-        .orderBy(id_col)
-        .limit(sample_rows)
-        .collect()
-    )
-    X = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    return kmeans_centroids(X, n_centroids, iters, seed, round_digits)
+    return _cosine_top_k(cand, k)
 
 
 def kmeans_centroids(
     X, n_centroids: int, iters: int, seed: int, round_digits: int = 6
 ) -> list[list[float]]:
-    """Seeded float64 Lloyd iterations (shared by the Spark trainer and
-    the oracle-side pyarrow trainer so both derive bit-identical centroid
-    literals from the same sample)."""
+    """Seeded float64 Lloyd iterations on a driver-side sample.
+
+    IVF training is sample-based by design (FAISS trains its coarse
+    quantizer on ~1e5-1e6 of 1e9+ vectors). Centroids are rounded so they
+    inline as SQL-replayable literals (the hyperplane-LSH trick): the Spark
+    query and the generated DuckDB oracle carry bit-identical values."""
     import numpy as np
 
     rng = np.random.RandomState(seed)
@@ -227,23 +199,6 @@ def kmeans_centroids(
             if len(members):
                 C[j] = members.mean(0)
     return [[round(float(x), round_digits) for x in c] for c in C]
-
-
-def _lit_array(values: list[float]) -> Column:
-    """Literal double array via ONE parsed expression — building it from
-    len(values) F.lit() calls costs a py4j round-trip per element, which
-    dominates wall time when hundreds of centroid literals are inlined
-    (measured ~13 s of pure expression construction for the IVF+PQ query)."""
-    return F.expr("array(" + ", ".join(f"{x!r}D" for x in values) + ")")
-
-
-def _cell_dist(vec: Column, centroid: list[float]) -> Column:
-    """Rank-equivalent L2 distance to a literal centroid: |c|^2 - 2*v.c
-    (the |v|^2 term is constant per row). Rounded so the argmin is stable
-    across engines' float summation orders."""
-    c = _lit_array(centroid)
-    c2 = sum(x * x for x in centroid)
-    return F.round(F.lit(c2) - 2.0 * _dot(vec, c), 6)
 
 
 def _cell_structs_sql(vec_sql: str, centroids: list[list[float]]) -> str:
@@ -265,6 +220,22 @@ def ivf_assign(vec_col: str, centroids: list[list[float]]) -> Column:
     return F.expr(f"array_min({_cell_structs_sql(vec_col, centroids)}).cell")
 
 
+def _probe(q: DataFrame, centroids: list[list[float]], nprobe: int) -> DataFrame:
+    """Fan each ``(q_id, q_vec)`` out to its ``nprobe`` nearest cells
+    (rounded rank-equivalent distance, cell-id tie-break)."""
+    qcells = q.select(
+        "q_id",
+        "q_vec",
+        F.explode(F.expr(_cell_structs_sql("q_vec", centroids))).alias("_dc"),
+    ).select("q_id", "q_vec", F.col("_dc.d").alias("d"), F.col("_dc.cell").alias("cell"))
+    w = Window.partitionBy("q_id").orderBy(F.asc("d"), F.asc("cell"))
+    return (
+        qcells.withColumn("_pr", F.row_number().over(w))
+        .filter(F.col("_pr") <= nprobe)
+        .select("q_id", "q_vec", "cell")
+    )
+
+
 def ivf_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -283,40 +254,15 @@ def ivf_topk(
     out to nprobe (query, cell) rows; the candidate join is an equi-join
     on cell, never a cross join.
     """
-    v = vectors.select(
-        F.col(id_col).alias("nb_id"),
-        F.col(vec_col).cast("array<double>").alias("nb_vec"),
-    ).withColumn("cell", ivf_assign("nb_vec", centroids))
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).cast("array<double>").alias("q_vec"),
+    v = _side(vectors, id_col, vec_col, "nb").withColumn(
+        "cell", ivf_assign("nb_vec", centroids)
     )
-    qcells = q.select(
-        "q_id",
-        "q_vec",
-        F.explode(F.expr(_cell_structs_sql("q_vec", centroids))).alias("_dc"),
-    ).select("q_id", "q_vec", F.col("_dc.d").alias("d"), F.col("_dc.cell").alias("cell"))
-    wq = Window.partitionBy("q_id").orderBy(F.asc("d"), F.asc("cell"))
-    probed = (
-        qcells.withColumn("_pr", F.row_number().over(wq))
-        .filter(F.col("_pr") <= nprobe)
-        .select("q_id", "q_vec", "cell")
-    )
+    probed = _probe(_side(queries, id_col, vec_col, "q"), centroids, nprobe)
     # broadcast the (small) probed query fan-out: the vector table is the
     # big side and must not shuffle on a 16-value key — with the broadcast
     # it is scanned in place (and partition-pruned by cell when the index
     # is written partitioned by cell)
-    scored = (
-        v.join(F.broadcast(probed), "cell")
-        .filter(F.col("q_id") != F.col("nb_id"))
-        .withColumn("score", F.round(cosine(F.col("q_vec"), F.col("nb_vec")), 4))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("nb_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "nb_id", "score", F.col("rank").cast("long").alias("rank"))
-    )
+    return _cosine_top_k(v.join(F.broadcast(probed), "cell"), k)
 
 
 def embedding_near_dup_pairs(
@@ -338,25 +284,24 @@ def embedding_near_dup_pairs(
     """
 
     plane_sets = band_planes(dim, bands, planes_per_band, seed)
-    v = vectors.select(
-        F.col(id_col).alias("doc"), F.col(vec_col).cast("array<double>").alias("vec")
-    )
     # both sides of the self-join consume the banded signatures (B*r
     # interpreted-HOF dot products per row); a barrier computes them once
-    vb = scratch_persist(_explode_bands(v, "vec", plane_sets))
+    vb = scratch_persist(
+        _explode_bands(_side(vectors, id_col, vec_col, "v"), "v_vec", plane_sets)
+    )
     a, b = vb.alias("a"), vb.alias("b")
     cand = (
         a.join(
             b,
             (F.col("a._band") == F.col("b._band"))
             & (F.col("a._bucket") == F.col("b._bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
+            & (F.col("a.v_id") < F.col("b.v_id")),
         )
         .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("a.vec").alias("vec_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.col("b.vec").alias("vec_b"),
+            F.col("a.v_id").alias("doc_a"),
+            F.col("a.v_vec").alias("vec_a"),
+            F.col("b.v_id").alias("doc_b"),
+            F.col("b.v_vec").alias("vec_b"),
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
@@ -368,11 +313,12 @@ def embedding_near_dup_pairs(
 
 
 def _cell_dist_sql(vec_sql: str, centroid: list[float]) -> str:
-    """String-SQL twin of ``_cell_dist`` — semantically identical (same
-    slice/zip_with/ordered-fold/round), but ONE parser call instead of a
-    py4j round-trip per lambda/literal. With hundreds of centroid
-    distances inlined (PQ codebooks), Column-API construction alone
-    measured ~13 s; the string form parses in milliseconds."""
+    """Rank-equivalent L2 distance to a literal centroid: |c|^2 - 2*v.c
+    (the |v|^2 term is constant per row), rounded so the argmin is stable
+    across engines' float summation orders. A SQL string: ONE parser call
+    instead of a py4j round-trip per lambda/literal. With hundreds of
+    centroid distances inlined (PQ codebooks), Column-API construction
+    alone measured ~13 s; the string form parses in milliseconds."""
     c = "array(" + ", ".join(f"{x!r}D" for x in centroid) + ")"
     c2 = sum(x * x for x in centroid)
     return (
@@ -392,11 +338,6 @@ def pq_code_sql(vec_sql: str, book: list[list[float]], m: int, sub_dim: int) -> 
         for j, c in enumerate(book)
     )
     return f"array_min(array({structs})).j"
-
-
-def pq_code(vec_col: str, book: list[list[float]], m: int, sub_dim: int) -> Column:
-    """Column wrapper over ``pq_code_sql`` for a plain column name."""
-    return F.expr(pq_code_sql(vec_col, book, m, sub_dim))
 
 
 def ivfpq_topk(
@@ -426,14 +367,10 @@ def ivfpq_topk(
     """
     n_sub = len(books)
     sub_dim = len(books[0][0])
-    v = vectors.select(
-        F.col(id_col).alias("nb_id"),
-        F.col(vec_col).cast("array<double>").alias("nb_vec"),
-    )
     # every centroid-distance expression below is a *_sql string form: one
     # parser call apiece instead of a py4j round-trip per literal/lambda
     # (Column-API construction alone measured ~13 s for this operator)
-    coded = v.select(
+    coded = _side(vectors, id_col, vec_col, "nb").select(
         "nb_id",
         ivf_assign("nb_vec", centroids).alias("cell"),
         *[
@@ -441,36 +378,20 @@ def ivfpq_topk(
             for m in range(n_sub)
         ],
     )
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).cast("array<double>").alias("q_vec"),
-    )
-    qcells = q.select(
+    probed = _probe(_side(queries, id_col, vec_col, "q"), centroids, nprobe).select(
         "q_id",
-        "q_vec",
-        F.explode(F.expr(_cell_structs_sql("q_vec", centroids))).alias("_dc"),
-    ).select("q_id", "q_vec", F.col("_dc.d").alias("d"), F.col("_dc.cell").alias("cell"))
-    wq = Window.partitionBy("q_id").orderBy(F.asc("d"), F.asc("cell"))
-    probed = (
-        qcells.withColumn("_pr", F.row_number().over(wq))
-        .filter(F.col("_pr") <= nprobe)
-        .select(
-            "q_id",
-            "cell",
-            *[
-                F.expr(
-                    "array("
-                    + ", ".join(
-                        _cell_dist_sql(
-                            f"slice(q_vec, {m * sub_dim + 1}, {sub_dim})", c
-                        )
-                        for c in books[m]
-                    )
-                    + ")"
-                ).alias(f"lut_{m}")
-                for m in range(n_sub)
-            ],
-        )
+        "cell",
+        *[
+            F.expr(
+                "array("
+                + ", ".join(
+                    _cell_dist_sql(f"slice(q_vec, {m * sub_dim + 1}, {sub_dim})", c)
+                    for c in books[m]
+                )
+                + ")"
+            ).alias(f"lut_{m}")
+            for m in range(n_sub)
+        ],
     )
     adc = F.round(
         sum(
@@ -484,12 +405,7 @@ def ivfpq_topk(
         .filter(F.col("q_id") != F.col("nb_id"))
         .withColumn("adc", adc)
     )
-    wr = Window.partitionBy("q_id").orderBy(F.asc("adc"), F.asc("nb_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "nb_id", "adc", F.col("rank").cast("long").alias("rank"))
-    )
+    return _top_k(scored, k, score="adc", ascending=True)
 
 
 def gram_power_iteration(

@@ -101,16 +101,6 @@ class KGPipeline:
         self._cached.clear()
 
 
-def ordered_mentions(mentions: DataFrame) -> DataFrame:
-    """Presentation order (W2) — applied at output time only; keeping the
-    pipeline itself order-free avoids a global sort on the hot path."""
-    return C.order_mentions(mentions)
-
-
-def mention_key_cols() -> list[str]:
-    return [*C.KEYS, "method"]
-
-
 def summarize(df: DataFrame, cols: list[str]) -> DataFrame:
     """D6 self-diagnostics: frequency reports per column value."""
     outs = [

@@ -471,10 +471,9 @@ def ann_topk_lsh(spark, sf_dir):
 def ann_topk_ivf(spark, sf_dir):
     """IVF ANN: exact cosine within the nprobe cells nearest each query.
 
-    Centroids come from the shared pyarrow+numpy trainer
-    (queries_hash.ivf_centroids_for) so the generated DuckDB oracle
-    inlines bit-identical literals; the engine API's Spark-side trainer
-    (similarity.train_ivf_centroids) selects the same sample.
+    Centroids come from the one trainer (queries_hash.ivf_centroids_for:
+    seeded k-means on the first IVF_SAMPLE vectors by vec_id), so the
+    generated DuckDB oracle inlines bit-identical literals.
     """
     from .operators.similarity import ivf_topk
     from .queries_hash import IVF_NPROBE, ivf_centroids_for

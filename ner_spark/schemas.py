@@ -102,16 +102,6 @@ PATTERN = T.StructType(
     ]
 )
 
-# Trusted combos: ordered slots; "" means intentionally-empty slot, which per
-# the verified reference quirk (SURVEY.md §2 F3) can never match a missing
-# (NULL) grf — null-safe equality keeps "" != NULL.
-TRUSTED_COMBO = T.StructType(
-    [
-        T.StructField("combo_id", T.StringType(), False),
-        T.StructField("slots", T.ArrayType(T.StringType()), False),  # len 3
-    ]
-)
-
 # ---------------------------------------------------------------------------
 # Corrections (manual dimension table; reference: src/utils/ner_config.py:200-307)
 # ---------------------------------------------------------------------------

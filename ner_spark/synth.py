@@ -173,13 +173,6 @@ def synth_patterns(spark: SparkSession) -> DataFrame:
     )
 
 
-def synth_trusted_combos(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(c["combo_id"], c["slots"]) for c in TRUSTED_COMBOS],
-        schema=schemas.TRUSTED_COMBO,
-    )
-
-
 def synth_corrections(spark: SparkSession, n_docs: int, seed: int = 42) -> DataFrame:
     """Manual-correction dimension (FIXTURES.md F4): hits, misses, dupes."""
     rows = []

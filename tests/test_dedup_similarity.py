@@ -166,9 +166,7 @@ def near_dup_vectors(spark):
 
 
 def test_brute_force_topk_exact(spark, vectors):
-    got = S.brute_force_topk(
-        vectors, vectors.filter(F.col("vec_id") == 0), k=3, round_digits=4
-    ).collect()
+    got = S.brute_force_topk(vectors, vectors.filter(F.col("vec_id") == 0), k=3).collect()
     assert [r["rank"] for r in got] == [1, 2, 3]
     assert got[0]["nb_id"] == 999 and got[0]["score"] > 0.99
 
@@ -244,9 +242,11 @@ def test_ivf_topk_full_probe_exact_and_partial_probe(spark, vectors):
     (every cell probed, scoring is exact cosine), and at nprobe=1 a query
     still finds its planted near-identical neighbor — near-dups share the
     query's own cell by construction."""
-    cents = S.train_ivf_centroids(
-        vectors, n_centroids=8, iters=5, sample_rows=100, seed=7
-    )
+    import numpy as np
+
+    sample = vectors.orderBy("vec_id").limit(100).collect()
+    X = np.array([r["embedding"] for r in sample], dtype=np.float64)
+    cents = S.kmeans_centroids(X, 8, 5, 7)
     assert len(cents) == 8 and len(cents[0]) == 16
     queries = vectors.filter(F.col("vec_id") < 10)
     exact = {

@@ -3,7 +3,8 @@
 ``tools/driver_sim.py <sf_dir> q1,q2`` checks only the named registry
 queries against their DuckDB oracles. A misspelt name must fail loudly
 (before any Spark session starts) instead of being skipped into a green
-``0 OK, 0 FAIL`` run.
+``0 OK, 0 FAIL`` run. The harness regenerates the data-dependent
+oracles for the sf_dir it compares, through ``register_ivf_oracle``.
 """
 
 from __future__ import annotations
@@ -50,3 +51,39 @@ def test_named_subset_exact_overlap_verifier_queries():
         "dedup_minhash_verified,dedup_cluster_survivors,dedup_prefix_filter_join,"
         "dedup_incremental_minhash,dedup_blocking_eval,curation_flagship"
     )
+
+
+def test_named_subset_embedding_family_queries():
+    """The embedding family (every top-k operator on the shared
+    exact-cosine verify and per-query ranking, plus the k-means/SemDeDup
+    queries on the shared IVF training sample), hash-checked against
+    oracles generated for this sf_dir."""
+    _assert_subset_ok(
+        "ann_topk_bruteforce,ann_topk_lsh,ann_topk_ivf,ann_topk_ivfpq,"
+        "ann_recall_eval,embedding_near_dup,embedding_kmeans_stats,"
+        "dedup_semantic_prune"
+    )
+
+
+def test_register_ivf_oracle_drops_and_restores(tmp_path):
+    """Importing the registry registers all four data-dependent oracles;
+    ``register_ivf_oracle`` drops them for an sf_dir without embeddings
+    and regenerates them byte-identically for the default scale."""
+    from ner_spark.queries import ORACLE
+    from ner_spark.queries_hash import register_ivf_oracle
+
+    names = (
+        "ann_topk_ivf",
+        "embedding_kmeans_stats",
+        "ann_topk_ivfpq",
+        "dedup_semantic_prune",
+    )
+    before = dict(ORACLE)
+    assert all(n in before for n in names)
+    try:
+        register_ivf_oracle(str(tmp_path))
+        assert set(before) - set(ORACLE) == set(names)
+        assert all(ORACLE[n] == before[n] for n in ORACLE)
+    finally:
+        register_ivf_oracle("/root/testdata/sf0.01")
+    assert ORACLE == before
