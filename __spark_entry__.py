@@ -28,6 +28,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
+    """Oracle SQL per registry query name.
+
+    The four centroid-literal oracles (``ann_topk_ivf``,
+    ``embedding_kmeans_stats``, ``ann_topk_ivfpq``, ``dedup_semantic_prune``)
+    inline centroids and codebooks trained on the sf0.01 test data
+    (``register_ivf_oracle``'s default) whatever sf_dir the caller
+    compares, while the Spark queries train on the sf_dir they are given:
+    at any other scale those four disagree. Call
+    ``ner_spark.queries_hash.register_ivf_oracle(sf_dir)`` first to
+    regenerate them for that sf_dir, as ``tools/driver_sim.py`` and
+    perfbench do.
+    """
     from ner_spark import queries as Q
 
     return dict(Q.ORACLE)

@@ -21,6 +21,14 @@ def normalize_ws(col: Column) -> Column:
     return F.trim(F.regexp_replace(col, r"\s+", " "))
 
 
+def tokens(col: Column) -> Column:
+    """Whitespace tokens. NB: on empty/whitespace-only text this yields
+    ``['']`` (size 1, the split semantics both engines share), so a blank
+    document scores n_tokens=1 — filter empties FIRST, as every registry
+    query and the curation funnel's empty-text gate do."""
+    return F.split(F.trim(col), r"\s+")
+
+
 def strip_tags(col: Column) -> Column:
     """Remove ``<s>``/``</s>`` sentence tags (reference: casen_config.py:184-189)."""
     return F.regexp_replace(col, r"</?s\b[^>]*>", "")

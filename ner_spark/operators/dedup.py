@@ -8,24 +8,29 @@ MinHash+LSH (band-bucket join — the scale path: candidate generation cost
 is O(docs x bands), never O(docs^2)), and SimHash (60-bit fingerprint,
 hamming-radius candidates with pigeonhole-sound segment blocking).
 
+Every pairwise operator is one blocking self-join (:func:`self_join`: rows
+that share a blocking key, ``a.id < b.id``) followed by its own verify
+step — shingle counts, exact set overlap, hamming distance, cosine.
+
+Operators read ``doc_id``/``text`` and shingle into word 3-grams.
 Everything is pure column expressions (whole-stage codegen, no Python on
-the hot path). Hashing comes in two modes: ``xxhash64`` (fastest, JVM
-intrinsic) and ``md5`` (bit-identical in DuckDB, so the driver's SQL oracle
-can replay the exact same signatures).
+the hot path). Every hash is md5, which DuckDB computes bit-identically,
+so the SQL oracles replay the exact same signatures.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.text import tokens
 from .scratch import scratch_persist
 
 HASH_P = 1_000_003  # prime modulus for shingle hashing
 SIMHASH_BITS = 60  # 15 hex chars of md5 -> fits a signed 64-bit int
-
-
-def tokens(col):
-    return F.split(F.trim(col), r"\s+")
 
 
 def explode_ne(col) -> Column:
@@ -49,23 +54,37 @@ def explode_ne(col) -> Column:
     return F.explode_outer(col)
 
 
-def shingles(col, n: int = 3):
-    """Distinct word n-gram shingles of a text column.
-
-    NB: ``col`` should be a plain column REFERENCE to an already-projected
-    token array or text attribute where possible — the gram builder
-    references its input 3 times per shingle index, and Catalyst performs
-    no CSE across those references, so an inline ``split(...)`` expression
-    here re-tokenizes the text ~3*n_shingles times per row (measured 5x
-    slowdown at sf0.1). Use :func:`shingled` for the safe two-projection
-    form.
-    """
-    t = tokens(col)
-    return _shingles_of(t, n)
+def self_join(
+    rows: DataFrame, id_col: str, keys: Sequence[str], carry: Sequence[str] = ()
+) -> DataFrame:
+    """The one blocking self-join: every pair of rows equal on all ``keys``
+    columns with ``a.<id_col> < b.<id_col>``, as ``(doc_a, doc_b,
+    *<c>_a, *<c>_b)`` for the ``carry`` columns. One row per shared key
+    value — no dedup; each caller reduces (count, distinct, verify)."""
+    a, b = rows.alias("a"), rows.alias("b")
+    cond = reduce(
+        lambda x, y: x & y,
+        [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+        + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")],
+    )
+    return a.join(b, cond).select(
+        F.col(f"a.{id_col}").alias("doc_a"),
+        F.col(f"b.{id_col}").alias("doc_b"),
+        *[F.col(f"a.{c}").alias(f"{c}_a") for c in carry],
+        *[F.col(f"b.{c}").alias(f"{c}_b") for c in carry],
+    )
 
 
 def _shingles_of(t, n: int):
-    """Gram builder over a token-array column (see caveat in shingles)."""
+    """Word n-grams of a token-array column.
+
+    NB: ``t`` must be a plain column REFERENCE to an already-projected
+    token array — the gram expression references its input 3 times per
+    shingle index, and Catalyst performs no CSE across those references,
+    so an inline ``split(...)`` expression here re-tokenizes the text
+    ~3*n_shingles times per row (measured 5x slowdown at sf0.1). Use
+    :func:`shingled` for the safe two-projection form.
+    """
     idx = F.sequence(F.lit(0), F.greatest(F.size(t) - n, F.lit(0)))
     grams = F.transform(
         idx,
@@ -78,18 +97,16 @@ def _shingles_of(t, n: int):
     )
 
 
-def shingled(
-    docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(doc, sh) with the tokenization materialized in its OWN projection:
-    the token split runs once per row and the gram builder reads the
-    resulting attribute. CollapseProject will not merge the two projections
-    because the token alias is referenced 3*n_shingles times and is not
-    cheap — exactly the barrier we want."""
+def shingled(docs: DataFrame) -> DataFrame:
+    """(doc, sh) word 3-gram sets with the tokenization materialized in its
+    OWN projection: the token split runs once per row and the gram
+    expression reads the resulting attribute. CollapseProject will not
+    merge the two projections because the token alias is referenced
+    3*n_shingles times and is not cheap — exactly the barrier we want."""
     toks = docs.filter(
-        F.col(text_col).isNotNull() & (F.length(F.trim(text_col)) > 0)
-    ).select(F.col(id_col).alias("doc"), tokens(F.col(text_col)).alias("_toks"))
-    return toks.select("doc", _shingles_of(F.col("_toks"), n).alias("sh"))
+        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
+    ).select(F.col("doc_id").alias("doc"), tokens(F.col("text")).alias("_toks"))
+    return toks.select("doc", _shingles_of(F.col("_toks"), 3).alias("sh"))
 
 
 def affine_coeffs(k: int, seed: int = 1234) -> list[tuple[int, int]]:
@@ -110,29 +127,24 @@ def md5_60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def exact_dup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dup_groups(docs: DataFrame) -> DataFrame:
     """Exact dedup via hash-groupBy; returns groups with >1 members."""
     return (
-        docs.filter(F.col(text_col).isNotNull())
-        .groupBy(F.sha2(F.col(text_col), 256).alias("text_hash"))
+        docs.filter(F.col("text").isNotNull())
+        .groupBy(F.sha2(F.col("text"), 256).alias("text_hash"))
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.min(id_col).alias("keep_id"),
-            F.sort_array(F.collect_list(id_col)).alias("members"),
+            F.min("doc_id").alias("keep_id"),
+            F.sort_array(F.collect_list("doc_id")).alias("members"),
         )
         .filter(F.col("n_docs") > 1)
     )
 
 
 def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.1,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_df: int | None = None,
+    docs: DataFrame, threshold: float = 0.1, max_df: int | None = None
 ) -> DataFrame:
-    """Near-duplicate pairs by n-gram Jaccard via shingle-blocking join.
+    """Near-duplicate pairs by 3-gram Jaccard via shingle-blocking join.
 
     |A ∩ B| from a shingle-equality self-join (only docs sharing >=1
     shingle are ever paired — the blocking step), then
@@ -148,23 +160,15 @@ def ngram_jaccard_pairs(
     shingles carry no dedup signal, so at corpus scale the cap loses
     nothing; ``max_df=None`` keeps the exact semantics for small inputs.
     """
-    return _jaccard_at_least(
-        shingle_intersections(docs, n, text_col, id_col, max_df), threshold
-    )
+    return _jaccard_at_least(shingle_intersections(docs, max_df), threshold)
 
 
-def shingle_intersections(
-    docs: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_df: int | None = None,
-) -> DataFrame:
+def shingle_intersections(docs: DataFrame, max_df: int | None = None) -> DataFrame:
     """(doc_a, doc_b, n_a, n_b, inter) for every doc pair sharing >=1 kept
     shingle — the blocking self-join both set-overlap measures (Jaccard
     resemblance and directional containment) finish from."""
 
-    sh = shingled(docs, n, text_col, id_col)
+    sh = shingled(docs)
     # the posting list feeds the df-count, the anti-join, the n_sh
     # recount, AND both sides of the self-join — six consumers of the
     # same subtree; without a materialization barrier Spark recomputes
@@ -186,26 +190,20 @@ def shingle_intersections(
         posting = posting.join(F.broadcast(hot), "shingle", "left_anti")
     n_sh = posting.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
     posting = scratch_persist(posting.join(n_sh, "doc"))
-    a, b = posting.alias("a"), posting.alias("b")
     return (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc") < F.col("b.doc")))
+        self_join(posting, "doc", ["shingle"], carry=("n_sh",))
         .groupBy(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.col("a.n_sh").alias("n_a"),
-            F.col("b.n_sh").alias("n_b"),
+            "doc_a",
+            "doc_b",
+            F.col("n_sh_a").alias("n_a"),
+            F.col("n_sh_b").alias("n_b"),
         )
         .agg(F.count(F.lit(1)).alias("inter"))
     )
 
 
 def containment_pairs(
-    docs: DataFrame,
-    threshold_pct: int = 50,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_df: int | None = None,
+    docs: DataFrame, threshold_pct: int = 50, max_df: int | None = None
 ) -> DataFrame:
     """Directional set containment C = |A ∩ B| / min(|A|, |B|) — the
     asymmetric near-dup measure (Broder's "containment"): a short document
@@ -215,7 +213,7 @@ def containment_pairs(
     threshold compares in exact integers (inter*100 >= min*pct), float
     enters only in the reported rounded ratio.
     """
-    inter = shingle_intersections(docs, n, text_col, id_col, max_df)
+    inter = shingle_intersections(docs, max_df)
     small = F.least(F.col("n_a"), F.col("n_b"))
     return (
         inter.filter(F.col("inter") * 100 >= small * F.lit(threshold_pct))
@@ -236,8 +234,6 @@ def sorted_neighborhood_pairs(
     threshold_pct: int = 80,
     key_len: int = 64,
     block_len: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Sorted-neighborhood dedup (Hernández & Stolfo, SIGMOD 1995): sort on
     a normalized blocking key, compare each record only with the next
@@ -257,13 +253,16 @@ def sorted_neighborhood_pairs(
     (array_intersect on pre-distincted token arrays); the threshold
     compares in integers (inter*100 >= union*pct).
     """
-    toks = F.array_distinct(
-        F.filter(
-            F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda t: t != ""
-        )
-    )
-    pairs = _snm_candidates(docs, window, key_len, block_len, text_col, id_col, toks)
+    pairs = _snm_candidates(docs, window, key_len, block_len, _snm_token_set())
     return _jaccard_verify(pairs, threshold_pct)
+
+
+def _snm_token_set() -> Column:
+    """Distinct lowercase [a-z0-9] tokens of ``text`` — the sorted-
+    neighborhood Jaccard verifier's payload."""
+    return F.array_distinct(
+        F.filter(F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: t != "")
+    )
 
 
 def _jaccard_verify(pairs: DataFrame, threshold_pct: int) -> DataFrame:
@@ -289,8 +288,6 @@ def sorted_neighborhood_multipass(
     threshold_pct: int = 80,
     key_len: int = 64,
     block_len: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Multi-pass sorted-neighborhood dedup — the literature's standard fix
     for single-pass SNM's boundary blindness (Hernández & Stolfo run
@@ -302,18 +299,10 @@ def sorted_neighborhood_multipass(
     whose distinct collapses pairs found by both; cost is exactly 2x the
     single pass (two block-partitioned window scans), still O(docs*window)
     comparisons — never all-pairs."""
-    toks = F.array_distinct(
-        F.filter(
-            F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda t: t != ""
-        )
-    )
-    fwd = _snm_candidates(docs, window, key_len, block_len, text_col, id_col, toks)
-    rev_key = F.reverse(
-        F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]+", "")
-    )
-    rev = _snm_candidates(
-        docs, window, key_len, block_len, text_col, id_col, toks, key_expr=rev_key
-    )
+    toks = _snm_token_set()
+    fwd = _snm_candidates(docs, window, key_len, block_len, toks)
+    rev_key = F.reverse(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", ""))
+    rev = _snm_candidates(docs, window, key_len, block_len, toks, key_expr=rev_key)
     return _jaccard_verify(fwd.unionByName(rev), threshold_pct)
 
 
@@ -322,8 +311,6 @@ def _snm_candidates(
     window: int,
     key_len: int,
     block_len: int,
-    text_col: str,
-    id_col: str,
     payload: Column,
     key_expr: Column | None = None,
 ) -> DataFrame:
@@ -337,12 +324,12 @@ def _snm_candidates(
     norm = (
         key_expr
         if key_expr is not None
-        else F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]+", "")
+        else F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", "")
     )
     keyed = (
-        docs.filter(F.col(text_col).isNotNull() & (F.length(F.trim(text_col)) > 0))
+        docs.filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
         .select(
-            F.col(id_col).alias("doc"),
+            F.col("doc_id").alias("doc"),
             F.substring(norm, 1, key_len).alias("skey"),
             payload.alias("pay"),
         )
@@ -378,8 +365,6 @@ def edit_distance_pairs(
     max_chars: int = 512,
     key_len: int = 64,
     block_len: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Levenshtein-verified near-dup pairs over the sorted-neighborhood
     sliding window — the character-level verifier the SNM literature pairs
@@ -397,11 +382,11 @@ def edit_distance_pairs(
     not O(len^2).
     """
     pay = F.substring(
-        F.trim(F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]+", " ")),
+        F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " ")),
         1,
         max_chars,
     )
-    pairs = _snm_candidates(docs, window, key_len, block_len, text_col, id_col, pay)
+    pairs = _snm_candidates(docs, window, key_len, block_len, pay)
     dist = F.levenshtein(F.col("pa"), F.col("pb"), max_dist)
     scored = pairs.select(
         "doc_a", "doc_b", dist.cast("long").alias("dist")
@@ -409,86 +394,55 @@ def edit_distance_pairs(
     return scored.filter((F.col("dist") >= 0) & (F.col("dist") <= max_dist))
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    k: int = 32,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """k-permutation MinHash signatures, pure column expressions.
+def minhash_signatures(docs: DataFrame, k: int = 32) -> DataFrame:
+    """k-permutation MinHash signatures over 3-gram shingles, pure column
+    expressions, JVM-side and deterministic at any parallelism.
 
-    Permutation j = hash(shingle, j) mod P; signature element = min over
-    the doc's shingles. JVM-side and deterministic at any parallelism.
-    ``hash_mode="md5"`` uses the DuckDB-replayable 60-bit md5 (slower but
-    oracle-checkable); ``"xxhash64"`` is the production fast path.
+    ONE md5 per shingle (:func:`md5_60`, materialized as its own
+    projection), then k affine permutations (a_j*h + b_j) mod P over the
+    reduced hash; signature element j = min over the doc's shingles. One
+    md5 per shingle instead of one per (shingle, j) pair, and DuckDB
+    replays both md5 and the integer constants bit-for-bit, so the SQL
+    oracle recomputes the exact signatures. h is reduced mod P first so
+    a_j*h never overflows int64.
     """
     # project tokens, then the shingle array, each ONCE (see shingled):
     # referencing raw expressions inside all k permutation expressions
     # would re-tokenize and re-build the n-gram array k times per row (no
     # CSE across sibling expressions) — measured 20x slower on long docs
-    with_sh = shingled(docs, n, text_col, id_col)
+    hs = shingled(docs).select(
+        "doc",
+        F.transform(F.col("sh"), lambda s: F.pmod(md5_60(s), F.lit(HASH_P))).alias("hs"),
+    )
 
-    if hash_mode == "md5":
-        # ONE md5 per shingle (materialized as its own projection), then k
-        # affine permutations (a_j*h + b_j) mod P over the reduced hash —
-        # 16x fewer md5 evaluations than hashing (shingle, j) pairs, and
-        # the integer constants replay verbatim in the SQL oracle. h is
-        # reduced mod P first so a_j*h never overflows int64.
-        hs = with_sh.select(
-            "doc",
-            F.transform(
-                F.col("sh"), lambda s: F.pmod(md5_60(s), F.lit(HASH_P))
-            ).alias("hs"),
-        )
-        def perm(a: int, b: int):
-            # closure (not default args): F.transform treats any 2+-param
-            # lambda as (element, array_index) and would shadow a/b
-            return F.array_min(
-                F.transform(F.col("hs"), lambda h: F.pmod(a * h + b, F.lit(HASH_P)))
-            )
-
-        sig = F.array(*[perm(a, b) for a, b in affine_coeffs(k)])
-        return hs.select("doc", sig.alias("sig"))
-
-    def perm_min(j: int):
-        # NB: the lambda must take exactly ONE argument — a two-arg lambda
-        # (e.g. `lambda s, j=j`) is treated by F.transform as
-        # (element, array_index) and silently shadows the closure variable
+    def perm(a: int, b: int):
+        # closure (not default args): F.transform treats any 2+-param
+        # lambda as (element, array_index) and would shadow a/b
         return F.array_min(
-            F.transform(
-                F.col("sh"), lambda s: F.pmod(F.xxhash64(s, F.lit(j)), F.lit(HASH_P))
-            )
+            F.transform(F.col("hs"), lambda h: F.pmod(a * h + b, F.lit(HASH_P)))
         )
 
-    sig = F.array(*[perm_min(j) for j in range(k)])
-    return with_sh.select("doc", sig.alias("sig"))
+    sig = F.array(*[perm(a, b) for a, b in affine_coeffs(k)])
+    return hs.select("doc", sig.alias("sig"))
 
 
-def _banded_signatures(
-    docs: DataFrame,
-    k: int,
-    bands: int,
-    n: int,
-    text_col: str,
-    id_col: str,
-    hash_mode: str,
-) -> DataFrame:
+def _check_bands(k: int, bands: int) -> None:
+    if bands < 1 or k % bands:
+        raise ValueError(f"bands={bands} must be >= 1 and divide k={k}")
+
+
+def _banded_signatures(docs: DataFrame, k: int, bands: int) -> DataFrame:
     """(doc, band, bucket) rows: the signature split into ``bands`` band
     keys — the LSH index layout shared by the self-join
     (:func:`minhash_lsh_pairs`) and the asymmetric delta-vs-index probe
-    (:func:`minhash_incremental_pairs`)."""
-    assert k % bands == 0
+    (:func:`minhash_incremental_pairs`). The bucket key is the band slice
+    itself as a string (SQL-replayable)."""
     r = k // bands
-    sigs = minhash_signatures(docs, k, n, text_col, id_col, hash_mode)
+    sigs = minhash_signatures(docs, k)
 
     def bucket(bi: int):
         sliced = F.slice("sig", bi * r + 1, r)
-        if hash_mode == "md5":
-            # string bucket key = the band slice itself (SQL-replayable)
-            return F.concat_ws(",", F.transform(sliced, lambda x: x.cast("string")))
-        return F.xxhash64(sliced).cast("string")
+        return F.concat_ws(",", F.transform(sliced, lambda x: x.cast("string")))
 
     return sigs.select(
         "doc",
@@ -503,33 +457,15 @@ def _banded_signatures(
     ).select("doc", "bb.band", "bb.bucket")
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    k: int = 32,
-    bands: int = 8,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, k: int = 32, bands: int = 8) -> DataFrame:
     """LSH candidate pairs: band the signature, bucket-join per band.
 
     Cost is O(docs x bands) for bucketing plus within-bucket pairing — the
     100 TB-safe candidate generator. Pairs are distinct; verify with
     ngram_jaccard on the candidates if exact scores are needed.
     """
-    banded = _banded_signatures(docs, k, bands, n, text_col, id_col, hash_mode)
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
-    )
+    _check_bands(k, bands)
+    return self_join(_banded_signatures(docs, k, bands), "doc", ["band", "bucket"]).distinct()
 
 
 def _pair_overlaps(cand: DataFrame, sets: DataFrame) -> DataFrame:
@@ -567,14 +503,7 @@ def _jaccard_at_least(overlaps: DataFrame, threshold: float) -> DataFrame:
 
 
 def minhash_verified_pairs(
-    docs: DataFrame,
-    threshold: float = 0.1,
-    k: int = 32,
-    bands: int = 8,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_mode: str = "xxhash64",
+    docs: DataFrame, threshold: float = 0.1, k: int = 32, bands: int = 8
 ) -> DataFrame:
     """MinHash-candidates -> exact-Jaccard-verify, composed as ONE operator.
 
@@ -594,14 +523,12 @@ def minhash_verified_pairs(
     ``shingled`` subplan, so Spark's cache serves it too. A candidate with
     no shared shingle scores 0.0 and passes only a threshold <= 0.
     """
-    sets = scratch_persist(shingled(docs, n, text_col, id_col))
-    cand = minhash_lsh_pairs(docs, k, bands, n, text_col, id_col, hash_mode)
+    sets = scratch_persist(shingled(docs))
+    cand = minhash_lsh_pairs(docs, k, bands)
     return _jaccard_at_least(_pair_overlaps(cand, sets), threshold)
 
 
-def simhash_fingerprints(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     """60-bit SimHash over word tokens — codegen'd explode + wide sum.
 
     Per-token 60-bit md5 hash; bit b contributes +1/-1 to counter b;
@@ -615,8 +542,8 @@ def simhash_fingerprints(
     bit-identical in DuckDB, so the driver oracle replays it.
     """
     base = docs.filter(
-        F.col(text_col).isNotNull() & (F.length(F.trim(text_col)) > 0)
-    ).select(F.col(id_col).alias("doc"), tokens(F.col(text_col)).alias("_toks"))
+        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
+    ).select(F.col("doc_id").alias("doc"), tokens(F.col("text")).alias("_toks"))
     tok = base.select("doc", F.explode("_toks").alias("_t")).withColumn(
         "_h", md5_60(F.col("_t"))
     )
@@ -639,11 +566,12 @@ def simhash_fingerprints(
 def _segment_layout(n_seg: int, bits: int = SIMHASH_BITS) -> list[tuple[int, int]]:
     """(offset, width) for ``n_seg`` disjoint segments covering all bits.
 
-    Widths differ by at most 1 so no segment is empty — an empty (all-zero)
-    segment would collide every pair and degenerate to a cross join.
+    Widths differ by at most 1, and ``1 <= n_seg <= bits`` (checked by
+    :func:`simhash_near_pairs`) keeps every segment non-empty — an empty
+    (all-zero) segment would collide every pair and degenerate to a cross
+    join.
     """
     base, extra = divmod(bits, n_seg)
-    assert base >= 1, f"cannot split {bits} bits into {n_seg} non-empty segments"
     widths = [base + 1] * extra + [base] * (n_seg - extra)
     out, off = [], 0
     for w in widths:
@@ -652,9 +580,7 @@ def _segment_layout(n_seg: int, bits: int = SIMHASH_BITS) -> list[tuple[int, int
     return out
 
 
-def simhash_near_pairs(
-    docs: DataFrame, max_hamming: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup candidates with *sound* segment blocking.
 
     Blocks = ``max_hamming + 1`` disjoint bit segments: a pair within the
@@ -666,10 +592,11 @@ def simhash_near_pairs(
     Wider radii mean narrower segments (coarser buckets, more candidates) —
     the inherent SimHash selectivity/radius trade-off, now explicit.
     """
-
+    if not 0 <= max_hamming < SIMHASH_BITS:
+        raise ValueError(f"max_hamming={max_hamming} must be in [0, {SIMHASH_BITS})")
     # both sides of the self-join consume the fingerprint subtree — persist
     # so the hash + wide aggregation runs once, not twice
-    sh = scratch_persist(simhash_fingerprints(docs, text_col, id_col))
+    sh = scratch_persist(simhash_fingerprints(docs))
     segs = _segment_layout(max_hamming + 1)
     segments = sh.select(
         "doc",
@@ -688,20 +615,10 @@ def simhash_near_pairs(
             )
         ).alias("qq"),
     ).select("doc", "simhash", "qq.q", "qq.v")
-    a, b = segments.alias("a"), segments.alias("b")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
-        a.join(
-            b,
-            (F.col("a.q") == F.col("b.q"))
-            & (F.col("a.v") == F.col("b.v"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            ham.alias("hamming"),
-        )
+        self_join(segments, "doc", ["q", "v"], carry=("simhash",))
+        .select("doc_a", "doc_b", ham.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
@@ -720,8 +637,6 @@ def winnow_fingerprints(
     docs: DataFrame,
     k: int = 4,
     w: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Winnowing fingerprint selection (Schleimer et al., SIGMOD 2003 —
     the MOSS scheme): hash every k-token gram, then in each sliding window
@@ -741,13 +656,9 @@ def winnow_fingerprints(
     Per-document window frames only — never a global sort; selection of a
     1e9-doc corpus is an embarrassingly parallel scan + local window.
     """
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
     base = (
-        docs.filter(
-            F.col(text_col).isNotNull()
-            & (F.length(F.trim(F.col(text_col))) > 0)
-        )
-        .select(F.col(id_col).alias("doc_id"), toks.alias("__toks"))
+        docs.filter(F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0))
+        .select("doc_id", tokens(F.col("text")).alias("__toks"))
         .filter(F.size("__toks") >= k)
     )
     kg = base.select(
@@ -787,13 +698,7 @@ def winnow_fingerprints(
     )
 
 
-def prefix_filter_pairs(
-    docs: DataFrame,
-    threshold_pct: int = 70,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def prefix_filter_pairs(docs: DataFrame, threshold_pct: int = 70) -> DataFrame:
     """EXACT set-similarity self-join via prefix filtering (AllPairs /
     PPJoin, Bayardo et al. WWW'07): provably every pair with shingle
     Jaccard >= t, with the candidate join restricted to each doc's
@@ -820,7 +725,7 @@ def prefix_filter_pairs(
     # four consumers read the shingle sets (posting x2 via ranked, sa, sb)
     # and `shingled` output is provably non-empty — barrier + explode_ne,
     # the same shield every sibling multi-consumer operator carries
-    sets = scratch_persist(shingled(docs, n, text_col, id_col))
+    sets = scratch_persist(shingled(docs))
     posting = sets.select("doc", explode_ne(F.col("sh")).alias("shingle"))
     dfq = posting.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc").orderBy("df", "shingle")
@@ -840,16 +745,7 @@ def prefix_filter_pairs(
     prefix = scratch_persist(
         ranked.filter(F.col("rn") <= prefix_len).select("doc", "shingle")
     )
-    cand = (
-        prefix.alias("a")
-        .join(
-            prefix.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
-    )
+    cand = self_join(prefix, "doc", ["shingle"]).distinct()
     uni = F.col("n_a") + F.col("n_b") - F.col("inter")
     return (
         _pair_overlaps(cand, sets)
@@ -883,10 +779,9 @@ def segment_firstseen(docs: DataFrame, width: int = 16) -> DataFrame:
     thing this operator collapses) partial-aggregates before the
     exchange. The aggregate row IS the survivor — no join-back pass.
     """
-    toks = F.split(F.trim(F.col("text")), r"\s+")
     base = docs.filter(
         F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
-    ).select("doc_id", toks.alias("toks"))
+    ).select("doc_id", tokens(F.col("text")).alias("toks"))
     idx = base.select(
         "doc_id",
         "toks",
@@ -922,10 +817,6 @@ def minhash_incremental_pairs(
     threshold: float = 0.1,
     k: int = 32,
     bands: int = 8,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Incremental dedup: probe a NEW ingest batch against the existing
     corpus's MinHash index — the daily-crawl flow, where re-running the
@@ -937,7 +828,7 @@ def minhash_incremental_pairs(
     layout (:func:`_banded_signatures`); candidates come from the
     ASYMMETRIC band-bucket join delta -> index (no delta-delta or
     index-index pairs — intra-batch dups are the self-join's job), then
-    exact n-gram Jaccard is verified only on candidates with the same
+    exact 3-gram Jaccard is verified only on candidates with the same
     :func:`_pair_overlaps` and float threshold as
     :func:`minhash_verified_pairs` (delta doc as ``doc_a``, index doc as
     ``doc_b``, renamed back to ``doc_new``/``doc_idx`` on output).
@@ -951,12 +842,13 @@ def minhash_incremental_pairs(
     """
     # the shingle sets feed both banding sides and the verify; the
     # signature pass's identical `shingled` subplan is served from cache
-    sets = scratch_persist(shingled(docs, n, text_col, id_col))
+    _check_bands(k, bands)
+    sets = scratch_persist(shingled(docs))
     is_delta = (
         F.pmod(md5_60(F.concat(F.lit("inc:"), F.col("doc").cast("string"))), F.lit(delta_mod))
         == 0
     )
-    banded = _banded_signatures(docs, k, bands, n, text_col, id_col, hash_mode).select(
+    banded = _banded_signatures(docs, k, bands).select(
         "doc", "band", "bucket", is_delta.alias("is_delta")
     )
     d, i = banded.filter("is_delta").alias("d"), banded.filter("NOT is_delta").alias("i")

@@ -26,6 +26,7 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import explode_ne, self_join
 from .scratch import scratch_persist
 
 
@@ -45,11 +46,12 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _side(df: DataFrame, id_col: str, vec_col: str, p: str) -> DataFrame:
-    """``(p_id, p_vec array<double>)`` projection of one join side."""
+def _side(df: DataFrame, p: str) -> DataFrame:
+    """``(p_id, p_vec array<double>)`` projection of one join side of a
+    ``(vec_id, embedding)`` table."""
     return df.select(
-        F.col(id_col).alias(f"{p}_id"),
-        F.col(vec_col).cast("array<double>").alias(f"{p}_vec"),
+        F.col("vec_id").alias(f"{p}_id"),
+        F.col("embedding").cast("array<double>").alias(f"{p}_vec"),
     )
 
 
@@ -78,17 +80,11 @@ def _cosine_top_k(cand: DataFrame, k: int) -> DataFrame:
     return _top_k(scored, k)
 
 
-def brute_force_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact cosine top-k of every query against the vector table: every
     pair is a candidate. Self-matches are excluded."""
-    v = _side(vectors, id_col, vec_col, "nb")
-    q = _side(queries, id_col, vec_col, "q")
+    v = _side(vectors, "nb")
+    q = _side(queries, "q")
     return _cosine_top_k(q.crossJoin(v), k)
 
 
@@ -142,8 +138,6 @@ def _explode_bands(df: DataFrame, vec_col: str, plane_sets) -> DataFrame:
     # a bare explode would let InferFiltersFromGenerate rebuild all B*r
     # hyperplane dot products in a synthesized per-row filter under sessions
     # not configured by ner_spark.session (see dedup.explode_ne)
-    from .dedup import explode_ne
-
     return df.select(
         "*", explode_ne(banded_buckets(vec_col, plane_sets)).alias("_bb")
     ).select("*", F.col("_bb.band").alias("_band"), F.col("_bb.bucket").alias("_bucket")).drop("_bb")
@@ -157,8 +151,6 @@ def lsh_topk(
     planes_per_band: int = 4,
     dim: int = 64,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: score only candidates colliding in >=1 band.
 
@@ -168,8 +160,8 @@ def lsh_topk(
     before scoring so each pair is scored once.
     """
     plane_sets = band_planes(dim, bands, planes_per_band, seed)
-    vb = _explode_bands(_side(vectors, id_col, vec_col, "nb"), "nb_vec", plane_sets)
-    qb = _explode_bands(_side(queries, id_col, vec_col, "q"), "q_vec", plane_sets)
+    vb = _explode_bands(_side(vectors, "nb"), "nb_vec", plane_sets)
+    qb = _explode_bands(_side(queries, "q"), "q_vec", plane_sets)
     cand = (
         qb.join(vb, ["_band", "_bucket"])
         .select("q_id", "q_vec", "nb_id", "nb_vec")
@@ -242,8 +234,6 @@ def ivf_topk(
     centroids: list[list[float]],
     k: int = 5,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate top-k: exact cosine only within the ``nprobe``
     cells nearest to each query.
@@ -254,10 +244,8 @@ def ivf_topk(
     out to nprobe (query, cell) rows; the candidate join is an equi-join
     on cell, never a cross join.
     """
-    v = _side(vectors, id_col, vec_col, "nb").withColumn(
-        "cell", ivf_assign("nb_vec", centroids)
-    )
-    probed = _probe(_side(queries, id_col, vec_col, "q"), centroids, nprobe)
+    v = _side(vectors, "nb").withColumn("cell", ivf_assign("nb_vec", centroids))
+    probed = _probe(_side(queries, "q"), centroids, nprobe)
     # broadcast the (small) probed query fan-out: the vector table is the
     # big side and must not shuffle on a 16-value key — with the broadcast
     # it is scanned in place (and partition-pruned by cell when the index
@@ -272,41 +260,24 @@ def embedding_near_dup_pairs(
     planes_per_band: int = 8,
     dim: int = 64,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via banded LSH self-join.
 
     r=8, B=6 gives candidate recall 1-(1-p^8)^6 ~ 0.96 at cosine 0.95
     (p ~ 0.899) vs ~0.43 for the single-band design; false-candidate rate
     on orthogonal pairs is ~B/2^r ~ 2.3%, all killed by the exact-cosine
-    verify below.
+    verify below. Candidates come from :func:`dedup.self_join` on the
+    (band, bucket) key.
     """
-
     plane_sets = band_planes(dim, bands, planes_per_band, seed)
     # both sides of the self-join consume the banded signatures (B*r
     # interpreted-HOF dot products per row); a barrier computes them once
-    vb = scratch_persist(
-        _explode_bands(_side(vectors, id_col, vec_col, "v"), "v_vec", plane_sets)
-    )
-    a, b = vb.alias("a"), vb.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a._band") == F.col("b._band"))
-            & (F.col("a._bucket") == F.col("b._bucket"))
-            & (F.col("a.v_id") < F.col("b.v_id")),
-        )
-        .select(
-            F.col("a.v_id").alias("doc_a"),
-            F.col("a.v_vec").alias("vec_a"),
-            F.col("b.v_id").alias("doc_b"),
-            F.col("b.v_vec").alias("vec_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
+    vb = scratch_persist(_explode_bands(_side(vectors, "v"), "v_vec", plane_sets))
+    cand = self_join(vb, "v_id", ["_band", "_bucket"], carry=("v_vec",)).dropDuplicates(
+        ["doc_a", "doc_b"]
     )
     return (
-        cand.withColumn("score", F.round(cosine(F.col("vec_a"), F.col("vec_b")), 4))
+        cand.withColumn("score", F.round(cosine(F.col("v_vec_a"), F.col("v_vec_b")), 4))
         .filter(F.col("score") >= threshold)
         .select("doc_a", "doc_b", "score")
     )
@@ -347,8 +318,6 @@ def ivfpq_topk(
     books: list[list[list[float]]],
     k: int = 5,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF+PQ (the FAISS IVFADC composition): coarse IVF cells prune the
     candidate set, then candidates are ranked by the asymmetric-distance
@@ -370,7 +339,7 @@ def ivfpq_topk(
     # every centroid-distance expression below is a *_sql string form: one
     # parser call apiece instead of a py4j round-trip per literal/lambda
     # (Column-API construction alone measured ~13 s for this operator)
-    coded = _side(vectors, id_col, vec_col, "nb").select(
+    coded = _side(vectors, "nb").select(
         "nb_id",
         ivf_assign("nb_vec", centroids).alias("cell"),
         *[
@@ -378,7 +347,7 @@ def ivfpq_topk(
             for m in range(n_sub)
         ],
     )
-    probed = _probe(_side(queries, id_col, vec_col, "q"), centroids, nprobe).select(
+    probed = _probe(_side(queries, "q"), centroids, nprobe).select(
         "q_id",
         "cell",
         *[

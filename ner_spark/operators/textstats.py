@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
+
 #: tiny per-language stopword sets for the n-gram/stopword heuristic
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
     "en": ("the", "and", "of", "to", "a"),
@@ -22,16 +24,8 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 FP_P = 1_000_000_007
 
 
-def token_col(col: Column) -> Column:
-    """Whitespace tokens. NB: on empty/whitespace-only text this yields
-    ``['']`` (size 1, the split semantics both engines share), so a blank
-    document scores n_tokens=1 — filter empties FIRST, as every driver
-    query and the curation funnel's empty-text gate do."""
-    return F.split(F.trim(col), r"\s+")
-
-
 def stopword_hits(col: Column, words: tuple[str, ...]) -> Column:
-    return F.size(F.filter(token_col(col), lambda t: t.isin(*words)))
+    return F.size(F.filter(tokens(col), lambda t: t.isin(*words)))
 
 
 def lang_scores(col: Column) -> dict[str, Column]:
@@ -53,7 +47,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Length / punctuation / stopword / uppercase features + a composite
     quality score in [0,1] for filter thresholds."""
     t = F.col(text_col)
-    toks = token_col(t)
+    toks = tokens(t)
     n_tokens = F.size(toks)
     n_chars = F.length(t)
     punct = n_chars - F.length(F.regexp_replace(t, r"[.,;:!?]", ""))
@@ -209,7 +203,7 @@ def repetition_features(df: DataFrame, text_col: str = "text", id_col: str = "do
     value))`` so the aggregation keeps map-side combine and ties break
     deterministically toward the lexicographically larger value.
     """
-    toks = token_col(F.col(text_col))
+    toks = tokens(F.col(text_col))
     base = (
         df.filter(F.col(text_col).isNotNull())
         .select(
@@ -289,7 +283,7 @@ def doc_fingerprint(col: Column) -> Column:
     identically in ANSI SQL for the oracle.
     """
     return F.aggregate(
-        token_col(col),
+        tokens(col),
         F.lit(0).cast("long"),
         lambda acc, tok: F.pmod(
             acc * 31 + F.length(tok) * 7 + F.ascii(F.substring(tok, 1, 1)),

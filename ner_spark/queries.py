@@ -401,9 +401,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
 def dedup_minhash_lsh(spark, sf_dir):
     from .operators.dedup import minhash_lsh_pairs
 
-    return minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"), k=16, bands=4, hash_mode="md5"
-    )
+    return minhash_lsh_pairs(_t(spark, sf_dir, "documents"), k=16, bands=4)
 
 
 @query("dedup_minhash_verified")  # oracle attached below (candidates + exact verify)
@@ -415,7 +413,7 @@ def dedup_minhash_verified(spark, sf_dir):
     from .operators.dedup import minhash_verified_pairs
 
     return minhash_verified_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.1, k=16, bands=4, hash_mode="md5"
+        _t(spark, sf_dir, "documents"), threshold=0.1, k=16, bands=4
     )
 
 

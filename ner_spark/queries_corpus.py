@@ -77,9 +77,7 @@ def dedup_cluster_survivors(spark, sf_dir):
     from .operators.dedup import minhash_verified_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_verified_pairs(
-        docs, threshold=0.1, k=16, bands=4, hash_mode="md5"
-    )
+    pairs = minhash_verified_pairs(docs, threshold=0.1, k=16, bands=4)
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     cc = connected_components(edges)
     return cc.groupBy(F.col("component").alias("survivor")).agg(

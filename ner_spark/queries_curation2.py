@@ -153,7 +153,6 @@ def curation_flagship(spark, sf_dir):
         threshold=_CF_THRESHOLD,
         k=_CF_K,
         bands=_CF_BANDS,
-        hash_mode="md5",
     )
     cc = connected_components(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))

@@ -529,6 +529,7 @@ def _dedup_semantic_prune(spark, sf_dir):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from .operators.dedup import self_join
     from .operators.scratch import scratch_persist
     from .operators.similarity import _cell_structs_sql, cosine
     from .queries import _jittered_embeddings
@@ -546,18 +547,13 @@ def _dedup_semantic_prune(spark, sf_dir):
             "vec_id", "v", F.col("st.cell").alias("cell")
         )
     )
-    a, b = assigned.alias("a"), assigned.alias("b")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
+        self_join(assigned, "vec_id", ["cell"], carry=("v", "cell"))
         .select(
-            F.col("b.vec_id").alias("vec_id"),
-            F.col("a.vec_id").alias("keeper"),
-            F.col("a.cell").alias("cell"),
-            F.round(cosine(F.col("a.v"), F.col("b.v")), 4).alias("score"),
+            F.col("doc_b").alias("vec_id"),
+            F.col("doc_a").alias("keeper"),
+            F.col("cell_a").alias("cell"),
+            F.round(cosine(F.col("v_a"), F.col("v_b")), 4).alias("score"),
         )
         .filter(F.col("score") >= SEM_THRESHOLD)
     )

@@ -205,7 +205,6 @@ def dedup_incremental_minhash(spark, sf_dir):
         threshold=_INC_THRESHOLD,
         k=_INC_K,
         bands=_INC_BANDS,
-        hash_mode="md5",
     )
 
 

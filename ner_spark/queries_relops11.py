@@ -127,7 +127,7 @@ def dedup_blocking_eval(spark, sf_dir):
         docs, threshold=_BE_THRESHOLD, max_df=_NGRAM_MAX_DF
     ).select("doc_a", "doc_b", F.lit(True).alias("in_truth"))
     method = minhash_verified_pairs(
-        docs, threshold=_BE_THRESHOLD, k=_BE_K, bands=_BE_BANDS, hash_mode="md5"
+        docs, threshold=_BE_THRESHOLD, k=_BE_K, bands=_BE_BANDS
     ).select("doc_a", "doc_b", F.lit(True).alias("in_method"))
     rec = truth.join(method, ["doc_a", "doc_b"], "full_outer").select(
         F.coalesce("in_truth", F.lit(False)).alias("in_truth"),
@@ -275,7 +275,7 @@ def doc_template_score(spark, sf_dir):
     from .operators.dedup import explode_ne, shingled
 
     docs = _t(spark, sf_dir, "documents")
-    post = shingled(docs, 3).select("doc", explode_ne("sh").alias("g"))
+    post = shingled(docs).select("doc", explode_ne("sh").alias("g"))
     dfw = post.select(
         "doc", F.count(F.lit(1)).over(Window.partitionBy("g")).alias("df")
     )

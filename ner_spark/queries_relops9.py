@@ -353,7 +353,7 @@ def corpus_ngram_novelty(spark, sf_dir):
     The ingest-monitoring signal that flags when a crawl stops adding
     new content."""
     docs = _t(spark, sf_dir, "documents")
-    post = shingled(docs, 3).select("doc", explode_ne("sh").alias("g"))
+    post = shingled(docs).select("doc", explode_ne("sh").alias("g"))
     fd = post.select(
         "doc", F.min("doc").over(Window.partitionBy("g")).alias("first_doc")
     )

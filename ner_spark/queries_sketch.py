@@ -736,7 +736,8 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one extra distinct-aggregate) exists to make the sketch's error
     observable in the result itself.
     """
-    from .operators.dedup import _shingles_of, explode_ne, tokens
+    from .functions.text import tokens
+    from .operators.dedup import _shingles_of, explode_ne
 
     docs = _t(spark, sf_dir, "documents")
     base = docs.filter(

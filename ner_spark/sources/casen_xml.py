@@ -222,24 +222,6 @@ def parse_casen_markup(df: DataFrame, markup_col: str = "markup") -> DataFrame:
     )
 
 
-def casen_mentions_table(docs: DataFrame) -> DataFrame:
-    """Explode parsed docs into the engine's MENTIONS shape (method=casEN)."""
-    m = F.explode("mentions").alias("m")
-    return docs.select(F.col("doc_ids"), F.col("text"), m).select(
-        F.format_string("doc%08d", F.col("doc_ids")[0]).alias("doc_uid"),
-        # engine contract is files_id: array<string> (schemas.CLEAN_DOCS;
-        # apply_corrections' string sentinel requires it) — cast the parsed
-        # numeric ids so CasEN-ingested mentions flow through the chain
-        F.transform("doc_ids", lambda i: i.cast("string")).alias("files_id"),
-        F.col("m.NE").alias("NE"),
-        F.col("m.label").alias("label"),
-        F.col("m.start").alias("start"),
-        F.col("m.end").alias("end"),
-        F.lit("casEN").alias("method"),
-        F.col("m.grfs").alias("grfs"),
-    )
-
-
 def corpus_markup(doc_ids_col, text_col) -> "F.Column":
     """One doc's corpus serialization: ``<doc id="(1\\, 2\\,)">text</doc>``
     (reference writer: casen_config.py:151-157 — ids joined with escaped

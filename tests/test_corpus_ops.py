@@ -29,9 +29,7 @@ def test_cluster_survivors_known_clusters(spark):
     from ner_spark.operators.canonicalize import connected_components
     from ner_spark.operators.dedup import minhash_verified_pairs
 
-    pairs = minhash_verified_pairs(
-        _docs(spark, rows), threshold=0.3, k=16, bands=4, hash_mode="md5"
-    )
+    pairs = minhash_verified_pairs(_docs(spark, rows), threshold=0.3, k=16, bands=4)
     cc = connected_components(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )

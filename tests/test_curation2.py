@@ -43,7 +43,7 @@ def test_curation_flagship_matches_python_funnel(spark):
 
     kept_sdf = sdocs.filter(F.col("doc_id").isin([int(k) for k in keepers]))
     pairs = minhash_verified_pairs(
-        kept_sdf, threshold=_CF_THRESHOLD, k=_CF_K, bands=_CF_BANDS, hash_mode="md5"
+        kept_sdf, threshold=_CF_THRESHOLD, k=_CF_K, bands=_CF_BANDS
     ).collect()
     parent = {}
 

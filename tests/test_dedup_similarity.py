@@ -66,7 +66,9 @@ def test_jaccard_df_cap_drops_hot_shingles(spark):
     assert capped == []
 
 
-def test_minhash_lsh_candidates_superset_of_high_jaccard(spark, corpus):
+def test_minhash_md5_mode_matches_shape(spark, corpus):
+    """The md5 (oracle-replayable) LSH candidates are a superset of the
+    high-Jaccard pairs and catch every planted dup."""
     exact = {
         (r["doc_a"], r["doc_b"])
         for r in D.ngram_jaccard_pairs(corpus, threshold=0.6).collect()
@@ -77,17 +79,29 @@ def test_minhash_lsh_candidates_superset_of_high_jaccard(spark, corpus):
     }
     # 16 bands of r=2: P(candidate) = 1-(1-J^2)^16 -> J>=0.6 => ~0.999
     assert exact <= cand
-
-
-def test_minhash_md5_mode_matches_shape(spark, corpus):
-    """md5 hash mode (the oracle-replayable path) finds the same planted
-    dups as the xxhash64 fast path at these band settings."""
-    cand = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.minhash_lsh_pairs(corpus, k=32, bands=16, hash_mode="md5").collect()
-    }
     assert (0, 100) in cand  # exact dup always collides
     assert (0, 1) in cand and (10, 11) in cand
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda docs: D.minhash_lsh_pairs(docs, k=30, bands=8),
+        lambda docs: D.minhash_lsh_pairs(docs, k=32, bands=0),
+        lambda docs: D.minhash_verified_pairs(docs, k=30, bands=8),
+        lambda docs: D.minhash_incremental_pairs(docs, k=32, bands=0),
+        lambda docs: D.simhash_near_pairs(docs, max_hamming=60),
+        lambda docs: D.simhash_near_pairs(docs, max_hamming=-1),
+    ],
+    ids=["k_not_banded", "zero_bands", "verified_k_not_banded",
+         "incremental_zero_bands", "hamming_too_wide", "hamming_negative"],
+)
+def test_blocking_shape_errors_raise_value_error(spark, corpus, build):
+    """A band count that does not divide k would silently band only part of
+    the signature, a 0-bit simhash segment would pair every doc with every
+    other; both are rejected up front, also under ``python -O``."""
+    with pytest.raises(ValueError):
+        build(corpus)
 
 
 def test_simhash_properties(spark, corpus):

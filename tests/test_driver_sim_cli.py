@@ -65,6 +65,19 @@ def test_named_subset_embedding_family_queries():
     )
 
 
+def test_named_subset_near_dup_family_queries():
+    """The rest of the near-duplicate family — shingle, MinHash, SimHash,
+    winnowing, segment, sorted-neighborhood and edit-distance operators and
+    the queries built on ``shingled``/``tokens`` — hash-checked against
+    their oracles."""
+    _assert_subset_ok(
+        "dedup_ngram_jaccard,dedup_minhash_lsh,dedup_simhash,dedup_containment,"
+        "dedup_winnowing,dedup_segment_firstseen,dedup_sorted_neighborhood,"
+        "dedup_snm_multipass,dedup_edit_distance,contamination_check,"
+        "corpus_ngram_novelty,doc_template_score,sketch_hll_distinct"
+    )
+
+
 def test_register_ivf_oracle_drops_and_restores(tmp_path):
     """Importing the registry registers all four data-dependent oracles;
     ``register_ivf_oracle`` drops them for an sf_dir without embeddings

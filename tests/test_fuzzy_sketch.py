@@ -114,7 +114,8 @@ class TestHLL:
 
         # the registry query reads sf_dir; drive the same construction
         # directly on the synthetic frame
-        from ner_spark.operators.dedup import _shingles_of, tokens
+        from ner_spark.functions.text import tokens
+        from ner_spark.operators.dedup import _shingles_of
 
         base = df.select("lang", tokens(F.col("text")).alias("_toks"))
         flat = base.select(

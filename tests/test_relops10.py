@@ -53,7 +53,6 @@ def test_incremental_equals_selfjoin_restricted_to_cross_pairs(spark):
         threshold=_INC_THRESHOLD,
         k=_INC_K,
         bands=_INC_BANDS,
-        hash_mode="md5",
     ).collect()
     exp = {}
     for r in full:

@@ -36,7 +36,7 @@ def test_blocking_eval_matches_python_reconciliation(spark):
     method = {
         (r["doc_a"], r["doc_b"])
         for r in minhash_verified_pairs(
-            docs, threshold=_BE_THRESHOLD, k=_BE_K, bands=_BE_BANDS, hash_mode="md5"
+            docs, threshold=_BE_THRESHOLD, k=_BE_K, bands=_BE_BANDS
         ).collect()
     }
     r = dedup_blocking_eval(spark, SF).collect()[0]
