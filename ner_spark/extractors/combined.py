@@ -34,6 +34,8 @@ from pyspark.sql import types as T
 
 from .. import schemas
 from ..functions.text import context_window
+from ..operators.consensus import SOURCE_ORDER
+from ..synth import GAZ_GRF
 from .casen import _compile, _scan_doc, gazetteer_rows, pattern_rows
 from .model_stub import MODELS, _stub_scan
 
@@ -50,40 +52,34 @@ def combined_mentions(
     docs: DataFrame,
     gazetteer: DataFrame,
     patterns: DataFrame,
-    gaz_grf: dict[str, str] | None = None,
-    source_order: tuple[str, ...] = ("casEN", "spaCy", "stanza"),
-    skip_mod: int = 4,
-    flip_mod: int = 20,
-    window: int = 30,
+    source_order: tuple[str, ...] = SOURCE_ORDER,
     passthrough_cols: tuple[str, ...] = (),
     use_model: bool | None = None,
 ) -> DataFrame:
     """(doc_uid, text) -> ranked MENTIONS rows for all systems, one pass.
 
-    Emits the built-in sources ("casEN", "spaCy", "stanza") named in
-    ``source_order``, with ``_rank`` = their position in it; other names
-    hold a rank but emit nothing. ``gazetteer``/``patterns`` are small
-    dimension tables, collected once on the driver and broadcast to the
-    Python workers via the UDF closure (SURVEY.md §2 A2).
+    Emits the sources named in ``source_order`` (default: the consensus
+    fold order ``SOURCE_ORDER``), with ``_rank`` = their position in it;
+    other names hold a rank but emit nothing. ``gazetteer``/``patterns``
+    are small dimension tables, collected once on the driver and broadcast
+    to the Python workers via the UDF closure (SURVEY.md §2 A2); the rule
+    system's grf per label is ``synth.GAZ_GRF``.
 
     ``use_model=None`` probes the driver once per model source and routes
     it to the real model when one loads (spaCy ``fr_core_news_sm``, the
-    Stanza fr pipeline); True/False force the real model or the stub.
-    ``skip_mod``/``flip_mod`` tune the stub, which uses the source name as
-    its determinism salt, so the stubs disagree with each other and with
-    the rule system in a controlled, seeded way.
+    Stanza fr pipeline); True/False force the real model or the stub. The
+    stub uses the source name as its determinism salt, so the stubs
+    disagree with each other and with the rule system in a controlled,
+    seeded way (model_stub.py ``SKIP_MOD``/``FLIP_MOD``).
 
     ``passthrough_cols`` are carried from ``docs`` into the output
     projection unchanged (e.g. ``event_ts`` on the streaming path, which
     would otherwise need an unbounded stream-stream self-join to reattach).
     """
-    if gaz_grf is None:
-        from ..synth import GAZ_GRF as gaz_grf
-
     payload = (
         gazetteer_rows(gazetteer),
         pattern_rows(patterns),
-        tuple(sorted(gaz_grf.items())),
+        tuple(sorted(GAZ_GRF.items())),
     )
     sources = [
         (rank, name)
@@ -115,8 +111,7 @@ def combined_mentions(
                 found = MODELS[name][2](doc_uids, texts, nlp)
             else:
                 found = [
-                    _stub_scan(u, t, gaz_re, by_surface, skip_mod, flip_mod, name)
-                    if t else []
+                    _stub_scan(u, t, gaz_re, by_surface, name) if t else []
                     for u, t in zip(doc_uids, texts)
                 ]
             for row, ms in zip(out, found):
@@ -134,6 +129,6 @@ def combined_mentions(
         F.col("m.end").alias("end"),
         F.col("m.method").alias("method"),
         F.col("m.grfs").alias("grfs"),
-        context_window(F.col("text"), F.col("m.start"), F.col("m.end"), window).alias("context"),
+        context_window(F.col("text"), F.col("m.start"), F.col("m.end")).alias("context"),
         F.col("m.rank").alias("_rank"),
     )

@@ -11,10 +11,11 @@ a model loaded lazily once per Python worker.
 Without the model (an import-try fails) the batch falls back to a
 *deterministic stub*: it finds the same gazetteer surface forms a model
 would recognize but — keyed by a stable md5 of (doc_uid, span, salt) —
-skips ~20% of them and relabels ~10%/5%. That is exactly the phenomenon mix
-(1/2/3-way agreement, conflicting labels) the consensus and priority-vote
-stages exist to resolve, and it is reproducible bit-for-bit at any
-parallelism, which the correctness oracle and the scaling bench both need.
+skips one in ``SKIP_MOD`` of them and relabels one in ``FLIP_MOD``. That
+is exactly the phenomenon mix (1/2/3-way agreement, conflicting labels)
+the consensus and priority-vote stages exist to resolve, and it is
+reproducible bit-for-bit at any parallelism, which the correctness oracle
+and the scaling bench both need.
 """
 
 from __future__ import annotations
@@ -22,6 +23,11 @@ from __future__ import annotations
 import hashlib
 
 _ROTATE = {"PER": "LOC", "LOC": "ORG", "ORG": "PER"}
+
+#: the stub skips a gazetteer hit when its skip hash is 0 mod SKIP_MOD, and
+#: rotates its label when its flip hash is 0 mod FLIP_MOD
+SKIP_MOD = 4
+FLIP_MOD = 20
 
 
 def _crc(*parts) -> int:
@@ -147,15 +153,15 @@ def _stanza_scan_batch(doc_uids, texts, nlp):
     ]
 
 
-def _stub_scan(doc_uid: str, text: str, gaz_re, by_surface, skip_mod: int, flip_mod: int, salt: str):
+def _stub_scan(doc_uid: str, text: str, gaz_re, by_surface, salt: str):
     out = []
     for m in gaz_re.finditer(text):
         ne = m.group(0)
         s, e = m.start(), m.end()
-        if _crc(doc_uid, s, e, salt, "skip") % skip_mod == 0:
+        if _crc(doc_uid, s, e, salt, "skip") % SKIP_MOD == 0:
             continue
         label = by_surface[ne]
-        if _crc(doc_uid, s, e, salt, "flip") % flip_mod == 0:
+        if _crc(doc_uid, s, e, salt, "flip") % FLIP_MOD == 0:
             label = _ROTATE[label]
         out.append({"NE": ne, "label": label, "start": s, "end": e, "grfs": None})
     return out

@@ -44,6 +44,10 @@ FINAL_METHODS = (
 
 KEYS = ("doc_uid", "NE", "label", "start", "end")
 
+#: labels the priority vote may promote (reference: consensus.ipynb cell 6,
+#: ``NerConfig(labels_priority=["PER"])``)
+LABELS_PRIORITY = ("PER",)
+
 
 def _first_by_rank(col: Column, rank: Column) -> Column:
     """First non-null value in source-rank order (pandas combine_first
@@ -57,18 +61,16 @@ def _first_by_rank(col: Column, rank: Column) -> Column:
     )["v"]
 
 
-def fuse_ranked(
-    unioned: DataFrame, num_partitions: int | None = None, n_ranks: int = 3
-) -> DataFrame:
+def fuse_ranked(unioned: DataFrame) -> DataFrame:
     """C1: union + groupBy fusion of one ranked mentions table (``_rank`` =
-    fold position in [0, n_ranks): the fused one-pass extractor's output,
-    plus any other source unioned on under its own rank). One
-    repartition on doc_uid — the aggregation and every downstream per-doc
-    window reuse it.
+    fold position in ``SOURCE_ORDER``: the fused one-pass extractor's
+    output). One repartition on doc_uid — the aggregation and every
+    downstream per-doc window reuse it.
 
-    The ordered provenance concat is built from ``n_ranks`` declarative
-    min-slots joined with ``concat_ws`` (which skips absent/NULL slots) —
-    NOT from ``array_sort``+``transform``+``array_join`` over a
+    The ordered provenance concat is built from one declarative min-slot
+    per ``SOURCE_ORDER`` rank joined with ``concat_ws`` (which skips
+    absent/NULL slots, so input with fewer ranks fuses the same) — NOT
+    from ``array_sort``+``transform``+``array_join`` over a
     ``collect_list``: higher-order functions on aggregation results run
     interpreted, and their per-element lambda evaluation scales
     NEGATIVELY with task threads (measured 24 s for the bare
@@ -77,18 +79,15 @@ def fuse_ranked(
     one row per (mention key, rank) exists by construction, so
     min(when(rank=i, method)) is exact.
     """
-    if num_partitions:
-        unioned = unioned.repartition(num_partitions, "doc_uid")
-    else:
-        unioned = unioned.repartition("doc_uid")
-
     rank = F.col("_rank")
+    n_ranks = len(SOURCE_ORDER)
     slots = [
         F.min(F.when(rank == i, F.col("method"))).alias(f"_m{i}")
         for i in range(n_ranks)
     ]
     return (
-        unioned.groupBy(*KEYS)
+        unioned.repartition("doc_uid")
+        .groupBy(*KEYS)
         .agg(
             *slots,
             _first_by_rank(F.col("grfs"), rank).alias("grfs"),
@@ -99,11 +98,11 @@ def fuse_ranked(
     )
 
 
-def priority_vote(df: DataFrame, labels_priority: tuple[str, ...] = ("PER",)) -> DataFrame:
+def priority_vote(df: DataFrame) -> DataFrame:
     """W1: strict-majority vote (reference: ner_config.py:120-156).
 
     Within (doc_uid, start, end, NE) groups — same span+surface, any label —
-    a row gets ``_priority`` appended iff its label is in ``labels_priority``,
+    a row gets ``_priority`` appended iff its label is in ``LABELS_PRIORITY``,
     the group has >1 rows, its weight (#agreeing systems) is the group max,
     and it is the *unique* maximum.
     """
@@ -111,7 +110,7 @@ def priority_vote(df: DataFrame, labels_priority: tuple[str, ...] = ("PER",)) ->
     weight = method_weight(F.col("method"))
     max_w = F.max(weight).over(w)
     mask = (
-        F.col("label").isin(list(labels_priority))
+        F.col("label").isin(list(LABELS_PRIORITY))
         & (F.count(F.lit(1)).over(w) > 1)
         & (weight == max_w)
         & (F.sum((weight == max_w).cast("int")).over(w) == 1)
@@ -122,10 +121,7 @@ def priority_vote(df: DataFrame, labels_priority: tuple[str, ...] = ("PER",)) ->
 
 
 def promote_trusted(
-    df: DataFrame,
-    combos: list[list[str]],
-    promoted: str = "casENOpti",
-    legacy_empty_missing: bool = False,
+    df: DataFrame, combos: list[list[str]], legacy_empty_missing: bool = False
 ) -> DataFrame:
     """F3: trusted-pattern promotion, both reference variants.
 
@@ -159,10 +155,16 @@ def promote_trusted(
     )
     return df.withColumn(
         "method",
-        F.when((F.col("method") == "casEN") & any_combo, F.lit(promoted)).otherwise(
+        F.when((F.col("method") == "casEN") & any_combo, F.lit("casENOpti")).otherwise(
             F.col("method")
         ),
     )
+
+
+def vote(ranked: DataFrame, combos: list[list[str]]) -> DataFrame:
+    """The consensus composition: C1 fusion -> W1 priority vote -> F3
+    trusted promotion, over the extractor's ranked mentions."""
+    return promote_trusted(priority_vote(fuse_ranked(ranked)), combos)
 
 
 def trust_filter(df: DataFrame, methods: tuple[str, ...] = FINAL_METHODS) -> DataFrame:
@@ -183,23 +185,18 @@ def dedup_mentions(df: DataFrame, keys: tuple[str, ...] = ("NE", "label", "doc_u
     )
 
 
-def order_mentions(df: DataFrame) -> DataFrame:
-    """W2: global order by first source id with pinned tie-breakers
-    (reference: ner_config.py:45-55; tie-breakers per SURVEY.md §7 hard #1)."""
-    return df.orderBy(F.col("files_id")[0], "start", "end", "NE", "label", "method")
-
-
 def order_mentions_indexed(df: DataFrame, scratch_dir: str | None = None) -> DataFrame:
-    """W2/W3 in materialized form: ``order_idx`` = the row's position under
-    the order_mentions sort. A bare global sort is invisible to an
-    order-insensitive row hash, so the driver-verifiable variant emits the
-    position as data (same sort keys, same tie-breakers).
+    """W2/W3: global order by first source id with pinned tie-breakers
+    (reference: ner_config.py:45-55; tie-breakers per SURVEY.md §7 hard #1),
+    materialized as ``order_idx`` = the row's position under that sort. A
+    bare global sort is invisible to an order-insensitive row hash, so the
+    position is emitted as data.
 
     NOT ``row_number() OVER (ORDER BY ...)``: an unpartitioned window funnels
     every row through ONE task. Distributed two-pass numbering instead:
 
-    1. range-repartition + local sort (the same distributed sort
-       ``order_mentions`` compiles to), materialize the physical partition id
+    1. range-repartition + local sort (the distributed sort a global
+       ``orderBy`` compiles to), materialize the physical partition id
        and the within-partition position (``monotonically_increasing_id``'s
        low 33 bits — a per-task counter that follows the sorted row order),
        and checkpoint the result to parquet. The checkpoint pins the sampled
@@ -256,9 +253,7 @@ def order_mentions_indexed(df: DataFrame, scratch_dir: str | None = None) -> Dat
 
 
 def legacy_conflict_promotion(
-    df: DataFrame,
-    excluded_names: tuple[str, ...] = (),
-    labels_priority: tuple[str, ...] = ("PER",),
+    df: DataFrame, excluded_names: tuple[str, ...] = ()
 ) -> DataFrame:
     """C3 (legacy variant): composite-vs-atomic conflict self-join
     (reference: ner_config_old.py:166-230).
@@ -291,7 +286,7 @@ def legacy_conflict_promotion(
             (F.col("a.label") != F.col("b.label"))
             & (F.col("a._w") > 1)
             & (F.col("b._w") == 1)
-            & F.col("a.label").isin(list(labels_priority))
+            & F.col("a.label").isin(list(LABELS_PRIORITY))
             & (~F.lower(F.col("a.NE")).isin(lowered) if lowered else F.lit(True))
         )
         .select("doc_uid", "NE", F.col("a.method").alias("method"))

@@ -15,10 +15,11 @@ Scale design (the north_rule names this join as THE skew point):
   key (superset of doc_uid -> reuses the consensus partitioning, no new
   shuffle), NOT a global window over surface forms (which would shuffle by
   the skewed key);
-- if the dictionary ever outgrows broadcast range, flip ``broadcast=False``:
-  the plan becomes a shuffle join on ``alias_norm`` where AQE skew-join
-  splitting (enabled in session.py) splits oversized partitions; a salting
-  utility for the pathological self-join case lives in canonicalize.py.
+- the join always broadcasts: a dictionary that outgrows broadcast range
+  needs a shuffle join on ``alias_norm`` instead (drop the ``F.broadcast``
+  hint), where AQE skew-join splitting (enabled in session.py) splits
+  oversized partitions; a salting utility for the pathological self-join
+  case lives in canonicalize.py.
 """
 
 from __future__ import annotations
@@ -30,33 +31,31 @@ from ..functions.text import normalize_surface
 
 LINK_KEY = ("doc_uid", "NE", "label", "start", "end")
 
+#: score added when the dictionary label agrees with the consensus label
+LABEL_BONUS = 0.5
 
-def link_mentions(
-    mentions: DataFrame,
-    gazetteer: DataFrame,
-    broadcast: bool = True,
-    label_bonus: float = 0.5,
-) -> DataFrame:
+
+def link_mentions(mentions: DataFrame, gazetteer: DataFrame) -> DataFrame:
     """Attach (entity_id, link_score) to each mention; unlinked -> NULLs.
 
-    Score = alias prior weight + ``label_bonus`` if the dictionary label
+    Score = alias prior weight + ``LABEL_BONUS`` if the dictionary label
     agrees with the consensus label. Best candidate per mention = max score,
     ties broken by smallest entity_id (deterministic).
     """
-    gaz = gazetteer.select(
-        F.col("alias_norm").alias("_block"),
-        "entity_id",
-        F.col("label").alias("_gaz_label"),
-        "weight",
+    gaz = F.broadcast(
+        gazetteer.select(
+            F.col("alias_norm").alias("_block"),
+            "entity_id",
+            F.col("label").alias("_gaz_label"),
+            "weight",
+        )
     )
-    if broadcast:
-        gaz = F.broadcast(gaz)
 
     cand = mentions.withColumn("_block", normalize_surface(F.col("NE"))).join(
         gaz, "_block", "left"
     )
     score = F.col("weight") + F.when(
-        F.col("_gaz_label") == F.col("label"), F.lit(label_bonus)
+        F.col("_gaz_label") == F.col("label"), F.lit(LABEL_BONUS)
     ).otherwise(F.lit(0.0))
     # min over (-score, entity_id): max score first, then smallest id;
     # unlinked candidates (null score) get +inf and always lose

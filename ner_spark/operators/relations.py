@@ -53,7 +53,6 @@ def instance_triples(mentions: DataFrame) -> DataFrame:
 def relation_triples(
     mentions: DataFrame,
     docs: DataFrame,
-    max_gap: int = MAX_GAP,
     rules: tuple = PRED_RULES,
 ) -> DataFrame:
     """Pairwise co-mention relations within a document.
@@ -62,7 +61,7 @@ def relation_triples(
     Subject/object ordering follows text order (a before b), mirroring how
     the reference walks documents strictly in offset order (SURVEY.md §1.2).
     """
-    # attach the ≤max_gap chars after each mention ONCE (per mention, not
+    # attach the ≤MAX_GAP chars after each mention ONCE (per mention, not
     # per pair): the pair join then never touches the full document text.
     # Only the LEFT (subject) side reads the connecting text, so only it
     # pays the docs join — the right side is the bare mention table (the
@@ -73,12 +72,12 @@ def relation_triples(
         .join(docs.select("doc_uid", "text"), "doc_uid")
         .withColumn(
             "after",
-            F.col("text").substr(F.col("end") + 1, F.lit(max_gap)),
+            F.col("text").substr(F.col("end") + 1, F.lit(MAX_GAP)),
         )
         .drop("text")
     )
     # position-block bucketing: a qualifying pair has b.start within
-    # [a.end, a.end+max_gap], i.e. b's start-block is a's end-block or the
+    # [a.end, a.end+MAX_GAP], i.e. b's start-block is a's end-block or the
     # next one — joining on (doc_uid, block) prunes the per-doc quadratic
     # pair blow-up to near-neighbors only (mention-dense docs would
     # otherwise dominate the stage)
@@ -86,21 +85,21 @@ def relation_triples(
         "_blk",
         F.explode(
             F.array(
-                F.floor(F.col("end") / max_gap),
-                F.floor(F.col("end") / max_gap) + 1,
+                F.floor(F.col("end") / MAX_GAP),
+                F.floor(F.col("end") / MAX_GAP) + 1,
             )
         ),
     ).alias("a")
     b = (
         mentions.select("doc_uid", "NE", "start", "end", "method")
-        .withColumn("_blk", F.floor(F.col("start") / max_gap))
+        .withColumn("_blk", F.floor(F.col("start") / MAX_GAP))
         .alias("b")
     )
     pairs = (
         a.join(b, (F.col("a.doc_uid") == F.col("b.doc_uid")) & (F.col("a._blk") == F.col("b._blk")))
         .filter(
             (F.col("a.end") <= F.col("b.start"))
-            & (F.col("b.start") - F.col("a.end") <= max_gap)
+            & (F.col("b.start") - F.col("a.end") <= MAX_GAP)
             & (
                 (F.col("a.start") != F.col("b.start"))
                 | (F.col("a.end") != F.col("b.end"))

@@ -7,7 +7,6 @@ of the same stages lives in ner_spark.plans.runner.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -27,54 +26,24 @@ class KGPipeline:
     patterns: DataFrame
     trusted_combos: list[list[str]]
     corrections: DataFrame | None = None
-    labels_priority: tuple[str, ...] = ("PER",)
-    num_partitions: int | None = None
-    extra_sources: dict = field(default_factory=dict)
     _cached: list = field(default_factory=list, repr=False)
 
-    def clean_docs(self, docs: DataFrame) -> DataFrame:
-        return clean(docs)
-
-    def ranked_mentions(self, clean_docs: DataFrame) -> DataFrame:
-        return combined_mentions(clean_docs, self.gazetteer, self.patterns)
-
     def consensus(self, clean_docs: DataFrame) -> DataFrame:
-        # extra sources extend the fold order after the built-ins (rank =
-        # registration order); an extra named like a built-in takes over
-        # that built-in's rank and replaces its rows
-        order = C.SOURCE_ORDER + tuple(
-            k for k in self.extra_sources if k not in C.SOURCE_ORDER
-        )
-        ranked = self.ranked_mentions(clean_docs)
-        if self.extra_sources:
-            extras = [
-                df.select(*C.KEYS, "method", "grfs", "context").withColumn(
-                    "_rank", F.lit(order.index(name))
-                )
-                for name, df in self.extra_sources.items()
-            ]
-            kept = ranked.filter(~F.col("method").isin(list(self.extra_sources)))
-            ranked = reduce(DataFrame.unionByName, extras, kept)
-        fused = C.fuse_ranked(
-            ranked, num_partitions=self.num_partitions, n_ranks=len(order)
-        )
-        voted = C.priority_vote(fused, self.labels_priority)
-        promoted = C.promote_trusted(voted, self.trusted_combos)
-        with_ids = promoted.join(
+        # the module-global lookup is deliberate: tracing rebinds
+        # ``combined_mentions`` on this module to wrap it in a span
+        ranked = combined_mentions(clean_docs, self.gazetteer, self.patterns)
+        with_ids = C.vote(ranked, self.trusted_combos).join(
             clean_docs.select("doc_uid", "files_id"), "doc_uid", "left"
         )
         if self.corrections is not None:
             with_ids = apply_corrections(with_ids, self.corrections)
         return with_ids
 
-    def triples(self, clean_docs: DataFrame, mentions: DataFrame) -> DataFrame:
-        return R.extract_triples(mentions, clean_docs)
-
     def run(self, docs: DataFrame) -> dict[str, DataFrame]:
         # clean + mentions are each consumed by 2+ branches (instance and
         # relation triples); caching mirrors the checkpointed execution in
         # plans.runner, where stage outputs are materialized tables
-        cd = self.clean_docs(docs).cache()
+        cd = clean(docs).cache()
         mentions = self.consensus(cd).cache()
         # populate both caches eagerly before handing out the triples plan:
         # triples fans out into three consumers of `mentions` (instance +
@@ -89,7 +58,7 @@ class KGPipeline:
         return {
             "clean": cd,
             "mentions": mentions,
-            "triples": self.triples(cd, mentions),
+            "triples": R.extract_triples(mentions, cd),
         }
 
     def unpersist(self) -> None:

@@ -4,7 +4,7 @@ North_rule semantics: "every stage checkpoints its completed partitions so a
 killed run resumes without recomputation". A stage's unit of resume is the
 hash bucket of ``doc_uid`` (stable at any parallelism). On (re)run:
 
-1. fingerprint = hash(input fingerprint, stage name, params) — a changed
+1. fingerprint = hash(stage name, input fingerprint) — a changed
    input or changed stage invalidates downstream checkpoints automatically
    (the Iceberg analogue is keying manifests by input snapshot id,
    SURVEY.md §4 "resumable per-partition checkpoints");
@@ -116,10 +116,11 @@ class Runner:
         transform: Callable[[DataFrame], DataFrame],
         key: str = "doc_uid",
         input_fingerprint: str = "",
-        params: str = "",
     ) -> tuple[DataFrame, str]:
         """Run one bucket-resumable stage; returns (full output DF, fp)."""
-        fingerprint = _fp(name, input_fingerprint, params, str(self.n_buckets))
+        # "" keeps the slot of the former stage-parameter string, so
+        # catalogs written with it keep their fingerprints and resume
+        fingerprint = _fp(name, input_fingerprint, "", str(self.n_buckets))
 
         def build(missing: list[int]) -> DataFrame:
             bucketed_in = with_bucket(input_df, key, self.n_buckets)
@@ -136,12 +137,11 @@ class Runner:
         name: str,
         compute: Callable[[], DataFrame],
         input_fingerprint: str = "",
-        params: str = "",
     ) -> tuple[DataFrame, str]:
         """All-or-nothing stage (e.g. connected components): the whole
         table is bucket 0, written from one task; an empty result still
         records bucket 0 as completed."""
-        fingerprint = _fp(name, input_fingerprint, params)
+        fingerprint = _fp(name, input_fingerprint, "")  # "" as in stage()
         result = self._commit(
             name, fingerprint, [0], lambda _: compute().withColumn(BUCKET_COL, F.lit(0))
         )

@@ -16,6 +16,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.text import tokens
+
 Q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
 
@@ -194,7 +196,7 @@ def doc_token_count(spark, sf_dir):
         F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
     ).select(
         "doc_id",
-        F.size(F.split(F.trim("text"), r"\s+")).cast("long").alias("n_tokens"),
+        F.size(tokens(F.col("text"))).cast("long").alias("n_tokens"),
         F.length("text").cast("long").alias("n_chars_obs"),
     )
 
@@ -213,7 +215,7 @@ def doc_token_count(spark, sf_dir):
 )
 def doc_quality_score(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    toks = F.split(F.trim("text"), r"\s+")
+    toks = tokens(F.col("text"))
     stop = F.size(F.filter(toks, lambda t: t.isin("the", "a")))
     return docs.filter(
         F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
@@ -352,6 +354,19 @@ _SHINGLE_SQL = """
       FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
             FROM documents
             WHERE text IS NOT NULL AND length(trim(text)) > 0)
+"""
+
+#: distinct undirected word-bigram edges (u < v) of the documents
+_BIGRAM_EDGE_SQL = """
+      SELECT DISTINCT least(s, d) AS u, greatest(s, d) AS v
+      FROM (
+        SELECT z[1] AS s, z[2] AS d
+        FROM (SELECT unnest(list_zip(toks[1:len(toks)-1], toks[2:])) AS z
+              FROM (SELECT string_split_regex(trim(text), '\\s+') AS toks
+                    FROM documents
+                    WHERE text IS NOT NULL
+                      AND len(string_split_regex(trim(text), '\\s+')) >= 2))
+      ) WHERE s <> d
 """
 
 
@@ -723,10 +738,10 @@ _TRUSTED_SQL = ", ".join(f"'{m}'" for m in _TRUSTED)
 def kg_trust_filter(spark, sf_dir):
     """B3: keep only trusted methods (reference: config.yaml
     final_methods_to_keep / ner_config_old.py:339-345)."""
+    from .operators.consensus import trust_filter
+
     cons = kg_consensus_fusion(spark, sf_dir)
-    return cons.filter(F.col("method").isin(list(_TRUSTED))).select(
-        "doc_id", "NE", "pos", "method"
-    )
+    return trust_filter(cons, _TRUSTED).select("doc_id", "NE", "pos", "method")
 
 
 _CORR_ROWS = [

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .functions.text import tokens
 from .operators.graph import pagerank_fixedpoint, triangle_counts
 from .queries import _t, query
 
@@ -201,7 +202,7 @@ def wordgraph_pagerank(spark, sf_dir):
     BIGINT arithmetic — the iterative-ranking companion to the CC
     canonicalizer, exact at any parallelism."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens(F.col("text"))
     base = docs.select(toks.alias("__toks")).filter(F.size("__toks") >= 2)
     edges = (
         base.select(
@@ -305,7 +306,7 @@ def wordgraph_triangles(spark, sf_dir):
     triangle generated exactly once — the clustering-coefficient companion
     to PageRank and the CC canonicalizer."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens(F.col("text"))
     base = docs.select(toks.alias("__toks")).filter(F.size("__toks") >= 2)
     edges = base.select(
         F.explode(
@@ -476,7 +477,7 @@ def kg_entity_profiles(spark, sf_dir):
     partitioned by the node, so a hot surface ranks inside its own
     partition; the co-occurrence count is a map-side-combinable sum."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens(F.col("text"))
     base = docs.select(toks.alias("__toks")).filter(F.size("__toks") >= 2)
     bg = (
         base.select(
@@ -582,7 +583,7 @@ def quality_filter_funnel(spark, sf_dir):
     divisions — bit-identical cross-engine."""
     docs = _t(spark, sf_dir, "documents")
     n_tok = F.when(F.col("text").isNull(), F.lit(0)).otherwise(
-        F.size(F.split(F.trim("text"), r"\s+"))
+        F.size(tokens(F.col("text")))
     )
     n_ink = F.when(F.col("text").isNull(), F.lit(0)).otherwise(
         F.length(F.regexp_replace("text", r"\s+", ""))

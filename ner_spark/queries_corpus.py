@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .functions.text import tokens
 from .operators.dedup import explode_ne, md5_60, shingled
 from .oracle_minhash import minhash_cand_cte
 from .queries import _SHINGLE_SQL, _t, query
@@ -241,7 +242,7 @@ def dedup_substring_spans(spark, sf_dir):
     K = _SPAN_K
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     base = docs.select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
+        "doc_id", tokens(F.col("text")).alias("toks")
     ).filter(F.size("toks") >= K)  # sequence(1, n<1) would count DOWN in Spark
     shingles = base.select(
         "doc_id",
@@ -318,7 +319,7 @@ def mix_temperature_weights(spark, sf_dir):
     integer token targets out of a 1M-token budget."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     n = docs.groupBy("source").agg(
-        F.sum(F.size(F.split(F.trim(F.col("text")), r"\s+")))
+        F.sum(F.size(tokens(F.col("text"))))
         .cast("long")
         .alias("n_tokens")
     )
@@ -381,7 +382,7 @@ def doc_lm_surprisal(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     tok = docs.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("t"),
+        F.explode(tokens(F.lower("text"))).alias("t"),
     )
     freq = tok.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
     tot = freq.agg(F.sum("c").cast("double").alias("n"))
@@ -536,7 +537,7 @@ def vocab_oov_rate(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
     )
-    tok = docs.select("doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("t"))
+    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("t"))
     vocab = (
         tok.groupBy("t")
         .agg(F.count(F.lit(1)).alias("c"))

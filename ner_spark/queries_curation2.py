@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .functions.text import tokens
 from .oracle_minhash import minhash_cand_cte
 from .operators.scratch import scratch_persist
 from .queries import _SHINGLE_SQL, _t, query
@@ -163,7 +164,7 @@ def curation_flagship(spark, sf_dir):
     )
     near_dropped = scratch_persist(near_dropped)
     n_tok = F.when(~nonempty, F.lit(0)).otherwise(
-        F.size(F.split(F.trim("text"), r"\s+"))
+        F.size(tokens(F.col("text")))
     )
     n_ink = F.when(F.col("text").isNull(), F.lit(0)).otherwise(
         F.length(F.regexp_replace("text", r"\s+", ""))

@@ -35,6 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .functions.text import tokens
 from .operators.dedup import md5_60
 from .operators.scratch import scratch_persist
 from .oracle_minhash import md5_60_sql
@@ -96,7 +97,7 @@ def corpus_importance_weights(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
     )
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens(F.col("text"))
     d = docs.select("doc_id", "lang", toks.alias("toks"))
     n_bi = F.greatest(F.size("toks") - 1, F.lit(0))
     bigrams = F.zip_with(

@@ -26,15 +26,13 @@ Reference semantics being replayed: consensus fold + vote + promotion
 
 from __future__ import annotations
 
-import inspect
 import re as _re
 
-from .extractors.combined import combined_mentions
-from .extractors.model_stub import _ROTATE
+from .extractors.model_stub import _ROTATE, FLIP_MOD, SKIP_MOD
 from .flagship import _COMBOS, _GAZ, _PATTERNS, flagship_triples
+from .operators.consensus import SOURCE_ORDER
 from .operators.relations import MAX_GAP, PRED_RULES
 from .oracle_minhash import md5_60_sql as _md5_60
-from .queries import query
 from .synth import GAZ_GRF
 
 
@@ -103,16 +101,10 @@ def _pred_case(rules=PRED_RULES) -> str:
     return f"CASE {whens} END"
 
 
-_SIG = inspect.signature(combined_mentions)
-_SKIP_MOD = _SIG.parameters["skip_mod"].default
-_FLIP_MOD = _SIG.parameters["flip_mod"].default
-
-#: model-source salts in fold order (combined_mentions source_order minus the
-#: rule system, which is rank 0)
+#: model-source salts in fold order (SOURCE_ORDER minus the rule system,
+#: which is rank 0)
 _MODEL_SOURCES = [
-    (rank, name)
-    for rank, name in enumerate(_SIG.parameters["source_order"].default)
-    if name != "casEN"
+    (rank, name) for rank, name in enumerate(SOURCE_ORDER) if name != "casEN"
 ]
 _SYS_VALUES = ", ".join(f"('{name}', {rank})" for rank, name in _MODEL_SOURCES)
 
@@ -159,15 +151,15 @@ def build_flagship_sql(pred_rules=PRED_RULES) -> str:
       FROM p JOIN matchers m ON p.tok = m.surface
       GROUP BY p.doc_uid, p.tok, m.label, p.s, p.e
     ),
-    stub AS (             -- model stubs: md5-keyed skip ~1/{_SKIP_MOD}, flip ~1/{_FLIP_MOD}
+    stub AS (             -- model stubs: md5-keyed skip ~1/{SKIP_MOD}, flip ~1/{FLIP_MOD}
       SELECT p.doc_uid, p.tok AS NE,
-             CASE WHEN {_stub_key("sys.salt", "flip")} % {_FLIP_MOD} = 0
+             CASE WHEN {_stub_key("sys.salt", "flip")} % {FLIP_MOD} = 0
                   THEN {_rotate_case()} ELSE m.label END AS label,
              p.s, p.e, sys.salt AS method, sys.rank
       FROM p
       JOIN matchers m ON p.tok = m.surface AND m.is_gaz = 1
       CROSS JOIN (VALUES {_SYS_VALUES}) AS sys(salt, rank)
-      WHERE {_stub_key("sys.salt", "skip")} % {_SKIP_MOD} <> 0
+      WHERE {_stub_key("sys.salt", "skip")} % {SKIP_MOD} <> 0
     ),
     u AS (
       SELECT doc_uid, NE, label, s, e, 'casEN' AS method, 0 AS rank, grfs FROM cas
@@ -231,6 +223,11 @@ def build_flagship_sql(pred_rules=PRED_RULES) -> str:
     SELECT subj, pred, obj, doc_uid, method FROM rel
 """
 
+
+# imported only now: ``queries`` imports every registry module at its
+# bottom, and queries_graphkg imports build_flagship_sql from here — so if
+# this module is imported first, that name must already exist
+from .queries import query  # noqa: E402
 
 FLAGSHIP_SQL = build_flagship_sql()
 

@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .functions.text import tokens
 from .queries import _t, query
 
 # shared tokenization (identical to the pagerank/textmine queries)
@@ -62,7 +63,7 @@ def _base_tokens(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     return docs.filter(
         F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
-    ).select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("__toks"))
+    ).select("doc_id", tokens(F.col("text")).alias("__toks"))
 
 
 # ---------------------------------------------------------------------------

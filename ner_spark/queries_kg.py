@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .functions.text import tokens
 from .queries import _t, query
 
 # surface -> base label used by every fixture below (SQL VALUES mirror)
@@ -940,7 +941,7 @@ def kg_context_disambiguation(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     tok = docs.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("t"),
+        F.explode(tokens(F.lower("text"))).alias("t"),
     ).distinct()
     aliases = F.broadcast(
         docs.sparkSession.createDataFrame(
@@ -1192,7 +1193,7 @@ def kg_negative_samples(spark, sf_dir):
         F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
     )
     d = docs.select(
-        "doc_id", "text", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
+        "doc_id", "text", tokens(F.col("text")).alias("toks")
     )
     m = (
         d.select(

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions.text import tokens
 from .operators.scratch import scratch_persist
 from .queries import _t, query
 
@@ -116,7 +117,7 @@ def kg_fuzzy_linking(spark: SparkSession, sf_dir: str) -> DataFrame:
     north_star's "blocking on normalized surface forms")."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     tokall = docs.select(
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("t")
+        F.explode(tokens(F.lower(F.col("text")))).alias("t")
     ).filter(F.length("t") >= 4)
 
     freq = tokall.groupBy("t").agg(F.count(F.lit(1)).alias("weight"))
@@ -400,7 +401,7 @@ def kg_incremental_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.canonicalize import connected_components, incremental_components
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens(F.col("text"))
     base = docs.select("doc_id", toks.alias("__toks")).filter(F.size("__toks") >= 2)
     bigrams = (
         base.select(
@@ -475,7 +476,7 @@ def wordgraph_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the bounded-iteration companion to the connected-components
     canonicalizer, operators/canonicalize.py)."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens(F.col("text"))
     base = docs.select(toks.alias("__toks")).filter(F.size("__toks") >= 2)
     edges = (
         base.select(

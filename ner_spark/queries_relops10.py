@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .functions.text import tokens
 from .operators.dedup import HASH_P, affine_coeffs
 from .oracle_minhash import md5_60_sql
 from .queries import _SHINGLE_SQL, _t, query
@@ -273,7 +274,7 @@ def text_keyword_rake(spark, sf_dir):
         F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
     )
     toks = docs.select(
-        "doc_id", F.posexplode(F.split(F.trim(F.col("text")), r"\s+")).alias("pos", "term")
+        "doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "term")
     )
     wi = Window.partitionBy("doc_id").orderBy("pos")
     ns = toks.filter(~F.col("term").isin(*_RAKE_STOP)).select(

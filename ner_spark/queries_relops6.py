@@ -48,7 +48,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .queries import _SHINGLE_SQL, _t, query
+from .functions.text import tokens
+from .queries import _BIGRAM_EDGE_SQL, _SHINGLE_SQL, _t, query
 
 # ---------------------------------------------------------------------------
 # tpch_q11: important parts by inventory-value share (global-total filter)
@@ -245,18 +246,6 @@ def dedup_prefix_filter_join(spark, sf_dir):
 # wordgraph_link_predict: common-neighbor scores for non-adjacent pairs
 # ---------------------------------------------------------------------------
 
-_BIGRAM_EDGE_SQL = """
-      SELECT DISTINCT least(s, d) AS u, greatest(s, d) AS v
-      FROM (
-        SELECT z[1] AS s, z[2] AS d
-        FROM (SELECT unnest(list_zip(toks[1:len(toks)-1], toks[2:])) AS z
-              FROM (SELECT string_split_regex(trim(text), '\\s+') AS toks
-                    FROM documents
-                    WHERE text IS NOT NULL
-                      AND len(string_split_regex(trim(text), '\\s+')) >= 2))
-      ) WHERE s <> d
-"""
-
 _LINKPRED_SQL = f"""
     WITH e AS ({_BIGRAM_EDGE_SQL}),
     adj AS (
@@ -295,7 +284,7 @@ def wordgraph_link_predict(spark, sf_dir):
     from .operators.graph import link_prediction_cn
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens(F.col("text"))
     base = docs.select(toks.alias("__toks")).filter(F.size("__toks") >= 2)
     edges = base.select(
         F.explode(

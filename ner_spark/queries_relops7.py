@@ -45,8 +45,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .queries import _t, query
-from .queries_relops6 import _BIGRAM_EDGE_SQL
+from .functions.text import tokens
+from .queries import _BIGRAM_EDGE_SQL, _t, query
 
 # ---------------------------------------------------------------------------
 # tpch_q7: volume shipping between two nations
@@ -260,7 +260,7 @@ def doc_repetition_signals(spark, sf_dir):
     fraction. Every count is an exact integer; each fraction is a single
     IEEE division rounded once, so DuckDB replays it bit-identically.
     The 2-gram argmax window partitions by doc_id — never global."""
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens(F.col("text"))
     t = (
         _t(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0))
@@ -440,7 +440,7 @@ def wordgraph_clustering_coeff(spark, sf_dir):
     from .operators.graph import clustering_coefficients
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens(F.col("text"))
     base = docs.select(toks.alias("__toks")).filter(F.size("__toks") >= 2)
     edges = base.select(
         F.explode(

@@ -62,6 +62,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .functions.text import tokens
 from .operators.dedup import explode_ne, shingled
 from .queries import _SHINGLE_SQL, _t, query
 
@@ -120,7 +121,7 @@ def ir_phrase_search(spark, sf_dir):
         F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
     )
     idx = docs.select(
-        "doc_id", F.posexplode(F.split(F.trim(F.col("text")), r"\s+")).alias("pos", "term")
+        "doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "term")
     )
     pt = spark.createDataFrame(
         [

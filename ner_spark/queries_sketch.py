@@ -43,6 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.text import tokens
 from .operators.dedup import md5_60
 from .queries import _t, query
 
@@ -318,7 +319,7 @@ def pack_training_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(md5_60(F.col("doc_id").cast("string")), F.lit(_PACK_BUCKETS))
         .cast("bigint")
         .alias("bucket"),
-        F.size(F.split(F.trim("text"), r"\s+")).cast("bigint").alias("n_tokens"),
+        F.size(tokens(F.col("text"))).cast("bigint").alias("n_tokens"),
     )
     return base.groupBy("bucket").applyInPandas(
         _pack_group,
@@ -492,7 +493,7 @@ def sketch_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & F.col("lang").isin("en", "fr")
     )
-    toked = docs.select("lang", F.split(F.trim(F.lower("text")), r"\s+").alias("toks"))
+    toked = docs.select("lang", tokens(F.lower("text")).alias("toks"))
     # guard: sequence(1, 0) DESCENDS in Spark (DuckDB's generate_series is
     # empty) — short docs must produce zero shingles on both engines
     sh = toked.select(
@@ -736,7 +737,6 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one extra distinct-aggregate) exists to make the sketch's error
     observable in the result itself.
     """
-    from .functions.text import tokens
     from .operators.dedup import _shingles_of, explode_ne
 
     docs = _t(spark, sf_dir, "documents")

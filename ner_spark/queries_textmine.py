@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .functions.text import tokens
 from .operators.textstats import (
     PII_EMAIL_RE,
     PII_PHONE_RE,
@@ -184,7 +185,7 @@ def doc_array_hof_stats(spark, sf_dir):
         F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
     )
     toked = docs.select(
-        "doc_id", F.split(F.trim(F.lower("text")), r"\s+").alias("toks")
+        "doc_id", tokens(F.lower("text")).alias("toks")
     )
     return toked.select(
         "doc_id",

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .functions.text import tokens
 from .queries import _t, query
 
 _TOK_CTE = """
@@ -58,7 +59,7 @@ def _tok(spark, sf_dir):
         "doc_id",
         "lang",
         "source",
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token"),
+        F.explode(tokens(F.col("text"))).alias("token"),
     )
 
 

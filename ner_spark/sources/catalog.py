@@ -296,11 +296,9 @@ class Catalog:
         return os.path.isdir(self.table_dir(table))
 
     # -- maintenance ---------------------------------------------------------
-    def compact_table(
-        self, spark: SparkSession, table: str, files_per_bucket: int = 1
-    ) -> dict:
-        """Rewrite the table so each bucket holds ``files_per_bucket``
-        parquet files (Iceberg ``rewrite_data_files`` analogue).
+    def compact_table(self, spark: SparkSession, table: str) -> dict:
+        """Rewrite the table so each bucket holds one parquet file (Iceberg
+        ``rewrite_data_files`` analogue).
 
         Incremental / streaming writers accumulate small files; at cluster
         scale the scan cost of a table is dominated by file-open overhead
@@ -319,12 +317,10 @@ class Catalog:
         buckets = [r[0] for r in df.select(BUCKET_COL).distinct().collect()]
         if os.path.isdir(staging):
             shutil.rmtree(staging)
-        # cluster by bucket so each partition dir receives exactly
-        # files_per_bucket files regardless of task parallelism
+        # cluster by bucket so each partition dir receives exactly one file
+        # regardless of task parallelism
         (
-            df.repartition(
-                max(len(buckets), 1) * files_per_bucket, F.col(BUCKET_COL)
-            )
+            df.repartition(max(len(buckets), 1), F.col(BUCKET_COL))
             .write.mode("overwrite")
             .partitionBy(BUCKET_COL)
             .parquet(staging)

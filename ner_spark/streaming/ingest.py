@@ -110,10 +110,9 @@ def consensus_batch_writer(combos: list[list[str]], out_dir: str):
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        fused = C.fuse_ranked(batch_df.drop("event_ts"))
-        voted = C.promote_trusted(C.priority_vote(fused), combos)
         (
-            voted.withColumn("batch_id", F.lit(batch_id))
+            C.vote(batch_df.drop("event_ts"), combos)
+            .withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")

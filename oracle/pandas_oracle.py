@@ -62,7 +62,7 @@ def tag_all(clean: pd.DataFrame, gaz_rows, pattern_rows) -> dict[str, pd.DataFra
             tables["casEN"].append({**m, "doc_uid": r.doc_uid, "method": "casEN",
                                     "context": _context(r.text, m["start"], m["end"])})
         for name in ("spaCy", "stanza"):
-            for m in _stub_scan(r.doc_uid, r.text, gaz_re, by_surface, 4, 20, name):
+            for m in _stub_scan(r.doc_uid, r.text, gaz_re, by_surface, name):
                 tables[name].append({**m, "doc_uid": r.doc_uid, "method": name,
                                      "context": _context(r.text, m["start"], m["end"])})
     cols = KEYS + ["method", "grfs", "context"]

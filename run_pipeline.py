@@ -3,13 +3,16 @@
     spark-submit --py-files kg.zip run_pipeline.py \
         --n-docs 1000000 --out /tmp/kg_out --n-buckets 64
 
-or plain ``python run_pipeline.py`` (builds its own local session). Stages
-(SURVEY.md §7): normalize -> dedup -> consensus mentions -> triples ->
-linking -> canonicalization -> graph materialize. Each per-doc stage
-checkpoints per hash bucket; re-running after a kill skips completed
-buckets (see the "skipped=" counts in the metrics line). The input corpus
-is the deterministic synthetic interleaved-doc generator (same rows at any
-parallelism), or ``--input`` parquet in the input_hint schema.
+or plain ``python run_pipeline.py`` (builds its own machine-sized local
+session). Every run builds every stage (SURVEY.md §7): normalize -> dedup
+-> consensus mentions -> triples -> linking -> canonicalization -> graph
+edges -> node table. Each per-doc stage checkpoints per hash bucket;
+re-running after a kill skips completed buckets (see the
+``skipped_buckets`` counts in the printed metrics line).
+
+The corpus is the deterministic synthetic interleaved-doc generator (same
+rows at any parallelism), or ``--input`` parquet in the input_hint schema;
+shuffle partitions follow the machine (``ner_spark.session.get_spark``).
 """
 
 from __future__ import annotations
@@ -28,18 +31,10 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--out", required=True)
     p.add_argument("--master", default=None)
     p.add_argument("--n-buckets", type=int, default=32)
-    p.add_argument("--shuffle-partitions", type=int, default=None)
     p.add_argument(
         "--writer-wait-sec", type=float, default=600.0,
         help="how long a stage waits for a live run that holds its writer "
         "lock (a killed run's lock is taken over at once)",
-    )
-    p.add_argument("--skip-canonical", action="store_true")
-    p.add_argument(
-        "--compact",
-        action="store_true",
-        help="after the run, rewrite every catalog table to one file per "
-        "bucket (small-file maintenance; crash-safe staging swap)",
     )
     args = p.parse_args(argv)
 
@@ -59,7 +54,6 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(
         "kg_pipeline",
         master=args.master,
-        shuffle_partitions=args.shuffle_partitions,
         extra_conf={"spark.scheduler.mode": "FAIR"},
     )
     session_startup = time.time() - t_start
@@ -136,8 +130,6 @@ def main(argv: list[str] | None = None) -> int:
     def _branch_link_canonical():
         s5_, fp5_ = runner.stage("s5_linked", s3, link_transform, key="doc_uid",
                                  input_fingerprint=fp3)
-        if args.skip_canonical:
-            return s5_, fp5_, None, None
         s6_, fp6_ = runner.global_stage(
             "s6_canonical", lambda: canonical_entities(s5_), input_fingerprint=fp5_
         )
@@ -149,62 +141,61 @@ def main(argv: list[str] | None = None) -> int:
         s4, fp4 = fut_t.result()
         s5, fp5, s6, fp6 = fut_l.result()
 
-    if not args.skip_canonical:
-        # graph edges: triples with canonical subject ids where linkable
-        def edges_transform(triples_part):
-            from pyspark.sql import functions as F
+    # graph edges: triples with canonical subject ids where linkable
+    def edges_transform(triples_part):
+        from pyspark.sql import functions as F
 
-            subj_link = s5.filter(F.col("entity_id").isNotNull()).select(
-                F.col("doc_uid"), F.col("NE").alias("subj"),
-                F.col("entity_id").alias("subj_entity"),
-            ).dropDuplicates(["doc_uid", "subj"])
-            canon = s6
-            # no broadcast hints: subj_link/canon scale with the data — the
-            # doc_uid join is co-located and AQE picks broadcast when small
-            return (
-                triples_part.join(subj_link, ["doc_uid", "subj"], "left")
-                .join(
-                    canon.withColumnRenamed("entity_id", "subj_entity"),
-                    "subj_entity",
-                    "left",
-                )
-                .select("subj", "pred", "obj", "doc_uid", "method",
-                        "subj_entity", "canonical_id")
+        subj_link = s5.filter(F.col("entity_id").isNotNull()).select(
+            F.col("doc_uid"), F.col("NE").alias("subj"),
+            F.col("entity_id").alias("subj_entity"),
+        ).dropDuplicates(["doc_uid", "subj"])
+        canon = s6
+        # no broadcast hints: subj_link/canon scale with the data — the
+        # doc_uid join is co-located and AQE picks broadcast when small
+        return (
+            triples_part.join(subj_link, ["doc_uid", "subj"], "left")
+            .join(
+                canon.withColumnRenamed("entity_id", "subj_entity"),
+                "subj_entity",
+                "left",
             )
+            .select("subj", "pred", "obj", "doc_uid", "method",
+                    "subj_entity", "canonical_id")
+        )
 
-        s7, fp7 = runner.stage("s7_edges", s4, edges_transform, key="doc_uid",
-                               input_fingerprint=fp4 + fp6)
+    s7, fp7 = runner.stage("s7_edges", s4, edges_transform, key="doc_uid",
+                           input_fingerprint=fp4 + fp6)
 
-        # node table: one row per subject surface with its canonical id,
-        # instance labels, relation-edge count, and document support.
-        # Keyed (and re-bucketed) on `subj`, so every group is complete
-        # within its bucket and the aggregation is bucket-resumable — the
-        # map-side partial agg plus the bucket exchange is the whole cost.
-        def nodes_transform(edges_part):
-            from pyspark.sql import functions as F
+    # node table: one row per subject surface with its canonical id,
+    # instance labels, relation-edge count, and document support.
+    # Keyed (and re-bucketed) on `subj`, so every group is complete
+    # within its bucket and the aggregation is bucket-resumable — the
+    # map-side partial agg plus the bucket exchange is the whole cost.
+    def nodes_transform(edges_part):
+        from pyspark.sql import functions as F
 
-            return edges_part.groupBy("subj").agg(
-                F.coalesce(
-                    F.max("canonical_id"),
-                    F.max("subj_entity"),
-                    F.concat(F.lit("surf:"), F.first("subj")),
-                ).alias("node_id"),
-                F.concat_ws(
-                    "|",
-                    F.array_sort(
-                        F.collect_set(
-                            F.when(F.col("pred") == "instance_of", F.col("obj"))
-                        )
-                    ),
-                ).alias("labels"),
-                F.sum(
-                    (F.col("pred") != "instance_of").cast("long")
-                ).alias("n_rel_edges"),
-                F.countDistinct("doc_uid").alias("n_docs"),
-            )
+        return edges_part.groupBy("subj").agg(
+            F.coalesce(
+                F.max("canonical_id"),
+                F.max("subj_entity"),
+                F.concat(F.lit("surf:"), F.first("subj")),
+            ).alias("node_id"),
+            F.concat_ws(
+                "|",
+                F.array_sort(
+                    F.collect_set(
+                        F.when(F.col("pred") == "instance_of", F.col("obj"))
+                    )
+                ),
+            ).alias("labels"),
+            F.sum(
+                (F.col("pred") != "instance_of").cast("long")
+            ).alias("n_rel_edges"),
+            F.countDistinct("doc_uid").alias("n_docs"),
+        )
 
-        runner.stage("s8_nodes", s7, nodes_transform, key="subj",
-                     input_fingerprint=fp7)
+    runner.stage("s8_nodes", s7, nodes_transform, key="subj",
+                 input_fingerprint=fp7)
 
     # input size from the s0 manifest (avoids recomputing the input scan)
     n_docs = sum(
@@ -212,18 +203,6 @@ def main(argv: list[str] | None = None) -> int:
         for r in runner.catalog.manifest_rows("s0_normalize")
         if r["fingerprint"] == fp0
     )
-    compaction = None
-    if args.compact:
-        import os as _os
-
-        compaction = {}
-        for table in sorted(
-            d
-            for d in _os.listdir(args.out)
-            if _os.path.isdir(_os.path.join(args.out, d))
-            and not d.endswith(".compact")  # leftover staging from a crash
-        ):
-            compaction[table] = runner.catalog.compact_table(spark, table)
 
     wall = time.time() - t_start
     metrics = {
@@ -237,8 +216,6 @@ def main(argv: list[str] | None = None) -> int:
         # sort: concurrent branches append in completion order
         "stages": sorted(runner.metrics_json(), key=lambda r: r["stage"]),
     }
-    if compaction is not None:
-        metrics["compaction"] = compaction
     print(json.dumps(metrics))
     return 0
 

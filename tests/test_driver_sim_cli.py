@@ -78,6 +78,21 @@ def test_named_subset_near_dup_family_queries():
     )
 
 
+def test_named_subset_kg_chain_queries():
+    """Every registry query that runs an operator of the KG construction
+    chain — trusted promotion (both variants), the W2 ordering, the legacy
+    conflict promotion, entity linking, the runner's manifests, relation
+    and flagship triples and the graph tables built on them —
+    hash-checked against their oracles."""
+    _assert_subset_ok(
+        "kg_promote_trusted,kg_promote_trusted_legacy,kg_order_mentions,"
+        "kg_legacy_conflict,kg_entity_linking,kg_checkpoint_manifest,"
+        "kg_flagship_triples,kg_relation_triples,kg_triple_support,"
+        "kg_two_hop_paths,kg_entity_degree,kg_linked_triples,"
+        "kg_canonical_edges,kg_node_table,kg_media_edges"
+    )
+
+
 def test_register_ivf_oracle_drops_and_restores(tmp_path):
     """Importing the registry registers all four data-dependent oracles;
     ``register_ivf_oracle`` drops them for an sf_dir without embeddings

@@ -28,7 +28,7 @@ def test_compact_table_reduces_files_and_preserves_rows(spark, tmp_path):
     cat = Catalog(str(tmp_path))
     docs = with_bucket(_docs(spark), "doc_id", 4)
     # simulate an incremental writer: many tasks each opening a writer in
-    # every bucket dir -> files_per_bucket == parallelism
+    # every bucket dir -> files per bucket == parallelism
     (
         docs.repartition(8)
         .write.mode("overwrite")

@@ -45,7 +45,7 @@ def test_dedup_mentions_pinned_survivor(spark):
     assert got == {("PER", 0, "casEN"), ("LOC", 7, "stanza")}
 
 
-def test_order_mentions_tiebreakers(spark):
+def test_order_mentions_tiebreakers(spark, tmp_path):
     rows = [
         ("d2", "B", "PER", 0, 1, "casEN", ["doc2"]),
         ("d1", "A", "PER", 5, 6, "casEN", ["doc1", "doc9"]),
@@ -54,8 +54,9 @@ def test_order_mentions_tiebreakers(spark):
     m = spark.createDataFrame(
         rows, ["doc_uid", "NE", "label", "start", "end", "method", "files_id"]
     )
-    ordered = [(r["doc_uid"], r["start"]) for r in C.order_mentions(m).collect()]
-    assert ordered == [("d1", 0), ("d1", 5), ("d2", 0)]
+    got = C.order_mentions_indexed(m, scratch_dir=str(tmp_path / "order_idx"))
+    ordered = sorted((r["order_idx"], r["doc_uid"], r["start"]) for r in got.collect())
+    assert ordered == [(1, "d1", 0), (2, "d1", 5), (3, "d2", 0)]
 
 
 def test_corpus_sink_single_roundtrips(spark, tmp_path):
@@ -275,56 +276,6 @@ def test_correction_dedup_survivor_is_a_whole_row(spark):
     got = (row["manual_cat"], row["correct"])
     # must equal ONE of the source rows, not the chimera ('A', 9)
     assert got in {("A", None), (None, 9)}, got
-
-
-def test_pipeline_extra_sources_enter_consensus(spark, docs, gazetteer, patterns, combos):
-    """Mentions from extra_sources must flow into the consensus fold (a
-    fold order missing the extra keys silently dropped them), and an extra
-    that shares a built-in's name replaces that built-in."""
-    from pyspark.sql import functions as F
-
-    from ner_spark.operators.clean import clean
-    from ner_spark.plans.pipeline import KGPipeline
-
-    cd = clean(docs)
-    base = KGPipeline(gazetteer=gazetteer, patterns=patterns, trusted_combos=combos)
-    # the extra system: one synthetic mention per doc, method-tagged
-    extra = cd.select(
-        "doc_uid",
-        F.lit("EXTRA_SURFACE").alias("NE"),
-        F.lit("MISC").alias("label"),
-        F.lit(0).cast("int").alias("start"),
-        F.lit(5).cast("int").alias("end"),
-        F.lit("myNER").alias("method"),
-        F.lit(None).cast("array<string>").alias("grfs"),
-        F.lit(None).cast("string").alias("context"),
-    )
-    pipe = KGPipeline(
-        gazetteer=gazetteer,
-        patterns=patterns,
-        trusted_combos=combos,
-        extra_sources={"myNER": extra},
-    )
-    out = pipe.consensus(cd)
-    methods = {
-        r["method"]
-        for r in out.select("method").distinct().collect()
-    }
-    assert any("myNER" in m for m in methods), methods
-
-    # an extra named like a built-in replaces that built-in's rows
-    override = KGPipeline(
-        gazetteer=gazetteer,
-        patterns=patterns,
-        trusted_combos=combos,
-        extra_sources={"spaCy": extra.withColumn("method", F.lit("spaCy"))},
-    )
-    rows = override.consensus(cd).select("NE", "method").collect()
-    spacy_surfaces = {r["NE"] for r in rows if "spaCy" in r["method"].split("_")}
-    assert spacy_surfaces == {"EXTRA_SURFACE"}, spacy_surfaces
-    builtin = {r["NE"] for r in base.consensus(cd).select("NE", "method").collect()
-               if "spaCy" in r["method"].split("_")}
-    assert builtin and "EXTRA_SURFACE" not in builtin
 
 
 def test_empty_gazetteer_extracts_nothing_instead_of_crashing(spark, docs, patterns):

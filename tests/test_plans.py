@@ -47,15 +47,12 @@ def test_consensus_chain_costs_exactly_one_exchange(spark):
     """fuse (repartition doc_uid) -> aggregate -> priority window -> promote:
     the aggregation keys and the window partition keys are supersets of
     doc_uid, so the single explicit repartition serves the whole chain."""
-    fused = C.fuse_ranked(_ranked_mentions(spark), num_partitions=4)
-    voted = C.promote_trusted(
-        C.priority_vote(fused), [["a", "b", "c"]]
-    )
+    voted = C.vote(_ranked_mentions(spark), [["a", "b", "c"]])
     assert n_exchanges(voted) == 1, plan_of(voted, "simple")
 
 
 def test_priority_vote_adds_no_exchange_after_fuse(spark):
-    fused = C.fuse_ranked(_ranked_mentions(spark), num_partitions=4)
+    fused = C.fuse_ranked(_ranked_mentions(spark))
     assert n_exchanges(fused) == 1
     assert n_exchanges(C.priority_vote(fused)) == 1
 
@@ -105,8 +102,7 @@ def test_vote_and_promote_stay_jvm_side(spark):
     """The whole consensus chain after extraction is pure Catalyst: window +
     hash aggregate, zero Python eval nodes (the reference's row-apply
     lambdas, SURVEY.md §2 U5, all eliminated)."""
-    fused = C.fuse_ranked(_ranked_mentions(spark), num_partitions=4)
-    voted = C.promote_trusted(C.priority_vote(fused), [["a", "b", "c"]])
+    voted = C.vote(_ranked_mentions(spark), [["a", "b", "c"]])
     plan = plan_of(voted, "simple")
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     # fuse aggregates via declarative min-slots; the struct-valued

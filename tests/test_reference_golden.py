@@ -88,7 +88,7 @@ def test_consensus_round_trip_vs_reference_golden(spark, date):
     ranked = spacy_df.withColumn("_rank", F.lit(0)).unionByName(
         casen_df.withColumn("_rank", F.lit(1))
     )
-    fused = fuse_ranked(ranked, n_ranks=2).withColumn(
+    fused = fuse_ranked(ranked).withColumn(
         "method",
         F.when(F.col("method") == "spaCy_casEN", "intersection")
         .when(F.col("method") == "spaCy", "spacy")
