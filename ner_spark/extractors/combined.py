@@ -12,9 +12,9 @@ Arrow, and Catalyst prunes it when the consumer does not select it.
 Per batch the rule system ("casEN") scans each document; each model source
 ("spaCy", "stanza") runs its real model over the whole batch when the
 driver probe found one (``use_model``), else its deterministic stub
-(model_stub.py). Every entry point — the pipeline, the flagship queries,
-the streaming ingest — goes through this one function, so they all route
-to a real model the same way.
+(model_stub.py). Every entry point — the pipeline and the flagship
+queries — goes through this one function, so they all route to a real
+model the same way.
 
 Reference contrast: the reference runs its taggers as three separate
 full-corpus passes with per-stage materialization (consensus.ipynb cells
@@ -53,7 +53,6 @@ def combined_mentions(
     gazetteer: DataFrame,
     patterns: DataFrame,
     source_order: tuple[str, ...] = SOURCE_ORDER,
-    passthrough_cols: tuple[str, ...] = (),
     use_model: bool | None = None,
 ) -> DataFrame:
     """(doc_uid, text) -> ranked MENTIONS rows for all systems, one pass.
@@ -71,10 +70,6 @@ def combined_mentions(
     stub uses the source name as its determinism salt, so the stubs
     disagree with each other and with the rule system in a controlled,
     seeded way (model_stub.py ``SKIP_MOD``/``FLIP_MOD``).
-
-    ``passthrough_cols`` are carried from ``docs`` into the output
-    projection unchanged (e.g. ``event_ts`` on the streaming path, which
-    would otherwise need an unbounded stream-stream self-join to reattach).
     """
     payload = (
         gazetteer_rows(gazetteer),
@@ -119,10 +114,8 @@ def combined_mentions(
         return pd.Series(out)
 
     m = F.explode(extract(F.col("doc_uid"), F.col("text"))).alias("m")
-    pt = [F.col(c) for c in passthrough_cols]
-    return docs.select(F.col("doc_uid"), F.col("text"), *pt, m).select(
+    return docs.select(F.col("doc_uid"), F.col("text"), m).select(
         "doc_uid",
-        *passthrough_cols,
         F.col("m.NE").alias("NE"),
         F.col("m.label").alias("label"),
         F.col("m.start").alias("start"),

@@ -76,19 +76,3 @@ def dedup_docs(normalized: DataFrame) -> DataFrame:
 def clean(docs: DataFrame) -> DataFrame:
     """S0+S1 composed: the Spark form of EPGCleaner.clean."""
     return dedup_docs(normalize_docs(docs))
-
-
-def span_violations(input_docs: DataFrame, output_docs: DataFrame) -> DataFrame:
-    """Span-sequence equality check (kind, text, media_ref, order).
-
-    Returns rows whose offset-ordered span projection differs between input
-    and output — must be empty for every pipeline output that carries spans.
-    """
-    proj = lambda c: F.transform(  # noqa: E731
-        sorted_spans(c), lambda s: F.struct(s["kind"], s["text"], s["media_ref"])
-    )
-    left = input_docs.select("doc_id", proj(F.col("spans")).alias("in_seq"))
-    right = output_docs.select("doc_id", proj(F.col("spans")).alias("out_seq"))
-    return left.join(right, "doc_id", "inner").filter(
-        ~F.col("in_seq").eqNullSafe(F.col("out_seq"))
-    )

@@ -63,28 +63,6 @@ DECODED = T.StructType(
 )
 
 
-def media_from_docs(docs: DataFrame) -> DataFrame:
-    """Extract media spans from interleaved docs into the MEDIA schema.
-
-    Payload bytes are synthesized from the ref string (this sandbox has no
-    object store); in production this column is the fetched object or an
-    Iceberg binary column.
-    """
-    spans = docs.select(
-        "doc_id", F.explode("spans").alias("s")
-    ).filter(F.col("s.kind") == "media")
-    return spans.select(
-        F.col("s.media_ref").alias("media_ref"),
-        "doc_id",
-        F.lit("image").alias("media_type"),
-        F.encode(F.col("s.media_ref"), "utf-8").alias("payload"),
-        F.struct(
-            F.length(F.col("s.media_ref")).cast("long").alias("content_length"),
-            F.lit("fake/ref").alias("codec"),
-        ).alias("meta"),
-    )
-
-
 def media_from_ref_table(documents: DataFrame) -> DataFrame:
     """MEDIA rows derived deterministically from the flat ``documents``
     table (doc_id: long), so the multimodal path scales with the sf input

@@ -28,10 +28,9 @@ work) at the host's next ``release_scratch()``.
 HOST CONTRACT: results returned from an operator that used either facility
 must be fully consumed (collected / written) before the host's
 ``release_scratch()`` boundary. After release, a cached frame silently
-recomputes (for ``read_csv_tolerant`` the corrupt-record filter can then
-return wrong rows, SPARK-21610) and a scratch-dir-backed frame fails its
-next action loudly. Both hosts in this repo (tools/driver_sim.py, bench.py)
-materialize before releasing.
+recomputes and a scratch-dir-backed frame fails its next action loudly.
+Both hosts in this repo (tools/driver_sim.py, bench.py) materialize
+before releasing.
 """
 
 from __future__ import annotations

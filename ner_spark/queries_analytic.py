@@ -78,8 +78,8 @@ def lineitem_quantiles(spark, sf_dir):
     """,
 )
 def events_tumbling_window(spark, sf_dir):
-    """Tumbling 1-hour windows per event type — the batch twin of the
-    streaming windowed sink (both engines align buckets to the epoch)."""
+    """Tumbling 1-hour windows per event type (both engines align buckets
+    to the epoch)."""
     ev = _t(spark, sf_dir, "events")
     return ev.groupBy(
         F.window("ts", "1 hour").start.alias("win_start"), "event_type"

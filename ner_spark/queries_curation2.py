@@ -134,8 +134,6 @@ def curation_flagship(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     nonempty = F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
     # exact pass: constant-width shuffle key (sha2), survivor = min doc_id
-    from pyspark import StorageLevel
-
     # keepers feeds the semi-join AND the final attribution join;
     # near_dropped's lineage is the whole LSH+verify+CC subtree and it
     # feeds the attribution join after the CC probe already ran it —

@@ -300,7 +300,7 @@ class Catalog:
         """Rewrite the table so each bucket holds one parquet file (Iceberg
         ``rewrite_data_files`` analogue).
 
-        Incremental / streaming writers accumulate small files; at cluster
+        Incremental writers accumulate small files; at cluster
         scale the scan cost of a table is dominated by file-open overhead
         long before bytes matter, so compaction is routine table
         maintenance. The rewrite goes to a sibling staging dir first and

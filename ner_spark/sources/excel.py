@@ -1,35 +1,24 @@
-"""Excel interchange shims (dev-mode; reference workflow parity).
+"""Read-only .xlsx parsing for the reference's workbooks (SURVEY A1).
 
 The reference's manual-correction workflow is Excel-in/Excel-out
 (reference: ner_config.py:212 reads the correction workbook;
-ner_config_old.py:300-332 writes per-sheet results). In this engine Excel
-is strictly an *edge* format for the human-in-the-loop correction
-dimension — a small table that fits on the driver — so the shims go
-through pandas on the driver by design and refuse large frames rather
-than pretending to scale. Production interchange is parquet
-(sources/catalog.py); these exist so a reference user's .xlsx round trip
-keeps working.
+ner_config_old.py:300-332 writes per-sheet results). In this engine the
+correction dimension and every result live in the catalog as parquet
+(sources/catalog.py); Excel is only read, to compare against the
+reference's committed golden workbooks.
 
-No Excel engine (openpyxl/xlsxwriter) ships in this container, so the
-READ path carries its own minimal parser: .xlsx is a zip of SpreadsheetML
-parts, and the subset these workbooks use (one worksheet, shared/inline
-strings, numbers) parses with stdlib ``zipfile`` + ``ElementTree`` —
-see :func:`read_xlsx_rows`. pandas/openpyxl is preferred when importable
-(full fidelity: dates, formula caches); the stdlib fallback makes the
-reference's committed workbooks readable here. The WRITE path still
-degrades to CSV with a warning when no engine is installed.
+The engine depends on no Excel library (openpyxl/xlsxwriter), so the
+parser is stdlib only: .xlsx is a zip of SpreadsheetML parts, and the
+subset these workbooks use (one worksheet, shared/inline strings,
+numbers) parses with ``zipfile`` + ``ElementTree`` — see
+:func:`read_xlsx_rows`.
 """
 
 from __future__ import annotations
 
-import os
 import re
-import warnings
 import zipfile
 import xml.etree.ElementTree as ET
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 
 _SSML = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 
@@ -126,58 +115,3 @@ def read_xlsx_records(path: str, sheet: int = 0) -> list[dict]:
         str(h) if h is not None else f"_col{i}" for i, h in enumerate(rows[0])
     ]
     return [dict(zip(header, r)) for r in rows[1:]]
-
-#: refuse driver-side materialization beyond this many rows
-MAX_DRIVER_ROWS = 1_000_000
-
-
-def _have_excel_engine() -> bool:
-    try:
-        import openpyxl  # noqa: F401
-
-        return True
-    except ImportError:
-        try:
-            import xlsxwriter  # noqa: F401
-
-            return True
-        except ImportError:
-            return False
-
-
-def write_excel(df: DataFrame, path: str, sheet_name: str = "Sheet1") -> str:
-    """Write a small DataFrame to .xlsx (reference: ner_config_old.py:
-    300-332). Falls back to CSV at ``path + '.csv'`` when no Excel engine
-    is installed; returns the path actually written."""
-    n = df.count()
-    if n > MAX_DRIVER_ROWS:
-        raise ValueError(
-            f"write_excel is a dev-mode driver-side sink ({n} rows > "
-            f"{MAX_DRIVER_ROWS}); write parquet via the catalog instead"
-        )
-    pdf = df.toPandas()
-    if _have_excel_engine():
-        pdf.to_excel(path, sheet_name=sheet_name, index=False)  # pragma: no cover
-        return path
-    fallback = path + ".csv"
-    warnings.warn(
-        f"no Excel engine (openpyxl/xlsxwriter) installed; wrote CSV to {fallback}",
-        stacklevel=2,
-    )
-    pdf.to_csv(fallback, index=False)
-    return fallback
-
-
-def read_excel_dim(spark: SparkSession, path: str) -> DataFrame:
-    """Read a correction-style dimension workbook (reference:
-    ner_config.py:212) into a Spark DataFrame. Accepts the CSV fallback
-    written by :func:`write_excel` transparently."""
-    if os.path.exists(path) and path.endswith(".csv"):
-        pdf = pd.read_csv(path)
-    elif os.path.exists(path + ".csv") and not os.path.exists(path):
-        pdf = pd.read_csv(path + ".csv")
-    elif _have_excel_engine():
-        pdf = pd.read_excel(path)  # pragma: no cover
-    else:
-        pdf = pd.DataFrame(read_xlsx_records(path))
-    return spark.createDataFrame(pdf)

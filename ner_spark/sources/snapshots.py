@@ -80,17 +80,15 @@ class SnapshotCatalog:
         self,
         df: DataFrame,
         table: str,
-        op: str = "overwrite-buckets",
-        batch_id: int | None = None,
         mode: str = "overwrite",
     ) -> dict:
         """Write ``df`` (already carrying ``_bucket``) as a new immutable
         commit directory, then publish a snapshot whose mapping repoints
         (``mode="overwrite"``, dynamic-partition-overwrite semantics) or
-        extends (``mode="append"``, streaming-ingest semantics) the written
-        buckets — the parent snapshot stays readable either way. The
-        mapping is bucket -> [commit dirs], Iceberg's manifest list keyed
-        by partition."""
+        extends (``mode="append"``: the new files sit beside the bucket's
+        existing ones) the written buckets — the parent snapshot stays
+        readable either way. The mapping is bucket -> [commit dirs],
+        Iceberg's manifest list keyed by partition."""
         parent = self.current(table)
         sid = (parent["snapshot_id"] + 1) if parent else 1
         cname = f"c{sid:06d}"
@@ -121,7 +119,7 @@ class SnapshotCatalog:
             "snapshot_id": sid,
             "parent_id": parent["snapshot_id"] if parent else None,
             "ts": time.time(),
-            "op": op,
+            "op": "overwrite-buckets",
             "written_buckets": written,
             "mapping": mapping,
             # the snapshot's schema (Iceberg: schema evolves with commits;
@@ -132,22 +130,8 @@ class SnapshotCatalog:
                 if f.name != BUCKET_COL
             ],
         }
-        if batch_id is not None:
-            snap["batch_id"] = int(batch_id)
-        if parent and parent.get("delete_files"):
-            # global equality tombstones ride forward (no Iceberg sequence
-            # numbers: a deleted key stays masked — even in later commits —
-            # until a compaction folds the tombstones in; documented
-            # simplification)
-            snap["delete_key"] = parent["delete_key"]
-            snap["delete_files"] = list(parent["delete_files"])
         self._append(table, snap)  # the commit point
         return snap
-
-    def committed_batches(self, table: str) -> set[int]:
-        return {
-            s["batch_id"] for s in self.snapshots(table) if "batch_id" in s
-        }
 
     # -- read ------------------------------------------------------------------
     def _resolve(
@@ -233,19 +217,7 @@ class SnapshotCatalog:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=target is None)
-        return self._apply_deletes(spark, table, snap, out)
-
-    def _apply_deletes(
-        self, spark: SparkSession, table: str, snap: dict, df: DataFrame
-    ) -> DataFrame:
-        dfiles = snap.get("delete_files", [])
-        if not dfiles:
-            return df
-        ddirs = [
-            os.path.join(self.table_dir(table), "_deletes", c) for c in dfiles
-        ]
-        keys = spark.read.parquet(*ddirs)
-        return df.join(F.broadcast(keys), on=snap["delete_key"], how="left_anti")
+        return out
 
     # -- history operations ------------------------------------------------------
     def rollback(self, table: str, snapshot_id: int) -> dict:
@@ -261,58 +233,10 @@ class SnapshotCatalog:
             "written_buckets": [],
             "mapping": {b: list(c) for b, c in target["mapping"].items()},
         }
-        # restore the WHOLE logical state, not just the file mapping:
-        # dropping the target's tombstones would resurrect its deleted
-        # rows, and dropping its schema would change read reconciliation
-        for carried in ("delete_key", "delete_files", "schema"):
-            if carried in target:
-                snap[carried] = target[carried]
-        self._append(table, snap)
-        return snap
-
-    def commit_deletes(self, keys: DataFrame, table: str, key: str) -> dict:
-        """Merge-on-read equality deletes (Iceberg v2 semantics): publish a
-        snapshot whose delete set grows by ``keys`` WITHOUT rewriting any
-        data file. The keys parquet is tiny (one column); readers apply it
-        as a broadcast anti-join, so a delete of k rows costs O(k) write +
-        O(scan) read overhead until a compaction folds it in — the only
-        delete strategy that stays O(change) at 100 TB. Deletes compose
-        with time travel: a snapshot before the delete still reads the
-        rows."""
-        parent = self.current(table)
-        if parent is None:
-            raise FileNotFoundError(f"no snapshots for table {table!r}")
-        if parent.get("delete_key") not in (None, key):
-            # the reader anti-joins every tombstone file on ONE key; a
-            # second key would schema-merge the earlier files to NULL and
-            # silently disable their deletes
-            raise ValueError(
-                f"table {table!r} already carries tombstones keyed on "
-                f"{parent['delete_key']!r}; cannot add deletes keyed on "
-                f"{key!r} (compact first)"
-            )
-        sid = parent["snapshot_id"] + 1
-        cname = f"c{sid:06d}"
-        ddir = os.path.join(self.table_dir(table), "_deletes", cname)
-        if os.path.isdir(ddir):
-            shutil.rmtree(ddir)
-        keys.select(key).coalesce(1).write.mode("overwrite").parquet(ddir)
-        snap = {
-            "snapshot_id": sid,
-            "parent_id": parent["snapshot_id"],
-            "ts": time.time(),
-            "op": "delete",
-            "written_buckets": [],
-            "mapping": {b: list(c) for b, c in parent["mapping"].items()},
-            "delete_key": key,
-            "delete_files": sorted(
-                parent.get("delete_files", []) + [cname]
-            ),
-        }
-        # a delete does not evolve the schema — carry the parent's forward
-        # so table-schema reads reconcile identically across the delete
-        if "schema" in parent:
-            snap["schema"] = parent["schema"]
+        # restore the schema with the mapping: dropping it would change
+        # read reconciliation
+        if "schema" in target:
+            snap["schema"] = target["schema"]
         self._append(table, snap)
         return snap
 
@@ -352,8 +276,7 @@ class SnapshotCatalog:
         ]
         if not paths:
             raise FileNotFoundError(f"{table!r}: none of {sorted(want)} in snapshot")
-        df = spark.read.option("basePath", tdir).parquet(*paths).drop("_commit")
-        return self._apply_deletes(spark, table, snap, df)
+        return spark.read.option("basePath", tdir).parquet(*paths).drop("_commit")
 
     def expire(self, table: str, keep_last: int = 1) -> dict:
         """Drop all but the last ``keep_last`` snapshots and delete commit
@@ -373,47 +296,12 @@ class SnapshotCatalog:
             if os.path.basename(cdir).split("=", 1)[1] not in referenced:
                 shutil.rmtree(cdir)
                 removed += 1
-        live_deletes = {
-            c for s in retained for c in s.get("delete_files", [])
-        }
-        for ddir in glob.glob(os.path.join(tdir, "_deletes", "c*")):
-            if os.path.basename(ddir) not in live_deletes:
-                shutil.rmtree(ddir)
-                removed += 1
         tmp = self.log_path(table) + ".tmp"
         with open(tmp, "w", encoding="utf-8") as f:
             for s in retained:
                 f.write(json.dumps(s) + "\n")
         os.replace(tmp, self.log_path(table))
         return {"retained": len(retained), "removed_commits": removed}
-
-
-def snapshot_sink(cat: SnapshotCatalog, table: str, key: str, n_buckets: int):
-    """``foreachBatch`` sink with exactly-once table state.
-
-    Structured Streaming's foreachBatch is at-least-once: after a crash the
-    last micro-batch replays with the SAME batch_id. The sink makes the
-    replay a no-op by consulting the snapshot log — batch_id is recorded in
-    the published snapshot, and the log append IS the commit point, so a
-    crash anywhere before it leaves only an orphan data dir (cleaned by
-    ``expire``), and a crash after it makes the replay skip. Combined with
-    the immutable commit dirs this is the idempotent-sink half of
-    end-to-end exactly-once (the source half is the stream checkpoint).
-    """
-    from .catalog import with_bucket
-
-    def write_batch(df: DataFrame, batch_id: int) -> None:
-        if int(batch_id) in cat.committed_batches(table):
-            return  # replayed micro-batch after restart — already published
-        cat.commit(
-            with_bucket(df, key, n_buckets),
-            table,
-            op=f"stream-batch-{batch_id}",
-            batch_id=int(batch_id),
-            mode="append",
-        )
-
-    return write_batch
 
 
 def cdc_diff(
@@ -440,24 +328,9 @@ def cdc_diff(
     actually differ surface as updates.
     """
     changed = set(cat.changed_buckets(table, from_snapshot, to_snapshot))
-    # merge-on-read tombstones are KEY-scoped, not bucket-scoped: a pure
-    # delete snapshot changes delete_files while leaving the bucket->file
-    # mapping identical, so the bucket pruning above would hide every
-    # deleted row. When the delete set differs, diff the full reads (at
-    # scale: bucket the tombstone keys to re-localize, when the delete key
-    # is the bucket key)
-    dels_differ = cat._resolve(table, snapshot_id=from_snapshot).get(
-        "delete_files", []
-    ) != cat._resolve(table, snapshot_id=to_snapshot).get("delete_files", [])
-    old = cat.read(spark, table, snapshot_id=from_snapshot)
-    new = cat.read(spark, table, snapshot_id=to_snapshot)
-    if not dels_differ:
-        old = old.filter(
-            F.col(BUCKET_COL).isin(*changed) if changed else F.lit(False)
-        )
-        new = new.filter(
-            F.col(BUCKET_COL).isin(*changed) if changed else F.lit(False)
-        )
+    in_changed = F.col(BUCKET_COL).isin(*changed) if changed else F.lit(False)
+    old = cat.read(spark, table, snapshot_id=from_snapshot).filter(in_changed)
+    new = cat.read(spark, table, snapshot_id=to_snapshot).filter(in_changed)
     cols = [c for c in new.columns if c not in (key, BUCKET_COL)]
     fp = F.md5(
         F.concat_ws(

@@ -171,20 +171,3 @@ def synth_patterns(spark: SparkSession) -> DataFrame:
         [(p["pattern_id"], p["regex"], p["label"]) for p in REGEX_PATTERNS],
         schema=schemas.PATTERN,
     )
-
-
-def synth_corrections(spark: SparkSession, n_docs: int, seed: int = 42) -> DataFrame:
-    """Manual-correction dimension (FIXTURES.md F4): hits, misses, dupes."""
-    rows = []
-    for i in range(0, n_docs, 7):  # some will match mentions, some won't
-        ne = PERSONS[i % len(PERSONS)]
-        rows.append((ne, "PER", f"doc{i:08d}", "personne", 1, 1, "PER"))
-    for i in range(3, n_docs, 13):
-        loc = LOCATIONS[i % len(LOCATIONS)]
-        rows.append((loc, "LOC", f"doc{i:08d}", "lieu", 1, 0, "LOC"))
-    # duplicate correction rows (deduped by the join, reference ner_config.py:222)
-    if rows:
-        rows.append(rows[0])
-    # a correction that matches nothing
-    rows.append(("Personne Inconnue", "PER", f"doc{n_docs + 5:08d}", "x", 0, 0, "PER"))
-    return spark.createDataFrame(rows, schema=schemas.CORRECTIONS)

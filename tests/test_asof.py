@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
 from ner_spark.operators.asof import asof_join, range_join_binned
 from tests.test_plans import n_exchanges
 

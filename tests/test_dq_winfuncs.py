@@ -182,8 +182,6 @@ def test_weighted_sample_is_deterministic_and_rate_tracks_weights(spark):
     # the max-weight doc of every source is kept with probability ~1
     # (threshold = 2^60); empirical keep rate must exceed half the mean
     # weight ratio and long docs must be kept more often than short ones
-    import statistics
-
     by_len = sorted(docs.items(), key=lambda kv: kv[1][1])
     short = {k for k, _ in by_len[: len(by_len) // 3]}
     long_ = {k for k, _ in by_len[-len(by_len) // 3 :]}

@@ -93,6 +93,17 @@ def test_named_subset_kg_chain_queries():
     )
 
 
+def test_named_subset_snapshot_and_media_queries():
+    """Every registry query on the snapshot log (time travel, schema
+    evolution, CDC), the clustered writers and the multimodal operators,
+    hash-checked against their oracles."""
+    _assert_subset_ok(
+        "catalog_time_travel,catalog_schema_evolution,catalog_cdc_diff,"
+        "table_zorder_stats,multimodal_decode,multimodal_resize_plan,"
+        "multimodal_frame_plan"
+    )
+
+
 def test_register_ivf_oracle_drops_and_restores(tmp_path):
     """Importing the registry registers all four data-dependent oracles;
     ``register_ivf_oracle`` drops them for an sf_dir without embeddings

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+from conftest import synth_corrections
 from oracle import pandas_oracle as O
 from ner_spark.plans.pipeline import KGPipeline
 
@@ -108,7 +109,7 @@ def test_engine_equals_oracle_across_seeds(
     from ner_spark import synth
 
     docs = synth.synth_docs(spark, 150, seed=seed)
-    corr = synth.synth_corrections(spark, 150, seed=seed)
+    corr = synth_corrections(spark, 150, seed=seed)
     oracle = O.run(docs.toPandas(), gaz_rows, pattern_rows, combos, corr.toPandas())
     engine = KGPipeline(
         gazetteer=gazetteer,

@@ -12,7 +12,6 @@ produced by running the same tool with its defaults
 from __future__ import annotations
 
 import json
-import os
 import pathlib
 import subprocess
 import sys

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from ner_spark import schemas
 from ner_spark.operators.canonicalize import canonical_entities
 from ner_spark.operators.linking import excluded_names_filter, link_mentions

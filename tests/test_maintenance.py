@@ -8,7 +8,6 @@ import os
 
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
 
 from ner_spark.sources.catalog import (
     BUCKET_COL,

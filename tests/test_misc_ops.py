@@ -153,27 +153,6 @@ def test_model_extractor_stub_and_real_branch(spark, gazetteer, patterns):
         assert any(r["NE"] == "Marie Curie" for r in real_rows)
 
 
-def test_excel_shim_roundtrip(spark, tmp_path):
-    """Excel interchange shim: .xlsx when an engine exists, CSV fallback
-    otherwise — either way the correction dimension round-trips."""
-    import warnings
-
-    from ner_spark.sources import excel as X
-
-    corr = spark.createDataFrame(
-        [("Marie Curie", "PER", "doc00000001", "personne")],
-        ["NE", "label", "files_id", "manual_cat"],
-    )
-    target = str(tmp_path / "corrections.xlsx")
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        written = X.write_excel(corr, target)
-    assert written.endswith(".xlsx") or written.endswith(".csv")
-    back = X.read_excel_dim(spark, written)
-    assert [tuple(r) for r in back.collect()] == [
-        ("Marie Curie", "PER", "doc00000001", "personne")
-    ]
-
 def test_stanza_branch_probe_and_stub(spark, gazetteer, patterns):
     """source "stanza" routes through the Stanza probe (not the spaCy one);
     with the model absent the deterministic stub runs, and the stub output
@@ -205,26 +184,6 @@ def test_stanza_branch_probe_and_stub(spark, gazetteer, patterns):
     if M._have_stanza():  # pragma: no cover - only with a native model
         real_rows = mentions("stanza", True)
         assert any(r["NE"] == "Marie Curie" for r in real_rows)
-
-
-def test_csv_tolerant_quarantines_malformed_rows(spark, tmp_path):
-    from ner_spark.sources.csv_tolerant import read_csv_tolerant
-
-    p = tmp_path / "in.csv"
-    p.write_text(
-        "doc_id,score,label\n"
-        "1,0.5,ok\n"
-        "not_an_int,0.7,bad_id\n"
-        "2,0.9,ok2\n"
-        "3,oops,bad_score\n"
-    )
-    clean, quarantine = read_csv_tolerant(
-        spark, str(p), "doc_id INT, score DOUBLE, label STRING"
-    )
-    got = sorted((r["doc_id"], r["score"], r["label"]) for r in clean.collect())
-    assert got == [(1, 0.5, "ok"), (2, 0.9, "ok2")]
-    bad = sorted(r["raw_line"] for r in quarantine.collect())
-    assert bad == ["3,oops,bad_score", "not_an_int,0.7,bad_id"]
 
 
 def test_training_examples_contexts_and_split(spark):

@@ -11,7 +11,6 @@ from __future__ import annotations
 import io
 from contextlib import redirect_stdout
 
-import pytest
 from pyspark.sql import functions as F
 
 from ner_spark import schemas, synth

@@ -12,9 +12,8 @@ deterministic API shims (tests/_model_shims/{spacy,stanza}).
 The contract check runs in a SUBPROCESS whose PYTHONPATH puts the shims
 first. Isolation is the point: importable-as-``spacy`` code on the MAIN
 session's path would flip the driver probe and route every entry point —
-the pipeline, the flagship queries, the streaming ingest — off the
-oracle-pinned stub, so the shims must never leak onto this process's
-path. The subprocess asserts the stub-vs-real contract (default routing
+the pipeline and the flagship queries — off the oracle-pinned stub, so
+the shims must never leak onto this process's path. The subprocess asserts the stub-vs-real contract (default routing
 reaches the real model, schema parity, row accounting, row-relative
 offsets, lazy-singleton per-process loads); see
 tests/_model_shims/run_real_branch_check.py for the assertions.

@@ -6,7 +6,7 @@ binning invariants, and n-gram novelty vs a dict-based first-seen scan."""
 
 from __future__ import annotations
 
-from collections import Counter, defaultdict
+from collections import defaultdict
 
 import numpy as np
 import pandas as pd

@@ -90,48 +90,6 @@ def test_unpublished_commit_dir_is_invisible_and_reclaimed(spark, tmp_path):
     assert _counts(cat.read(spark, "t"))[2] == 1
 
 
-def test_streaming_snapshot_sink_exactly_once(spark, tmp_path):
-    """File stream -> foreachBatch -> snapshot commits: one snapshot per
-    micro-batch, replayed batch ids are no-ops, final table == input."""
-    from ner_spark.sources.snapshots import snapshot_sink
-
-    src = tmp_path / "in"
-    for chunk in range(2):
-        spark.range(chunk * 20, chunk * 20 + 20).select(
-            F.col("id").alias("k"), (F.col("id") * 7).alias("v")
-        ).coalesce(1).write.parquet(str(src / f"chunk={chunk}"))
-
-    cat = SnapshotCatalog(str(tmp_path / "cat"))
-    sink = snapshot_sink(cat, "t", key="k", n_buckets=4)
-    stream = (
-        spark.readStream.schema("k long, v long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    snaps = cat.snapshots("t")
-    assert len(snaps) == 2  # one micro-batch per file
-    assert cat.committed_batches("t") == {0, 1}
-    got = {
-        (int(r["k"]), int(r["v"]))
-        for r in cat.read(spark, "t").select("k", "v").collect()
-    }
-    assert got == {(i, i * 7) for i in range(40)}
-
-    # a post-crash replay of the last micro-batch must not double-publish
-    last_batch = spark.read.parquet(str(src / "chunk=1"))
-    sink(last_batch, 1)
-    assert len(cat.snapshots("t")) == 2
-    assert len(cat.read(spark, "t").collect()) == 40
-
-
 def test_incremental_recompute_only_changed_buckets(spark, tmp_path):
     """Snapshot diff drives incremental recomputation: after an overwrite
     touching one bucket, the downstream stage re-reads exactly that bucket
@@ -161,46 +119,6 @@ def test_incremental_recompute_only_changed_buckets(spark, tmp_path):
     merged = {**old, **inc_part}
     assert merged == full
     assert set(inc_part) == {2}
-
-
-def test_merge_on_read_equality_deletes(spark, tmp_path):
-    """Equality deletes: no data file rewritten, readers apply the
-    tombstones, time travel before the delete still sees the rows, and
-    expire drops delete files with their snapshots."""
-    cat = SnapshotCatalog(str(tmp_path))
-    df = _bucketed(spark, n=30, buckets=4)
-    cat.commit(df, "t")  # snapshot 1
-    dels = spark.range(0, 10).select(F.col("id").alias("k"))
-    s2 = cat.commit_deletes(dels, "t", key="k")  # snapshot 2
-    assert s2["op"] == "delete" and s2["delete_files"] == ["c000002"]
-
-    now = {int(r["k"]) for r in cat.read(spark, "t").select("k").collect()}
-    assert now == set(range(10, 30))
-    before = {
-        int(r["k"])
-        for r in cat.read(spark, "t", snapshot_id=1).select("k").collect()
-    }
-    assert before == set(range(30))
-
-    # a later data commit inherits the tombstones (global equality deletes)
-    extra = with_bucket(
-        spark.range(100, 105).select(F.col("id").alias("k"), F.lit(0).alias("v")),
-        "k",
-        4,
-    )
-    cat.commit(extra, "t", mode="append")  # snapshot 3
-    after = {int(r["k"]) for r in cat.read(spark, "t").select("k").collect()}
-    assert after == set(range(10, 30)) | set(range(100, 105))
-
-    # rollback to snapshot 3 keeps deletes; expire to head drops nothing live
-    res = cat.expire("t", keep_last=1)
-    assert _counts(cat.read(spark, "t"))  # still readable
-    assert os.path.isdir(os.path.join(cat.table_dir("t"), "_deletes", "c000002"))
-
-    # deleting the delete: roll forward with a fresh full commit, then expire
-    cat.commit(df, "t")  # snapshot 4 re-publishes all buckets BUT inherits tombstones
-    still = {int(r["k"]) for r in cat.read(spark, "t").select("k").collect()}
-    assert still.isdisjoint(set(range(10)))  # documented: tombstones persist
 
 
 def test_schema_evolution_add_and_drop_column(spark, tmp_path):
@@ -289,58 +207,3 @@ def test_cdc_diff_classifies_changes(spark, tmp_path):
     ua = {int(r["k"]): r["tag"] for r in out if r["_change_type"] == "U_after"}
     ub = {int(r["k"]): r["tag"] for r in out if r["_change_type"] == "U_before"}
     assert ua[1] == "tagged" and ub[1] is None
-
-
-def test_cdc_diff_reports_pure_delete_snapshot(spark, tmp_path):
-    """A merge-on-read delete changes no bucket mapping; CDC must still
-    report the masked rows as 'D' (the tombstones are key-scoped, so the
-    bucket pruning shortcut does not apply)."""
-    from ner_spark.sources.snapshots import cdc_diff
-
-    cat = SnapshotCatalog(str(tmp_path))
-    cat.commit(_bucketed(spark, n=20, buckets=4), "t")  # snapshot 1
-    dels = spark.range(0, 5).select(F.col("id").alias("k"))
-    cat.commit_deletes(dels, "t", key="k")  # snapshot 2
-    ch = cdc_diff(cat, spark, "t", 1, 2, "k").collect()
-    got = {(int(r["k"]), r["_change_type"]) for r in ch}
-    assert got == {(k, "D") for k in range(5)}
-
-
-def test_rollback_restores_tombstones(spark, tmp_path):
-    """Rolling back to a snapshot that carried tombstones must restore
-    them — not resurrect the deleted rows."""
-    cat = SnapshotCatalog(str(tmp_path))
-    cat.commit(_bucketed(spark, n=20, buckets=4), "t")  # s1
-    cat.commit_deletes(
-        spark.range(0, 5).select(F.col("id").alias("k")), "t", key="k"
-    )  # s2
-    cat.commit(
-        with_bucket(
-            spark.range(100, 105).select(
-                F.col("id").alias("k"), F.lit(0).alias("v")
-            ),
-            "k",
-            4,
-        ),
-        "t",
-        mode="append",
-    )  # s3
-    cat.rollback("t", 2)  # s4 = state of s2
-    now = {int(r["k"]) for r in cat.read(spark, "t").select("k").collect()}
-    assert now == set(range(5, 20))  # deletes still applied, s3 rows gone
-
-
-def test_commit_deletes_rejects_mismatched_key(spark, tmp_path):
-    """A second tombstone set keyed on a DIFFERENT column would silently
-    disable the first one through the schema merge — must be rejected."""
-    import pytest as _pytest
-
-    cat = SnapshotCatalog(str(tmp_path))
-    cat.commit(_bucketed(spark, n=10, buckets=2), "t")
-    cat.commit_deletes(
-        spark.range(0, 2).select(F.col("id").alias("k")), "t", key="k"
-    )
-    with _pytest.raises(ValueError, match="tombstones keyed"):
-        cat.commit_deletes(
-            spark.range(0, 2).select(F.col("id").alias("v")), "t", key="v"
-        )
