@@ -29,6 +29,29 @@ def tokens(col: Column) -> Column:
     return F.split(F.trim(col), r"\s+")
 
 
+def ngrams(toks: str, n: int, fields: tuple[str, ...] = ()) -> Column:
+    """In-order word n-grams of the token-array column named ``toks``: the
+    space-joined strings, or with ``fields`` (one name per position) one
+    struct per gram. Fewer than ``n`` tokens gives ``[]``; a null array
+    gives null. ``queries.ngrams_sql`` is the DuckDB twin.
+
+    NB: ``toks`` must name an already-projected token array, never an
+    inline ``split(...)``: each gram reads its input ``n`` times and
+    Catalyst performs no CSE across those reads, so an inline tokenizer
+    re-tokenizes the text ~n*n_grams times per row (measured 5x slower
+    at sf0.1)."""
+    t = F.col(toks)
+    starts = F.slice(t, 1, F.greatest(F.size(t) - (n - 1), F.lit(0)))
+
+    def gram(x: Column, i: Column) -> Column:
+        parts = [x] + [t[i + j] for j in range(1, n)]
+        if fields:
+            return F.struct(*[p.alias(f) for p, f in zip(parts, fields, strict=True)])
+        return F.concat_ws(" ", *parts)
+
+    return F.transform(starts, gram)
+
+
 def strip_tags(col: Column) -> Column:
     """Remove ``<s>``/``</s>`` sentence tags (reference: casen_config.py:184-189)."""
     return F.regexp_replace(col, r"</?s\b[^>]*>", "")

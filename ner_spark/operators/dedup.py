@@ -26,7 +26,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import ngrams, tokens
 from .scratch import scratch_persist
 
 HASH_P = 1_000_003  # prime modulus for shingle hashing
@@ -75,25 +75,12 @@ def self_join(
     )
 
 
-def _shingles_of(t, n: int):
-    """Word n-grams of a token-array column.
-
-    NB: ``t`` must be a plain column REFERENCE to an already-projected
-    token array — the gram expression references its input 3 times per
-    shingle index, and Catalyst performs no CSE across those references,
-    so an inline ``split(...)`` expression here re-tokenizes the text
-    ~3*n_shingles times per row (measured 5x slowdown at sf0.1). Use
-    :func:`shingled` for the safe two-projection form.
-    """
-    idx = F.sequence(F.lit(0), F.greatest(F.size(t) - n, F.lit(0)))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(t, (i + j + 1).cast("int")) for j in range(n)]
-        ),
-    )
+def _shingles_of(t: str, n: int):
+    """Distinct word n-grams of the token-array column named ``t``
+    (``functions.text.ngrams``, with its projected-column condition); a
+    doc shorter than ``n`` tokens is one whole-text shingle."""
     return F.array_distinct(
-        F.when(F.size(t) >= n, grams).otherwise(F.array(F.concat_ws(" ", t)))
+        F.when(F.size(t) >= n, ngrams(t, n)).otherwise(F.array(F.concat_ws(" ", t)))
     )
 
 
@@ -106,7 +93,7 @@ def shingled(docs: DataFrame) -> DataFrame:
     toks = docs.filter(
         F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
     ).select(F.col("doc_id").alias("doc"), tokens(F.col("text")).alias("_toks"))
-    return toks.select("doc", _shingles_of(F.col("_toks"), 3).alias("sh"))
+    return toks.select("doc", _shingles_of("_toks", 3).alias("sh"))
 
 
 def affine_coeffs(k: int, seed: int = 1234) -> list[tuple[int, int]]:
@@ -656,20 +643,13 @@ def winnow_fingerprints(
     Per-document window frames only — never a global sort; selection of a
     1e9-doc corpus is an embarrassingly parallel scan + local window.
     """
-    base = (
-        docs.filter(F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0))
-        .select("doc_id", tokens(F.col("text")).alias("__toks"))
-        .filter(F.size("__toks") >= k)
-    )
+    base = docs.filter(
+        F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
+    ).select("doc_id", tokens(F.col("text")).alias("__toks"))
     kg = base.select(
         "doc_id",
         F.size("__toks").alias("n"),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(1, size(__toks) - {k} + 1),"
-                f" p -> array_join(slice(__toks, p, {k}), ' '))"
-            )
-        ).alias("pos0", "gram"),
+        F.posexplode(ngrams("__toks", k)).alias("pos0", "gram"),
     ).select(
         "doc_id",
         (F.col("pos0") + 1).alias("pos"),

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import ngrams, tokens
 
 #: tiny per-language stopword sets for the n-gram/stopword heuristic
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -223,16 +223,7 @@ def repetition_features(df: DataFrame, text_col: str = "text", id_col: str = "do
             F.count(F.lit(1)).cast("long").alias("n_uniq"),
         )
     )
-    bigrams = base.select(
-        id_col,
-        "n_tokens",
-        F.explode(
-            F.expr(
-                "transform(slice(__toks, 1, size(__toks)-1),"
-                " (x, i) -> concat(x, ' ', __toks[i+1]))"
-            )
-        ).alias("bg"),
-    )
+    bigrams = base.select(id_col, "n_tokens", F.explode(ngrams("__toks", 2)).alias("bg"))
     top_bg = (
         bigrams.groupBy(id_col, "n_tokens", "bg")
         .agg(F.count(F.lit(1)).alias("c"))

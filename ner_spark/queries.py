@@ -345,11 +345,24 @@ def dedup_exact_groups(spark, sf_dir):
     )
 
 
-_SHINGLE_SQL = """
+def ngrams_sql(toks: str, n: int, fields: tuple[str, ...] = ()) -> str:
+    """DuckDB twin of ``functions.text.ngrams``: the in-order word n-grams
+    of the token list ``toks`` as space-joined strings, or with ``fields``
+    as structs (expand with ``unnest(..., recursive := true)``). Fewer
+    than ``n`` tokens gives ``[]`` (``generate_series(1, 0)`` is empty)."""
+    parts = [f"{toks}[i + {j}]" if j else f"{toks}[i]" for j in range(n)]
+    if fields:
+        pairs = zip(fields, parts, strict=True)
+        gram = "{" + ", ".join(f"'{f}': {p}" for f, p in pairs) + "}"
+    else:
+        gram = f"concat_ws(' ', {', '.join(parts)})"
+    return f"list_transform(generate_series(1, len({toks}) - {n - 1}), i -> {gram})"
+
+
+_SHINGLE_SQL = f"""
       SELECT doc_id AS doc,
              CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(generate_series(1, len(toks) - 2),
-                           i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))
+                  THEN list_distinct({ngrams_sql('toks', 3)})
                   ELSE [array_to_string(toks, ' ')] END AS sh
       FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
             FROM documents
@@ -357,15 +370,12 @@ _SHINGLE_SQL = """
 """
 
 #: distinct undirected word-bigram edges (u < v) of the documents
-_BIGRAM_EDGE_SQL = """
+_BIGRAM_EDGE_SQL = f"""
       SELECT DISTINCT least(s, d) AS u, greatest(s, d) AS v
       FROM (
-        SELECT z[1] AS s, z[2] AS d
-        FROM (SELECT unnest(list_zip(toks[1:len(toks)-1], toks[2:])) AS z
-              FROM (SELECT string_split_regex(trim(text), '\\s+') AS toks
-                    FROM documents
-                    WHERE text IS NOT NULL
-                      AND len(string_split_regex(trim(text), '\\s+')) >= 2))
+        SELECT unnest({ngrams_sql('toks', 2, ('s', 'd'))}, recursive := true)
+        FROM (SELECT string_split_regex(trim(text), '\\s+') AS toks
+              FROM documents WHERE text IS NOT NULL)
       ) WHERE s <> d
 """
 

@@ -15,9 +15,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .functions.text import tokens
+from .functions.text import ngrams, tokens
 from .operators.graph import pagerank_fixedpoint, triangle_counts
-from .queries import _t, query
+from .queries import _BIGRAM_EDGE_SQL, _t, ngrams_sql, query
 
 
 @query(
@@ -164,16 +164,12 @@ def events_skew_twophase(spark, sf_dir):
 def _pagerank_oracle_sql(iters: int = 3) -> str:
     """Unrolled fixed-point PageRank: every step is BIGINT multiply /
     truncating division, so the replay is exact (see operators/graph.py)."""
-    head = """
+    head = f"""
     WITH b AS (
       SELECT string_split_regex(trim(text), '\\s+') AS toks
-      FROM documents
-      WHERE text IS NOT NULL AND len(string_split_regex(trim(text), '\\s+')) >= 2
+      FROM documents WHERE text IS NOT NULL
     ),
-    bg AS (
-      SELECT z[1] AS u, z[2] AS v
-      FROM (SELECT unnest(list_zip(toks[1:len(toks)-1], toks[2:])) AS z FROM b)
-    ),
+    bg AS (SELECT unnest({ngrams_sql('toks', 2, ('u', 'v'))}, recursive := true) FROM b),
     e AS (SELECT u, v, count(*) AS w FROM bg GROUP BY 1, 2),
     nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e),
     outdeg AS (SELECT u, sum(w) AS outdeg FROM e GROUP BY 1),
@@ -202,18 +198,9 @@ def wordgraph_pagerank(spark, sf_dir):
     BIGINT arithmetic — the iterative-ranking companion to the CC
     canonicalizer, exact at any parallelism."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = tokens(F.col("text"))
-    base = docs.select(toks.alias("__toks")).filter(F.size("__toks") >= 2)
+    base = docs.select(tokens(F.col("text")).alias("__toks"))
     edges = (
-        base.select(
-            F.explode(
-                F.expr(
-                    "transform(slice(__toks, 1, size(__toks)-1),"
-                    " (x, i) -> struct(x AS src, __toks[i+1] AS dst))"
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
+        base.select(F.inline(ngrams("__toks", 2, ("src", "dst"))))
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
@@ -273,20 +260,8 @@ def nation_top_parts(spark, sf_dir):
     )
 
 
-_TRIANGLE_SQL = """
-    WITH b AS (
-      SELECT string_split_regex(trim(text), '\\s+') AS toks
-      FROM documents
-      WHERE text IS NOT NULL AND len(string_split_regex(trim(text), '\\s+')) >= 2
-    ),
-    bg AS (
-      SELECT z[1] AS s, z[2] AS d
-      FROM (SELECT unnest(list_zip(toks[1:len(toks)-1], toks[2:])) AS z FROM b)
-    ),
-    e AS (
-      SELECT DISTINCT least(s, d) AS u, greatest(s, d) AS v
-      FROM bg WHERE s <> d
-    ),
+_TRIANGLE_SQL = f"""
+    WITH e AS ({_BIGRAM_EDGE_SQL}),
     tri AS (
       SELECT e1.u AS a, e1.v AS b, e2.v AS c
       FROM e e1
@@ -306,17 +281,8 @@ def wordgraph_triangles(spark, sf_dir):
     triangle generated exactly once — the clustering-coefficient companion
     to PageRank and the CC canonicalizer."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = tokens(F.col("text"))
-    base = docs.select(toks.alias("__toks")).filter(F.size("__toks") >= 2)
-    edges = base.select(
-        F.explode(
-            F.expr(
-                "transform(slice(__toks, 1, size(__toks)-1),"
-                " (x, i) -> struct(x AS src, __toks[i+1] AS dst))"
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
-    return triangle_counts(edges)
+    base = docs.select(tokens(F.col("text")).alias("__toks"))
+    return triangle_counts(base.select(F.inline(ngrams("__toks", 2, ("src", "dst")))))
 
 
 @query(
@@ -446,16 +412,12 @@ def lineitem_quantile_buckets(spark, sf_dir):
 
 @query(
     "kg_entity_profiles",
-    """
+    f"""
     WITH b AS (
       SELECT string_split_regex(trim(text), '\\s+') AS toks
-      FROM documents
-      WHERE text IS NOT NULL AND len(string_split_regex(trim(text), '\\s+')) >= 2
+      FROM documents WHERE text IS NOT NULL
     ),
-    bg AS (
-      SELECT z[1] AS u, z[2] AS v
-      FROM (SELECT unnest(list_zip(toks[1:len(toks)-1], toks[2:])) AS z FROM b)
-    ),
+    bg AS (SELECT unnest({ngrams_sql('toks', 2, ('u', 'v'))}, recursive := true) FROM b),
     sym AS (
       SELECT u AS node, v AS nbr FROM bg WHERE u <> v
       UNION ALL
@@ -477,19 +439,9 @@ def kg_entity_profiles(spark, sf_dir):
     partitioned by the node, so a hot surface ranks inside its own
     partition; the co-occurrence count is a map-side-combinable sum."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = tokens(F.col("text"))
-    base = docs.select(toks.alias("__toks")).filter(F.size("__toks") >= 2)
-    bg = (
-        base.select(
-            F.explode(
-                F.expr(
-                    "transform(slice(__toks, 1, size(__toks)-1),"
-                    " (x, i) -> struct(x AS u, __toks[i+1] AS v))"
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .filter(F.col("u") != F.col("v"))
+    base = docs.select(tokens(F.col("text")).alias("__toks"))
+    bg = base.select(F.inline(ngrams("__toks", 2, ("u", "v")))).filter(
+        F.col("u") != F.col("v")
     )
     sym = bg.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionByName(
         bg.select(F.col("v").alias("node"), F.col("u").alias("nbr"))

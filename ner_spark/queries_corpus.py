@@ -15,10 +15,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .functions.text import tokens
+from .functions.text import ngrams, tokens
 from .operators.dedup import explode_ne, md5_60, shingled
 from .oracle_minhash import minhash_cand_cte
-from .queries import _SHINGLE_SQL, _t, query
+from .queries import _SHINGLE_SQL, _t, ngrams_sql, query
 
 # ---------------------------------------------------------------------------
 # dedup_cluster_survivors: verified near-dup pairs -> connected components
@@ -215,15 +215,13 @@ _SPAN_K = 12
 
 _SUBSTRING_SQL = f"""
 WITH t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-  FROM documents WHERE text IS NOT NULL
+  SELECT doc_id, {ngrams_sql('toks', _SPAN_K)} AS grams
+  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
+        FROM documents WHERE text IS NOT NULL)
 ),
 s AS (
-  SELECT doc_id, p,
-         ('0x' || substr(md5(array_to_string(toks[p:p+{_SPAN_K - 1}], ' ')), 1, 15))::BIGINT
-           AS sh_hash
-  FROM t, unnest(generate_series(1, len(toks) - {_SPAN_K - 1})) AS u(p)
-  WHERE len(toks) >= {_SPAN_K}
+  SELECT doc_id, p, ('0x' || substr(md5(gram), 1, 15))::BIGINT AS sh_hash
+  FROM (SELECT doc_id, unnest(grams) AS gram, generate_subscripts(grams, 1) AS p FROM t)
 )
 SELECT sh_hash,
        CAST(count(*) AS BIGINT) AS n_occ,
@@ -241,23 +239,11 @@ def dedup_substring_spans(spark, sf_dir):
     dedup of training corpora."""
     K = _SPAN_K
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    base = docs.select(
-        "doc_id", tokens(F.col("text")).alias("toks")
-    ).filter(F.size("toks") >= K)  # sequence(1, n<1) would count DOWN in Spark
+    base = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
     shingles = base.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, size(toks) - {K - 1}),"
-                f" p -> struct(p AS pos,"
-                f" conv(substring(md5(array_join(slice(toks, p, {K}), ' ')), 1, 15),"
-                f" 16, 10) AS h))"
-            )
-        ).alias("s"),
+        "doc_id", F.posexplode(ngrams("toks", K)).alias("pos0", "gram")
     ).select(
-        "doc_id",
-        F.col("s.pos").alias("p"),
-        F.col("s.h").cast("long").alias("sh_hash"),
+        "doc_id", (F.col("pos0") + 1).alias("p"), md5_60(F.col("gram")).alias("sh_hash")
     )
     key = F.col("doc_id") * 1000000 + F.col("p")
     return (

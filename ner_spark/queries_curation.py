@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .flagship import _GAZ
+from .functions.text import ngrams
 from .queries import _t, query
 
 #: PER surface forms from the shared gazetteer, longest-first so regex
@@ -90,15 +91,7 @@ def doc_repetition_filter(spark, sf_dir):
         "doc_id",
         F.split(F.trim(F.regexp_replace("text", r"\s+", " ")), " ").alias("toks"),
     )
-    tg = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(slice(toks, 1, greatest(size(toks) - 2, 0)),"
-                " (x, i) -> concat_ws(' ', x, toks[i + 1], toks[i + 2]))"
-            )
-        ).alias("trigram"),
-    )
+    tg = toks.select("doc_id", F.explode(ngrams("toks", 3)).alias("trigram"))
     cnt = tg.groupBy("doc_id", "trigram").agg(F.count(F.lit(1)).alias("c"))
     dup = F.coalesce(F.sum(F.when(F.col("c") > 1, F.col("c"))), F.lit(0))
     tot = F.sum("c").cast("double")

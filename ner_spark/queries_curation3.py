@@ -35,11 +35,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .functions.text import tokens
+from .functions.text import ngrams, tokens
 from .operators.dedup import md5_60
 from .operators.scratch import scratch_persist
 from .oracle_minhash import md5_60_sql
-from .queries import _t, query
+from .queries import _t, ngrams_sql, query
 
 _B = 1024  # feature-hash buckets
 _TARGET_LANG = "en"
@@ -52,10 +52,7 @@ _DSIR_SQL = f"""
       WHERE text IS NOT NULL AND length(trim(text)) > 0
     ),
     feats AS (
-      SELECT doc_id, lang, unnest(list_concat(
-          toks,
-          list_transform(generate_series(1, len(toks) - 1),
-                         i -> concat(toks[i], ' ', toks[i + 1])))) AS feat
+      SELECT doc_id, lang, unnest(list_concat(toks, {ngrams_sql('toks', 2)})) AS feat
       FROM d
     ),
     fb AS (
@@ -99,14 +96,10 @@ def corpus_importance_weights(spark, sf_dir):
     )
     toks = tokens(F.col("text"))
     d = docs.select("doc_id", "lang", toks.alias("toks"))
-    n_bi = F.greatest(F.size("toks") - 1, F.lit(0))
-    bigrams = F.zip_with(
-        F.slice(F.col("toks"), 1, n_bi),
-        F.slice(F.col("toks"), 2, n_bi),
-        lambda x, y: F.concat_ws(" ", x, y),
-    )
     feats = d.select(
-        "doc_id", "lang", F.explode(F.concat(F.col("toks"), bigrams)).alias("feat")
+        "doc_id",
+        "lang",
+        F.explode(F.concat(F.col("toks"), ngrams("toks", 2))).alias("feat"),
     )
     fb = scratch_persist(
         feats.select(

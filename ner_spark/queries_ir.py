@@ -52,8 +52,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .functions.text import tokens
-from .queries import _t, query
+from .functions.text import ngrams, tokens
+from .queries import _t, ngrams_sql, query
 
 # shared tokenization (identical to the pagerank/textmine queries)
 _TOKS_SQL = "string_split_regex(trim(text), '\\s+')"
@@ -85,9 +85,9 @@ _PMI_SQL = f"""
     ),
     tot AS (SELECT sum(c) AS n_uni FROM uni),
     bg AS (
-      SELECT z[1] AS w1, z[2] AS w2, count(*) AS c_xy
-      FROM (SELECT unnest(list_zip(toks[1:len(toks)-1], toks[2:])) AS z
-            FROM b WHERE len(toks) >= 2)
+      SELECT w1, w2, count(*) AS c_xy
+      FROM (SELECT unnest({ngrams_sql('toks', 2, ('w1', 'w2'))}, recursive := true)
+            FROM b)
       GROUP BY 1, 2
     ),
     btot AS (SELECT sum(c_xy) AS n_bi FROM bg),
@@ -125,16 +125,8 @@ def collocation_pmi(spark, sf_dir):
     )
     tot = uni.agg(F.sum("c").alias("n_uni"))
     bg_all = (
-        base.filter(F.size("__toks") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(slice(__toks, 1, size(__toks)-1),"
-                    " (x, i) -> struct(x AS w1, __toks[i+1] AS w2))"
-                )
-            ).alias("e")
-        )
-        .groupBy(F.col("e.w1").alias("w1"), F.col("e.w2").alias("w2"))
+        base.select(F.inline(ngrams("__toks", 2, ("w1", "w2"))))
+        .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c_xy"))
     )
     # N_bi is the total over ALL bigrams — computed before the min-count cut
@@ -265,17 +257,15 @@ from .operators.dedup import WINNOW_POS_BITS as _POS_BITS  # noqa: E402
 
 _WINNOW_SQL = f"""
     WITH b AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks
-      FROM documents
-      WHERE text IS NOT NULL AND length(trim(text)) > 0
-        AND len({_TOKS_SQL}) >= {_WIN_K}
+      SELECT doc_id, {ngrams_sql('toks', _WIN_K)} AS grams
+      FROM (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
+            WHERE text IS NOT NULL AND length(trim(text)) > 0)
     ),
     kg AS (
-      SELECT doc_id, p AS pos,
-             ('0x' || substr(md5(array_to_string(toks[p : p + {_WIN_K} - 1], ' ')),
-                             1, 15))::BIGINT % {_HASH_MOD} AS h30,
-             len(toks) - {_WIN_K} + 1 AS m
-      FROM b, unnest(range(1, len(toks) - {_WIN_K} + 2)) AS u(p)
+      SELECT doc_id, pos,
+             ('0x' || substr(md5(gram), 1, 15))::BIGINT % {_HASH_MOD} AS h30, m
+      FROM (SELECT doc_id, unnest(grams) AS gram,
+                   generate_subscripts(grams, 1) AS pos, len(grams) AS m FROM b)
     ),
     keyed AS (
       SELECT doc_id, pos, m,
@@ -415,15 +405,11 @@ def dedup_chunk_global(spark, sf_dir):
 
 def _labelprop_oracle_sql(rounds: int = 2) -> str:
     head = f"""
-    WITH b AS (
-      SELECT {_TOKS_SQL} AS toks
-      FROM documents
-      WHERE text IS NOT NULL AND len({_TOKS_SQL}) >= 2
-    ),
+    WITH b AS (SELECT {_TOKS_SQL} AS toks FROM documents WHERE text IS NOT NULL),
     bg AS (
-      SELECT z[1] AS u, z[2] AS v
-      FROM (SELECT unnest(list_zip(toks[1:len(toks)-1], toks[2:])) AS z FROM b)
-      WHERE z[1] <> z[2]
+      SELECT * FROM (SELECT unnest({ngrams_sql('toks', 2, ('u', 'v'))}, recursive := true)
+                     FROM b)
+      WHERE u <> v
     ),
     d AS (SELECT u, v, count(*) AS w FROM bg GROUP BY 1, 2),
     e AS (
@@ -460,17 +446,9 @@ def wordgraph_labelprop(spark, sf_dir):
     current labels, ties to the lexicographically smallest label."""
     from .operators.graph import label_propagation
 
-    base = _base_tokens(spark, sf_dir).filter(F.size("__toks") >= 2)
     edges = (
-        base.select(
-            F.explode(
-                F.expr(
-                    "transform(slice(__toks, 1, size(__toks)-1),"
-                    " (x, i) -> struct(x AS src, __toks[i+1] AS dst))"
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
+        _base_tokens(spark, sf_dir)
+        .select(F.inline(ngrams("__toks", 2, ("src", "dst"))))
         .filter(F.col("src") != F.col("dst"))
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))

@@ -36,9 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .functions.text import tokens
+from .functions.text import ngrams, tokens
 from .operators.scratch import scratch_persist
-from .queries import _t, query
+from .queries import _t, ngrams_sql, query
 
 # ---------------------------------------------------------------------------
 # fuzzy entity linking
@@ -367,16 +367,12 @@ def events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # incremental connected components (delta canonicalization)
 # ---------------------------------------------------------------------------
 
-_INC_SQL = """
+_INC_SQL = f"""
 WITH RECURSIVE b AS (
   SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-  FROM documents
-  WHERE text IS NOT NULL AND len(string_split_regex(trim(text), '\\s+')) >= 2
+  FROM documents WHERE text IS NOT NULL
 ),
-bg AS (
-  SELECT z[1] AS u, z[2] AS v
-  FROM (SELECT unnest(list_zip(toks[1:len(toks)-1], toks[2:])) AS z FROM b)
-),
+bg AS (SELECT unnest({ngrams_sql('toks', 2, ('u', 'v'))}, recursive := true) FROM b),
 e AS (
   SELECT DISTINCT u, v FROM bg
   WHERE substr(u, 1, 1) = substr(v, 1, 1) AND u <> v
@@ -401,19 +397,9 @@ def kg_incremental_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.canonicalize import connected_components, incremental_components
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = tokens(F.col("text"))
-    base = docs.select("doc_id", toks.alias("__toks")).filter(F.size("__toks") >= 2)
+    base = docs.select("doc_id", tokens(F.col("text")).alias("__toks"))
     bigrams = (
-        base.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(slice(__toks, 1, size(__toks)-1),"
-                    " (x, i) -> struct(x AS u, __toks[i+1] AS v))"
-                )
-            ).alias("e"),
-        )
-        .select("doc_id", "e.u", "e.v")
+        base.select("doc_id", F.inline(ngrams("__toks", 2, ("u", "v"))))
         .filter(
             (F.substring("u", 1, 1) == F.substring("v", 1, 1))
             & (F.col("u") != F.col("v"))
@@ -439,16 +425,12 @@ def kg_incremental_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _khop_oracle_sql(hops: int = 3) -> str:
-    head = """
+    head = f"""
     WITH b AS (
       SELECT string_split_regex(trim(text), '\\s+') AS toks
-      FROM documents
-      WHERE text IS NOT NULL AND len(string_split_regex(trim(text), '\\s+')) >= 2
+      FROM documents WHERE text IS NOT NULL
     ),
-    bg AS (
-      SELECT z[1] AS u, z[2] AS v
-      FROM (SELECT unnest(list_zip(toks[1:len(toks)-1], toks[2:])) AS z FROM b)
-    ),
+    bg AS (SELECT unnest({ngrams_sql('toks', 2, ('u', 'v'))}, recursive := true) FROM b),
     e AS (SELECT DISTINCT u, v FROM bg),
     nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e),
     r0 AS (
@@ -476,20 +458,8 @@ def wordgraph_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the bounded-iteration companion to the connected-components
     canonicalizer, operators/canonicalize.py)."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = tokens(F.col("text"))
-    base = docs.select(toks.alias("__toks")).filter(F.size("__toks") >= 2)
-    edges = (
-        base.select(
-            F.explode(
-                F.expr(
-                    "transform(slice(__toks, 1, size(__toks)-1),"
-                    " (x, i) -> struct(x AS u, __toks[i+1] AS v))"
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .distinct()
-    )
+    base = docs.select(tokens(F.col("text")).alias("__toks"))
+    edges = base.select(F.inline(ngrams("__toks", 2, ("u", "v")))).distinct()
     nodes = (
         edges.select(F.col("u").alias("node"))
         .union(edges.select(F.col("v").alias("node")))

@@ -48,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .functions.text import tokens
+from .functions.text import ngrams, tokens
 from .queries import _BIGRAM_EDGE_SQL, _SHINGLE_SQL, _t, query
 
 # ---------------------------------------------------------------------------
@@ -284,16 +284,8 @@ def wordgraph_link_predict(spark, sf_dir):
     from .operators.graph import link_prediction_cn
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = tokens(F.col("text"))
-    base = docs.select(toks.alias("__toks")).filter(F.size("__toks") >= 2)
-    edges = base.select(
-        F.explode(
-            F.expr(
-                "transform(slice(__toks, 1, size(__toks)-1),"
-                " (x, i) -> struct(x AS src, __toks[i+1] AS dst))"
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
+    base = docs.select(tokens(F.col("text")).alias("__toks"))
+    edges = base.select(F.inline(ngrams("__toks", 2, ("src", "dst"))))
     return link_prediction_cn(edges)
 
 

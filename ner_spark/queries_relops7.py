@@ -45,8 +45,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .functions.text import tokens
-from .queries import _BIGRAM_EDGE_SQL, _t, query
+from .functions.text import ngrams, tokens
+from .queries import _BIGRAM_EDGE_SQL, _t, ngrams_sql, query
 
 # ---------------------------------------------------------------------------
 # tpch_q7: volume shipping between two nations
@@ -190,7 +190,7 @@ def tpch_q13(spark, sf_dir):
 # doc_repetition_signals: Gopher-style repetition quality metrics
 # ---------------------------------------------------------------------------
 
-_REP_SQL = """
+_REP_SQL = f"""
     WITH base AS (
       SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
       FROM documents
@@ -201,13 +201,7 @@ _REP_SQL = """
              len(list_distinct(toks)) AS n_distinct, toks
       FROM base
     ),
-    g2 AS (
-      SELECT doc_id,
-             concat_ws(' ', toks[i], toks[i+1]) AS gram
-      FROM (SELECT doc_id, toks,
-                   unnest(generate_series(1, len(toks) - 1)) AS i
-            FROM t WHERE n_tokens >= 2)
-    ),
+    g2 AS (SELECT doc_id, unnest({ngrams_sql('toks', 2)}) AS gram FROM t),
     g2c AS (
       SELECT doc_id, gram, count(*) AS cnt FROM g2 GROUP BY 1, 2
     ),
@@ -219,14 +213,7 @@ _REP_SQL = """
             FROM g2c)
       WHERE rn = 1
     ),
-    g5 AS (
-      SELECT doc_id,
-             concat_ws(' ', toks[i], toks[i+1], toks[i+2],
-                            toks[i+3], toks[i+4]) AS gram
-      FROM (SELECT doc_id, toks,
-                   unnest(generate_series(1, len(toks) - 4)) AS i
-            FROM t WHERE n_tokens >= 5)
-    ),
+    g5 AS (SELECT doc_id, unnest({ngrams_sql('toks', 5)}) AS gram FROM t),
     g5c AS (
       SELECT doc_id, count(*) AS n5_total,
              count(DISTINCT gram) AS n5_distinct
@@ -271,18 +258,7 @@ def doc_repetition_signals(spark, sf_dir):
             F.size(F.array_distinct(toks)).cast("long").alias("n_distinct"),
         )
     )
-    g2 = (
-        t.filter(F.col("n_tokens") >= 2)
-        .select(
-            "doc_id",
-            F.explode(F.sequence(F.lit(0), (F.size("toks") - 2).cast("int"))).alias("i"),
-            "toks",
-        )
-        .select(
-            "doc_id",
-            F.concat_ws(" ", F.expr("toks[i]"), F.expr("toks[i+1]")).alias("gram"),
-        )
-    )
+    g2 = t.select("doc_id", F.explode(ngrams("toks", 2)).alias("gram"))
     g2c = g2.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy("doc_id").orderBy(F.col("cnt").desc(), F.col("gram").asc())
     g2top = (
@@ -290,25 +266,7 @@ def doc_repetition_signals(spark, sf_dir):
         .filter(F.col("rn") == 1)
         .select("doc_id", F.col("gram").alias("top_2gram"), F.col("cnt").alias("top_2gram_n"))
     )
-    g5 = (
-        t.filter(F.col("n_tokens") >= 5)
-        .select(
-            "doc_id",
-            F.explode(F.sequence(F.lit(0), (F.size("toks") - 5).cast("int"))).alias("i"),
-            "toks",
-        )
-        .select(
-            "doc_id",
-            F.concat_ws(
-                " ",
-                F.expr("toks[i]"),
-                F.expr("toks[i+1]"),
-                F.expr("toks[i+2]"),
-                F.expr("toks[i+3]"),
-                F.expr("toks[i+4]"),
-            ).alias("gram"),
-        )
-    )
+    g5 = t.select("doc_id", F.explode(ngrams("toks", 5)).alias("gram"))
     g5c = g5.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n5_total"),
         F.countDistinct("gram").alias("n5_distinct"),
@@ -440,14 +398,6 @@ def wordgraph_clustering_coeff(spark, sf_dir):
     from .operators.graph import clustering_coefficients
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = tokens(F.col("text"))
-    base = docs.select(toks.alias("__toks")).filter(F.size("__toks") >= 2)
-    edges = base.select(
-        F.explode(
-            F.expr(
-                "transform(slice(__toks, 1, size(__toks)-1),"
-                " (x, i) -> struct(x AS src, __toks[i+1] AS dst))"
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
+    base = docs.select(tokens(F.col("text")).alias("__toks"))
+    edges = base.select(F.inline(ngrams("__toks", 2, ("src", "dst"))))
     return clustering_coefficients(edges)

@@ -43,9 +43,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.text import tokens
+from .functions.text import ngrams, tokens
 from .operators.dedup import md5_60
-from .queries import _t, query
+from .queries import _t, ngrams_sql, query
 
 # ---------------------------------------------------------------------------
 # KMV distinct-count sketch
@@ -423,10 +423,7 @@ WITH d AS (
   SELECT lang, string_split_regex(trim(lower(text)), '\\s+') AS toks
   FROM documents WHERE text IS NOT NULL AND lang IN ('en', 'fr')
 ),
-sh AS (
-  SELECT DISTINCT lang, toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS s
-  FROM d, unnest(generate_series(1, len(toks) - 2)) AS g(i)
-),
+sh AS (SELECT DISTINCT lang, unnest({ngrams_sql('toks', 3)}) AS s FROM d),
 marks AS (
   SELECT s,
          max(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS has_a,
@@ -494,19 +491,7 @@ def sketch_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text").isNotNull() & F.col("lang").isin("en", "fr")
     )
     toked = docs.select("lang", tokens(F.lower("text")).alias("toks"))
-    # guard: sequence(1, 0) DESCENDS in Spark (DuckDB's generate_series is
-    # empty) — short docs must produce zero shingles on both engines
-    sh = toked.select(
-        "lang",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(toks) >= 3 THEN "
-                "transform(sequence(1, size(toks) - 2), "
-                "i -> concat_ws(' ', toks[i-1], toks[i], toks[i+1])) "
-                "ELSE array() END"
-            )
-        ).alias("s"),
-    ).distinct()
+    sh = toked.select("lang", F.explode(ngrams("toks", 3)).alias("s")).distinct()
     # exact side: one shuffle on the shingle, map-side-combinable counts
     marks = sh.groupBy("s").agg(
         F.max(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("has_a"),
@@ -683,8 +668,7 @@ _HLL_SQL = f"""
     WITH sh AS (
       SELECT lang,
              CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(generate_series(1, len(toks) - 2),
-                           i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))
+                  THEN list_distinct({ngrams_sql('toks', 3)})
                   ELSE [array_to_string(toks, ' ')] END AS shl
       FROM (SELECT lang, string_split_regex(trim(text), '\\s+') AS toks
             FROM documents
@@ -743,7 +727,7 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.filter(
         F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
     ).select("lang", tokens(F.col("text")).alias("_toks"))
-    flat = base.select("lang", explode_ne(_shingles_of(F.col("_toks"), 3)).alias("s"))
+    flat = base.select("lang", explode_ne(_shingles_of("_toks", 3)).alias("s"))
     h = md5_60(F.col("s"))
     rest = F.shiftright(h, 8)
     rho = F.when(rest == 0, F.lit(53)).otherwise(

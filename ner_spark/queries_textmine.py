@@ -19,7 +19,7 @@ from .operators.textstats import (
     repetition_features,
     tfidf_topk,
 )
-from .queries import _t, query
+from .queries import _t, ngrams_sql, query
 
 
 @query(
@@ -55,7 +55,7 @@ def q_tfidf_topk(spark, sf_dir):
 
 @query(
     "doc_repetition",
-    """
+    f"""
     WITH b AS (
       SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
       FROM documents WHERE text IS NOT NULL
@@ -71,10 +71,7 @@ def q_tfidf_topk(spark, sf_dir):
       FROM wc
     ),
     bgs AS (
-      SELECT doc_id, len(toks) AS n_tokens, z[1] || ' ' || z[2] AS bg
-      FROM (SELECT doc_id, toks,
-                   unnest(list_zip(toks[1:len(toks)-1], toks[2:])) AS z
-            FROM b)
+      SELECT doc_id, len(toks) AS n_tokens, unnest({ngrams_sql('toks', 2)}) AS bg FROM b
     ),
     bc AS (SELECT doc_id, n_tokens, bg, count(*) AS c FROM bgs GROUP BY 1, 2, 3),
     top_bg AS (

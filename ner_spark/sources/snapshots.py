@@ -88,7 +88,10 @@ class SnapshotCatalog:
         extends (``mode="append"``: the new files sit beside the bucket's
         existing ones) the written buckets — the parent snapshot stays
         readable either way. The mapping is bucket -> [commit dirs],
-        Iceberg's manifest list keyed by partition."""
+        Iceberg's manifest list keyed by partition. Any other ``mode``
+        raises ``ValueError`` before anything is written."""
+        if mode not in ("overwrite", "append"):
+            raise ValueError(f"mode must be 'overwrite' or 'append', not {mode!r}")
         parent = self.current(table)
         sid = (parent["snapshot_id"] + 1) if parent else 1
         cname = f"c{sid:06d}"
@@ -119,7 +122,7 @@ class SnapshotCatalog:
             "snapshot_id": sid,
             "parent_id": parent["snapshot_id"] if parent else None,
             "ts": time.time(),
-            "op": "overwrite-buckets",
+            "op": f"{mode}-buckets",
             "written_buckets": written,
             "mapping": mapping,
             # the snapshot's schema (Iceberg: schema evolves with commits;

@@ -104,6 +104,21 @@ def test_named_subset_snapshot_and_media_queries():
     )
 
 
+def test_named_subset_ngram_family_queries():
+    """The word-n-gram queries no other subset covers — the word-bigram
+    graph family, the repetition signals, positional k-gram spans, PMI
+    collocations, KMV set operations and DSIR weights, all built on
+    ``functions.text.ngrams`` — hash-checked against oracles built on its
+    DuckDB twin ``queries.ngrams_sql``."""
+    _assert_subset_ok(
+        "dedup_substring_spans,doc_repetition,doc_repetition_filter,"
+        "doc_repetition_signals,wordgraph_pagerank,wordgraph_triangles,"
+        "wordgraph_khop,wordgraph_link_predict,wordgraph_clustering_coeff,"
+        "wordgraph_labelprop,kg_entity_profiles,kg_incremental_canonical,"
+        "collocation_pmi,sketch_kmv_setops,corpus_importance_weights"
+    )
+
+
 def test_register_ivf_oracle_drops_and_restores(tmp_path):
     """Importing the registry registers all four data-dependent oracles;
     ``register_ivf_oracle`` drops them for an sf_dir without embeddings

@@ -119,7 +119,7 @@ class TestHLL:
 
         base = df.select("lang", tokens(F.col("text")).alias("_toks"))
         flat = base.select(
-            "lang", F.explode(_shingles_of(F.col("_toks"), 3)).alias("s")
+            "lang", F.explode(_shingles_of("_toks", 3)).alias("s")
         )
         from ner_spark.operators.dedup import md5_60
 

@@ -7,7 +7,7 @@ import glob
 
 from pyspark.sql import functions as F
 
-from ner_spark.functions.text import strip_tags
+from ner_spark.functions.text import ngrams, strip_tags
 from ner_spark.operators import consensus as C
 from ner_spark.plans.pipeline import summarize
 from ner_spark.sources import casen_xml as CX
@@ -125,6 +125,46 @@ def test_strip_tags(spark):
     df = spark.createDataFrame([("a</s> <s>b <s id=\"1\">c",)], ["t"])
     [r] = df.select(strip_tags(F.col("t")).alias("s")).collect()
     assert r["s"] == "a b c"
+
+
+def test_ngrams_twins_follow_one_rule(spark):
+    """``ngrams`` (string and ``fields`` forms) and its DuckDB twin
+    ``ngrams_sql`` give the plain-Python n-grams at 0, 1, n-1, n and n+3
+    tokens, and null for a null array. At n-1 tokens a descending
+    ``sequence(1, 0)`` would emit a gram."""
+    import duckdb
+
+    from ner_spark.queries import ngrams_sql
+
+    con = duckdb.connect()
+    for n in (2, 3, 5, 12):
+        fields = tuple(f"p{j}" for j in range(n))
+        arrays = [[f"w{j}" for j in range(k)] for k in (0, 1, n - 1, n, n + 3)]
+        arrays.append(None)
+        want = [
+            None if t is None else [" ".join(t[i : i + n]) for i in range(len(t) - n + 1)]
+            for t in arrays
+        ]
+
+        def joined(grams):
+            return None if grams is None else [" ".join(g[f] for f in fields) for g in grams]
+
+        df = spark.createDataFrame(list(enumerate(arrays)), "id int, toks array<string>")
+        rows = (
+            df.select("id", ngrams("toks", n).alias("g"), ngrams("toks", n, fields).alias("s"))
+            .orderBy("id")
+            .collect()
+        )
+        assert [r["g"] for r in rows] == want, n
+        assert [joined(r["s"]) for r in rows] == want, n
+
+        sql = (
+            f"SELECT {ngrams_sql('toks', n)}, {ngrams_sql('toks', n, fields)}"
+            " FROM (SELECT ?::VARCHAR[] AS toks)"
+        )
+        got = [con.execute(sql, [t]).fetchone() for t in arrays]
+        assert [g for g, _ in got] == want, n
+        assert [joined(s) for _, s in got] == want, n
 
 
 def test_model_extractor_stub_and_real_branch(spark, gazetteer, patterns):

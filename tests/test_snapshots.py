@@ -5,6 +5,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from ner_spark.sources.catalog import BUCKET_COL, with_bucket
@@ -90,6 +91,16 @@ def test_unpublished_commit_dir_is_invisible_and_reclaimed(spark, tmp_path):
     assert _counts(cat.read(spark, "t"))[2] == 1
 
 
+def test_unknown_commit_mode_writes_nothing(spark, tmp_path):
+    """A commit mode other than overwrite/append fails before the data
+    write: no commit dir, no snapshot."""
+    cat = SnapshotCatalog(str(tmp_path))
+    with pytest.raises(ValueError, match="merge"):
+        cat.commit(_bucketed(spark), "t", mode="merge")
+    assert glob.glob(os.path.join(cat.table_dir("t"), "_commit=*")) == []
+    assert cat.snapshots("t") == []
+
+
 def test_incremental_recompute_only_changed_buckets(spark, tmp_path):
     """Snapshot diff drives incremental recomputation: after an overwrite
     touching one bucket, the downstream stage re-reads exactly that bucket
@@ -138,7 +149,12 @@ def test_schema_evolution_add_and_drop_column(spark, tmp_path):
         "k",
         4,
     )
-    cat.commit(v2, "t", mode="append")  # snapshot 2: (k, v, w)
+    snap2 = cat.commit(v2, "t", mode="append")  # snapshot 2: (k, v, w)
+    assert snap2["op"] == "append-buckets"
+    assert [s["op"] for s in cat.snapshots("t")] == [
+        "overwrite-buckets",
+        "append-buckets",
+    ]
 
     cur = cat.read(spark, "t")
     assert set(cur.columns) == {"k", "v", "w", BUCKET_COL}

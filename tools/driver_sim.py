@@ -6,6 +6,9 @@ Spark session starts. The session is sized by ner_spark.session.machine_size.
 Mirrors the driver: registers the parquet tables as DuckDB views, runs each
 Spark query and its oracle SQL, compares row count, column names, and an
 order-insensitive value hash (columns sorted by name, rows sorted).
+Each result line ends in ``vh=<16 hex>``, the value hash of the Spark
+result (``spark/oracle`` when the two differ), so two runs' logs can be
+compared with ``diff``.
 """
 
 from __future__ import annotations
@@ -78,21 +81,25 @@ def main() -> int:
         from ner_spark.operators.scratch import release_scratch
 
         release_scratch()  # per-query scratch caches; memoized stages stay
+        s_hash = value_hash(sdf)
         if name not in oracles:
-            print(f"{name:28s} rows-only rows={len(sdf)}")
+            print(f"{name:28s} rows-only rows={len(sdf)} vh={s_hash}")
             n_rowsonly += 1
             continue
         odf = con.execute(oracles[name]).df()
+        o_hash = value_hash(odf)
         ok_rows = len(sdf) == len(odf)
         ok_cols = sorted(sdf.columns) == sorted(odf.columns)
-        ok_hash = ok_cols and value_hash(sdf) == value_hash(odf)
+        ok_hash = ok_cols and s_hash == o_hash
         status = "OK" if (ok_rows and ok_cols and ok_hash) else "FAIL"
         if status == "OK":
             n_pass += 1
         else:
             n_fail += 1
+        vh = s_hash if ok_hash else f"{s_hash}/{o_hash}"
         print(
-            f"{name:28s} {status} rows={len(sdf)}/{len(odf)} cols={ok_cols} hash={ok_hash} wall={_wall:.1f}s"
+            f"{name:28s} {status} rows={len(sdf)}/{len(odf)} cols={ok_cols}"
+            f" hash={ok_hash} vh={vh} wall={_wall:.1f}s"
         )
         if status == "FAIL" and ok_cols:
             cols = sorted(sdf.columns)
