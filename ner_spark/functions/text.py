@@ -21,11 +21,21 @@ def normalize_ws(col: Column) -> Column:
     return F.trim(F.regexp_replace(col, r"\s+", " "))
 
 
+def has_text(col: Column) -> Column:
+    """The blank-document filter: not null and not all U+0020. A tab-only
+    or newline-only document passes (``trim`` strips spaces only)."""
+    return col.isNotNull() & (F.length(F.trim(col)) > 0)
+
+
 def tokens(col: Column) -> Column:
-    """Whitespace tokens. NB: on empty/whitespace-only text this yields
-    ``['']`` (size 1, the split semantics both engines share), so a blank
-    document scores n_tokens=1 — filter empties FIRST, as every registry
-    query and the curation funnel's empty-text gate do."""
+    """Whitespace tokens. Filter with ``has_text`` first: an empty or
+    all-space document gives ``['']`` (n_tokens=1). Because ``trim``
+    strips U+0020 only, a document that passes the filter can still give
+    empty tokens: a tab-only one gives ``['', '']``, and a leading tab or
+    newline gives a leading ``''``. ``queries.tokens_sql``,
+    ``normalize_ws_sql`` and ``HAS_TEXT_SQL`` are the DuckDB twins of
+    ``tokens``, ``normalize_ws`` and ``has_text``; they agree on every
+    string."""
     return F.split(F.trim(col), r"\s+")
 
 

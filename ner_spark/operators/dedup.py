@@ -26,7 +26,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import ngrams, tokens
+from ..functions.text import has_text, ngrams, tokens
 from .scratch import scratch_persist
 
 HASH_P = 1_000_003  # prime modulus for shingle hashing
@@ -90,9 +90,8 @@ def shingled(docs: DataFrame) -> DataFrame:
     expression reads the resulting attribute. CollapseProject will not
     merge the two projections because the token alias is referenced
     3*n_shingles times and is not cheap — exactly the barrier we want."""
-    toks = docs.filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    ).select(F.col("doc_id").alias("doc"), tokens(F.col("text")).alias("_toks"))
+    docs = docs.filter(has_text(F.col("text")))
+    toks = docs.select(F.col("doc_id").alias("doc"), tokens(F.col("text")).alias("_toks"))
     return toks.select("doc", _shingles_of("_toks", 3).alias("sh"))
 
 
@@ -314,7 +313,7 @@ def _snm_candidates(
         else F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", "")
     )
     keyed = (
-        docs.filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
+        docs.filter(has_text(F.col("text")))
         .select(
             F.col("doc_id").alias("doc"),
             F.substring(norm, 1, key_len).alias("skey"),
@@ -368,11 +367,8 @@ def edit_distance_pairs(
     -1 past ``max_dist``, so rejected candidates cost O(len*max_dist),
     not O(len^2).
     """
-    pay = F.substring(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " ")),
-        1,
-        max_chars,
-    )
+    ascii_words = F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " ")
+    pay = F.substring(F.trim(ascii_words), 1, max_chars)
     pairs = _snm_candidates(docs, window, key_len, block_len, pay)
     dist = F.levenshtein(F.col("pa"), F.col("pb"), max_dist)
     scored = pairs.select(
@@ -528,9 +524,8 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     means the one shuffle carries a single 60-counter row per doc. md5 is
     bit-identical in DuckDB, so the driver oracle replays it.
     """
-    base = docs.filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    ).select(F.col("doc_id").alias("doc"), tokens(F.col("text")).alias("_toks"))
+    docs = docs.filter(has_text(F.col("text")))
+    base = docs.select(F.col("doc_id").alias("doc"), tokens(F.col("text")).alias("_toks"))
     tok = base.select("doc", F.explode("_toks").alias("_t")).withColumn(
         "_h", md5_60(F.col("_t"))
     )
@@ -643,9 +638,8 @@ def winnow_fingerprints(
     Per-document window frames only — never a global sort; selection of a
     1e9-doc corpus is an embarrassingly parallel scan + local window.
     """
-    base = docs.filter(
-        F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
-    ).select("doc_id", tokens(F.col("text")).alias("__toks"))
+    docs = docs.filter(has_text(F.col("text")))
+    base = docs.select("doc_id", tokens(F.col("text")).alias("__toks"))
     kg = base.select(
         "doc_id",
         F.size("__toks").alias("n"),
@@ -759,9 +753,8 @@ def segment_firstseen(docs: DataFrame, width: int = 16) -> DataFrame:
     thing this operator collapses) partial-aggregates before the
     exchange. The aggregate row IS the survivor — no join-back pass.
     """
-    base = docs.filter(
-        F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
-    ).select("doc_id", tokens(F.col("text")).alias("toks"))
+    docs = docs.filter(has_text(F.col("text")))
+    base = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
     idx = base.select(
         "doc_id",
         "toks",

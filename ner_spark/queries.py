@@ -16,7 +16,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.text import tokens
+from .functions.text import has_text, tokens
 
 Q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -34,6 +34,44 @@ def query(name: str, sql: str | None = None):
         return fn
 
     return deco
+
+
+# ---------------------------------------------------------------------------
+# DuckDB twins of functions.text: each rule the oracles share, written once
+# ---------------------------------------------------------------------------
+
+#: Java's ``\s``, the class Spark's regexes use; RE2's ``\s`` lacks ``\x0B``
+WS_CLASS = r"[ \t\n\x0B\f\r]"
+
+
+def tokens_sql(x: str) -> str:
+    """DuckDB twin of ``functions.text.tokens`` over the SQL expression
+    ``x``. ``trim(x, ' ')`` strips U+0020 only, as Spark's ``trim`` does;
+    DuckDB's bare ``trim`` also strips Unicode spaces."""
+    return f"string_split_regex(trim({x}, ' '), '{WS_CLASS}+')"
+
+
+def normalize_ws_sql(x: str) -> str:
+    """DuckDB twin of ``functions.text.normalize_ws``."""
+    return f"trim(regexp_replace({x}, '{WS_CLASS}+', ' ', 'g'), ' ')"
+
+
+#: DuckDB twin of ``functions.text.has_text`` over the ``text`` column
+HAS_TEXT_SQL = "text IS NOT NULL AND length(trim(text, ' ')) > 0"
+
+
+def ngrams_sql(toks: str, n: int, fields: tuple[str, ...] = ()) -> str:
+    """DuckDB twin of ``functions.text.ngrams``: the in-order word n-grams
+    of the token list ``toks`` as space-joined strings, or with ``fields``
+    as structs (expand with ``unnest(..., recursive := true)``). Fewer
+    than ``n`` tokens gives ``[]`` (``generate_series(1, 0)`` is empty)."""
+    parts = [f"{toks}[i + {j}]" if j else f"{toks}[i]" for j in range(n)]
+    if fields:
+        pairs = zip(fields, parts, strict=True)
+        gram = "{" + ", ".join(f"'{f}': {p}" for f, p in pairs) + "}"
+    else:
+        gram = f"concat_ws(' ', {', '.join(parts)})"
+    return f"list_transform(generate_series(1, len({toks}) - {n - 1}), i -> {gram})"
 
 
 # ---------------------------------------------------------------------------
@@ -183,18 +221,16 @@ def kg_priority_vote(spark, sf_dir):
 
 @query(
     "doc_token_count",
-    """
+    f"""
     SELECT doc_id,
-           CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tokens,
+           CAST(len({tokens_sql('text')}) AS BIGINT) AS n_tokens,
            length(text) AS n_chars_obs
-    FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0
+    FROM documents WHERE {HAS_TEXT_SQL}
     """,
 )
 def doc_token_count(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    return docs.filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    ).select(
+    return docs.filter(has_text(F.col("text"))).select(
         "doc_id",
         F.size(tokens(F.col("text"))).cast("long").alias("n_tokens"),
         F.length("text").cast("long").alias("n_chars_obs"),
@@ -203,23 +239,21 @@ def doc_token_count(spark, sf_dir):
 
 @query(
     "doc_quality_score",
-    """
+    f"""
     SELECT doc_id,
-           round(CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
+           round(CAST(len(list_filter({tokens_sql('text')},
                                       t -> t IN ('the', 'a'))) AS DOUBLE)
-                 / len(string_split_regex(trim(text), '\\s+')), 4) AS stopword_ratio,
+                 / len({tokens_sql('text')}), 4) AS stopword_ratio,
            round(CAST(length(text) AS DOUBLE)
-                 / len(string_split_regex(trim(text), '\\s+')), 4) AS chars_per_token
-    FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0
+                 / len({tokens_sql('text')}), 4) AS chars_per_token
+    FROM documents WHERE {HAS_TEXT_SQL}
     """,
 )
 def doc_quality_score(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     stop = F.size(F.filter(toks, lambda t: t.isin("the", "a")))
-    return docs.filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    ).select(
+    return docs.filter(has_text(F.col("text"))).select(
         "doc_id",
         F.round(stop.cast("double") / F.size(toks), 4).alias("stopword_ratio"),
         F.round(F.length("text").cast("double") / F.size(toks), 4).alias("chars_per_token"),
@@ -345,28 +379,14 @@ def dedup_exact_groups(spark, sf_dir):
     )
 
 
-def ngrams_sql(toks: str, n: int, fields: tuple[str, ...] = ()) -> str:
-    """DuckDB twin of ``functions.text.ngrams``: the in-order word n-grams
-    of the token list ``toks`` as space-joined strings, or with ``fields``
-    as structs (expand with ``unnest(..., recursive := true)``). Fewer
-    than ``n`` tokens gives ``[]`` (``generate_series(1, 0)`` is empty)."""
-    parts = [f"{toks}[i + {j}]" if j else f"{toks}[i]" for j in range(n)]
-    if fields:
-        pairs = zip(fields, parts, strict=True)
-        gram = "{" + ", ".join(f"'{f}': {p}" for f, p in pairs) + "}"
-    else:
-        gram = f"concat_ws(' ', {', '.join(parts)})"
-    return f"list_transform(generate_series(1, len({toks}) - {n - 1}), i -> {gram})"
-
-
 _SHINGLE_SQL = f"""
       SELECT doc_id AS doc,
              CASE WHEN len(toks) >= 3
                   THEN list_distinct({ngrams_sql('toks', 3)})
                   ELSE [array_to_string(toks, ' ')] END AS sh
-      FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
+      FROM (SELECT doc_id, {tokens_sql('text')} AS toks
             FROM documents
-            WHERE text IS NOT NULL AND length(trim(text)) > 0)
+            WHERE {HAS_TEXT_SQL})
 """
 
 #: distinct undirected word-bigram edges (u < v) of the documents
@@ -374,7 +394,7 @@ _BIGRAM_EDGE_SQL = f"""
       SELECT DISTINCT least(s, d) AS u, greatest(s, d) AS v
       FROM (
         SELECT unnest({ngrams_sql('toks', 2, ('s', 'd'))}, recursive := true)
-        FROM (SELECT string_split_regex(trim(text), '\\s+') AS toks
+        FROM (SELECT {tokens_sql('text')} AS toks
               FROM documents WHERE text IS NOT NULL)
       ) WHERE s <> d
 """
@@ -557,7 +577,7 @@ _LANGS = ["de", "en", "es", "fr", "zh"]  # alphabetical = tie-break priority
 def _lang_score_sql(lang: str, words) -> str:
     wl = ", ".join(f"'{w}'" for w in words)
     return (
-        f"len(list_filter(string_split_regex(trim(text), '\\s+'), t -> t IN ({wl})))"
+        f"len(list_filter({tokens_sql('text')}, t -> t IN ({wl})))"
     )
 
 
@@ -596,40 +616,38 @@ ORACLE["lang_id_predict"] = _lang_sql()
 
 @query(
     "doc_fingerprint",
-    """
+    f"""
     SELECT doc_id,
            list_reduce(
              list_prepend(0::BIGINT,
-               list_transform(string_split_regex(trim(text), '\\s+'),
+               list_transform({tokens_sql('text')},
                               t -> length(t)*7 + ascii(t[1:1]))),
              (acc, c) -> (acc*31 + c) % 1000000007) AS fingerprint
-    FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0
+    FROM documents WHERE {HAS_TEXT_SQL}
     """,
 )
 def doc_fingerprint_q(spark, sf_dir):
     from .operators.textstats import doc_fingerprint
 
-    return _t(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    ).select("doc_id", doc_fingerprint(F.col("text")).alias("fingerprint"))
+    docs = _t(spark, sf_dir, "documents").filter(has_text(F.col("text")))
+    return docs.select("doc_id", doc_fingerprint(F.col("text")).alias("fingerprint"))
 
 
 @query(
     "bpe_token_count",
-    """
+    f"""
     SELECT doc_id,
            CAST(list_sum(list_transform(
-                 list_filter(string_split_regex(text, '[^\\p{L}\\p{N}]+'), p -> p <> ''),
+                 list_filter(string_split_regex(text, '[^\\p{{L}}\\p{{N}}]+'), p -> p <> ''),
                  p -> CAST(ceil(length(p) / 4.0) AS BIGINT))) AS BIGINT) AS bpe_tokens
-    FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0
+    FROM documents WHERE {HAS_TEXT_SQL}
     """,
 )
 def bpe_token_count_q(spark, sf_dir):
     from .operators.textstats import bpe_ish_token_count
 
-    return _t(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    ).select("doc_id", bpe_ish_token_count(F.col("text")).alias("bpe_tokens"))
+    docs = _t(spark, sf_dir, "documents").filter(has_text(F.col("text")))
+    return docs.select("doc_id", bpe_ish_token_count(F.col("text")).alias("bpe_tokens"))
 
 
 @query("quality_features")  # rows-only: composite score easier kept engine-side
@@ -637,9 +655,7 @@ def quality_features_q(spark, sf_dir):
     from .operators.textstats import quality_features
 
     return quality_features(
-        _t(spark, sf_dir, "documents").filter(
-            F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-        ).select("doc_id", "text")
+        _t(spark, sf_dir, "documents").filter(has_text(F.col("text"))).select("doc_id", "text")
     ).drop("text")
 
 
@@ -831,16 +847,16 @@ def kg_correction_join(spark, sf_dir):
 # floor(x*1e4 + 0.5) rounding — see the r4 note in operators/textstats.py:
 # engine-native round(double, 4) diverges one ULP between Spark and DuckDB
 # on shortest-repr ties like 0.84025)
-ORACLE["quality_features"] = """
+ORACLE["quality_features"] = f"""
     WITH b AS (
       SELECT doc_id, text,
-             string_split_regex(trim(text), '\\s+') AS toks,
+             {tokens_sql('text')} AS toks,
              length(text) AS n_chars,
              length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS punct,
              length(text) - length(regexp_replace(text, '[A-Z]', '', 'g')) AS upper,
-             len(list_filter(string_split_regex(trim(text), '\\s+'),
+             len(list_filter({tokens_sql('text')},
                              t -> t IN ('the', 'and', 'of', 'to', 'a'))) AS stop_en
-      FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0
+      FROM documents WHERE {HAS_TEXT_SQL}
     )
     SELECT doc_id,
            CAST(len(toks) AS BIGINT) AS n_tokens,

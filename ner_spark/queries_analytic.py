@@ -15,9 +15,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .functions.text import ngrams, tokens
+from .functions.text import has_text, ngrams, tokens
 from .operators.graph import pagerank_fixedpoint, triangle_counts
-from .queries import _BIGRAM_EDGE_SQL, _t, ngrams_sql, query
+from .queries import HAS_TEXT_SQL, WS_CLASS, _BIGRAM_EDGE_SQL, _t, ngrams_sql, query, tokens_sql
 
 
 @query(
@@ -166,7 +166,7 @@ def _pagerank_oracle_sql(iters: int = 3) -> str:
     truncating division, so the replay is exact (see operators/graph.py)."""
     head = f"""
     WITH b AS (
-      SELECT string_split_regex(trim(text), '\\s+') AS toks
+      SELECT {tokens_sql('text')} AS toks
       FROM documents WHERE text IS NOT NULL
     ),
     bg AS (SELECT unnest({ngrams_sql('toks', 2, ('u', 'v'))}, recursive := true) FROM b),
@@ -414,7 +414,7 @@ def lineitem_quantile_buckets(spark, sf_dir):
     "kg_entity_profiles",
     f"""
     WITH b AS (
-      SELECT string_split_regex(trim(text), '\\s+') AS toks
+      SELECT {tokens_sql('text')} AS toks
       FROM documents WHERE text IS NOT NULL
     ),
     bg AS (SELECT unnest({ngrams_sql('toks', 2, ('u', 'v'))}, recursive := true) FROM b),
@@ -490,13 +490,13 @@ def events_window_uniques(spark, sf_dir):
 # quality-filter attrition funnel
 # ---------------------------------------------------------------------------
 
-_FUNNEL_Q_SQL = """
+_FUNNEL_Q_SQL = f"""
 WITH f AS (
-  SELECT text IS NOT NULL AND length(trim(text)) > 0 AS s1,
+  SELECT {HAS_TEXT_SQL} AS s1,
          CASE WHEN text IS NULL THEN 0
-              ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tok,
+              ELSE len({tokens_sql('text')}) END AS n_tok,
          CASE WHEN text IS NULL THEN 0
-              ELSE length(regexp_replace(text, '\\s+', '', 'g')) END AS n_ink,
+              ELSE length(regexp_replace(text, '{WS_CLASS}+', '', 'g')) END AS n_ink,
          CASE WHEN text IS NULL THEN 0
               ELSE length(regexp_replace(text, '[^A-Za-z]', '', 'g')) END
            AS n_alpha,
@@ -545,7 +545,7 @@ def quality_filter_funnel(spark, sf_dir):
     )
     n_len = F.coalesce(F.length("text"), F.lit(0))
     per_doc = docs.select(
-        (F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)).alias("s1"),
+        has_text(F.col("text")).alias("s1"),
         n_tok.alias("n_tok"),
         n_ink.alias("n_ink"),
         n_alpha.alias("n_alpha"),

@@ -15,10 +15,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .functions.text import ngrams, tokens
+from .functions.text import has_text, ngrams, tokens
 from .operators.dedup import explode_ne, md5_60, shingled
 from .oracle_minhash import minhash_cand_cte
-from .queries import _SHINGLE_SQL, _t, ngrams_sql, query
+from .queries import HAS_TEXT_SQL, _SHINGLE_SQL, _t, ngrams_sql, query, tokens_sql
 
 # ---------------------------------------------------------------------------
 # dedup_cluster_survivors: verified near-dup pairs -> connected components
@@ -216,7 +216,7 @@ _SPAN_K = 12
 _SUBSTRING_SQL = f"""
 WITH t AS (
   SELECT doc_id, {ngrams_sql('toks', _SPAN_K)} AS grams
-  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
+  FROM (SELECT doc_id, {tokens_sql('text')} AS toks
         FROM documents WHERE text IS NOT NULL)
 ),
 s AS (
@@ -281,10 +281,10 @@ def dedup_substring_spans(spark, sf_dir):
 # scale), the same pattern as tfidf_topk.
 # ---------------------------------------------------------------------------
 
-_MIX_SQL = """
+_MIX_SQL = f"""
 WITH n AS (
   SELECT source,
-         CAST(sum(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT) AS n_tokens
+         CAST(sum(len({tokens_sql('text')})) AS BIGINT) AS n_tokens
   FROM documents WHERE text IS NOT NULL GROUP BY source
 ),
 w AS (
@@ -340,9 +340,9 @@ def mix_temperature_weights(spark, sf_dir):
 # order and could flip the 4th decimal at a rounding boundary.
 # ---------------------------------------------------------------------------
 
-_SURPRISAL_SQL = """
+_SURPRISAL_SQL = f"""
 WITH tok AS (
-  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS t
+  SELECT doc_id, unnest({tokens_sql('lower(text)')}) AS t
   FROM documents WHERE text IS NOT NULL
 ),
 freq AS (SELECT t, count(*) AS c FROM tok GROUP BY t),
@@ -498,8 +498,8 @@ _VOCAB_V = 128
 
 _VOCAB_SQL = f"""
     WITH tok AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS t
-      FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0
+      SELECT doc_id, unnest({tokens_sql('text')}) AS t
+      FROM documents WHERE {HAS_TEXT_SQL}
     ),
     vocab AS (
       SELECT t FROM (SELECT t, count(*) AS c FROM tok GROUP BY t)
@@ -520,9 +520,7 @@ def vocab_oov_rate(spark, sf_dir):
     """Per-document out-of-vocabulary rate against the corpus top-128
     token vocabulary (ties broken token-ascending so the boundary is
     pinned). Rate in integer per-10000 units — exact cross-engine."""
-    docs = _t(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
-    )
+    docs = _t(spark, sf_dir, "documents").filter(has_text(F.col("text")))
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("t"))
     vocab = (
         tok.groupBy("t")

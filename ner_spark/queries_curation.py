@@ -30,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .flagship import _GAZ
-from .functions.text import ngrams
-from .queries import _t, query
+from .functions.text import ngrams, normalize_ws
+from .queries import _t, normalize_ws_sql, query
 
 #: PER surface forms from the shared gazetteer, longest-first so regex
 #: alternation cannot shadow a longer alias with a shorter prefix
@@ -50,7 +50,7 @@ _DUP_FRAC_MAX = 0.20
     f"""
     WITH t AS (
       SELECT doc_id,
-             string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')
+             string_split({normalize_ws_sql('text')}, ' ')
                AS toks
       FROM documents WHERE text IS NOT NULL
     ),
@@ -89,7 +89,7 @@ def doc_repetition_filter(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = docs.select(
         "doc_id",
-        F.split(F.trim(F.regexp_replace("text", r"\s+", " ")), " ").alias("toks"),
+        F.split(normalize_ws(F.col("text")), " ").alias("toks"),
     )
     tg = toks.select("doc_id", F.explode(ngrams("toks", 3)).alias("trigram"))
     cnt = tg.groupBy("doc_id", "trigram").agg(F.count(F.lit(1)).alias("c"))

@@ -33,10 +33,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .functions.text import tokens
+from .functions.text import has_text, tokens
 from .oracle_minhash import minhash_cand_cte
 from .operators.scratch import scratch_persist
-from .queries import _SHINGLE_SQL, _t, query
+from .queries import HAS_TEXT_SQL, WS_CLASS, _SHINGLE_SQL, _t, query, tokens_sql
 
 _CF_THRESHOLD = 0.1
 _CF_K = 16
@@ -46,7 +46,7 @@ _CF_BANDS = 4
 _CF_KEEPER_SHINGLES = f"""
       SELECT s.doc, s.sh FROM ({_SHINGLE_SQL}) s
       JOIN (SELECT min(doc_id) AS doc FROM documents
-            WHERE text IS NOT NULL AND length(trim(text)) > 0
+            WHERE {HAS_TEXT_SQL}
             GROUP BY text) k ON k.doc = s.doc
 """
 
@@ -82,15 +82,15 @@ _CF_SQL = f"""
     comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
     near_dropped AS (SELECT node FROM comp WHERE node <> component),
     keepers AS (SELECT min(doc_id) AS doc FROM documents
-                WHERE text IS NOT NULL AND length(trim(text)) > 0
+                WHERE {HAS_TEXT_SQL}
                 GROUP BY text),
     f AS (
       SELECT doc_id, source,
-             (text IS NULL OR length(trim(text)) = 0) AS is_empty,
-             CASE WHEN text IS NULL OR length(trim(text)) = 0 THEN 0
-                  ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tok,
+             NOT ({HAS_TEXT_SQL}) AS is_empty,
+             CASE WHEN {HAS_TEXT_SQL} THEN len({tokens_sql('text')})
+                  ELSE 0 END AS n_tok,
              CASE WHEN text IS NULL THEN 0
-                  ELSE length(regexp_replace(text, '\\s+', '', 'g')) END AS n_ink,
+                  ELSE length(regexp_replace(text, '{WS_CLASS}+', '', 'g')) END AS n_ink,
              CASE WHEN text IS NULL THEN 0
                   ELSE length(regexp_replace(text, '[^A-Za-z]', '', 'g')) END
                AS n_alpha,
@@ -132,7 +132,7 @@ def curation_flagship(spark, sf_dir):
     from .operators.dedup import minhash_verified_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    nonempty = F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
+    nonempty = has_text(F.col("text"))
     # exact pass: constant-width shuffle key (sha2), survivor = min doc_id
     # keepers feeds the semi-join AND the final attribution join;
     # near_dropped's lineage is the whole LSH+verify+CC subtree and it

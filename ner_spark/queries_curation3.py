@@ -35,11 +35,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .functions.text import ngrams, tokens
+from .functions.text import has_text, ngrams, tokens
 from .operators.dedup import md5_60
 from .operators.scratch import scratch_persist
 from .oracle_minhash import md5_60_sql
-from .queries import _t, ngrams_sql, query
+from .queries import HAS_TEXT_SQL, _t, ngrams_sql, query, tokens_sql
 
 _B = 1024  # feature-hash buckets
 _TARGET_LANG = "en"
@@ -47,9 +47,9 @@ _TARGET_LANG = "en"
 _DSIR_SQL = f"""
     WITH d AS (
       SELECT doc_id, lang,
-             string_split_regex(trim(text), '\\s+') AS toks
+             {tokens_sql('text')} AS toks
       FROM documents
-      WHERE text IS NOT NULL AND length(trim(text)) > 0
+      WHERE {HAS_TEXT_SQL}
     ),
     feats AS (
       SELECT doc_id, lang, unnest(list_concat(toks, {ngrams_sql('toks', 2)})) AS feat
@@ -91,9 +91,7 @@ def corpus_importance_weights(spark, sf_dir):
     counts + the two multinomials), so it persists as scratch for the
     query's lifetime instead of re-deriving the explode three times.
     """
-    docs = _t(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
-    )
+    docs = _t(spark, sf_dir, "documents").filter(has_text(F.col("text")))
     toks = tokens(F.col("text"))
     d = docs.select("doc_id", "lang", toks.alias("toks"))
     feats = d.select(

@@ -113,13 +113,15 @@ def build_flagship_sql(pred_rules=PRED_RULES) -> str:
     rule-bank variants (e.g. the testdata-vocabulary bank in flagship.py,
     which actually fires on the driver corpus — the reference French rules
     cannot) replay through the identical generated pipeline SQL."""
+    from .queries import normalize_ws_sql  # local: queries_graphkg calls this mid-import
+
     return f"""
     WITH src AS MATERIALIZED (
       -- docs_as_spans + S0 normalize: the corpus is already single-spaced
       -- lowercase tokens, so normalize_ws is trim+collapse (asserted: the
       -- guard row below fails the whole query if any text violates that)
       SELECT printf('d%09d', doc_id) AS did,
-             trim(regexp_replace(text, '\\s+', ' ', 'g')) AS text
+             {normalize_ws_sql('text')} AS text
       FROM documents
       WHERE text IS NOT NULL
         AND 1 = CASE WHEN regexp_matches(text, '^[a-z]+( [a-z]+)*$')

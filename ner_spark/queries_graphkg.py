@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .flagship import _GAZ, VOCAB_PRED_RULES, flagship_triples_vocab
-from .queries import query
+from .queries import normalize_ws_sql, query
 from .queries_flagship import build_flagship_sql
 
 _TRI = f"tri AS MATERIALIZED (\n{build_flagship_sql(VOCAB_PRED_RULES)}\n)"
@@ -426,11 +426,11 @@ def kg_node_table(spark, sf_dir):
     srcmap AS (
       SELECT printf('d%09d', doc_id) AS did,
              min(printf('d%09d', doc_id)) OVER (
-               PARTITION BY trim(regexp_replace(text, '\\s+', ' ', 'g'))
+               PARTITION BY {normalize_ws_sql('text')}
              ) AS doc_uid
       FROM documents
       WHERE text IS NOT NULL
-        AND trim(regexp_replace(text, '\\s+', ' ', 'g')) <> ''
+        AND {normalize_ws_sql('text')} <> ''
     ),
     ent AS (SELECT DISTINCT doc_uid, subj FROM tri WHERE pred = 'instance_of')
     SELECT m.media_ref, e.subj AS entity,

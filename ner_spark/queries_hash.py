@@ -24,7 +24,7 @@ import functools
 from .operators.dedup import SIMHASH_BITS, _segment_layout
 from .operators.similarity import band_planes
 from .oracle_minhash import md5_60_sql, minhash_cand_cte
-from .queries import ORACLE, _SHINGLE_SQL, query
+from .queries import HAS_TEXT_SQL, ORACLE, _SHINGLE_SQL, query, tokens_sql
 
 
 def _md5_60(expr: str) -> str:
@@ -99,9 +99,9 @@ def _simhash_sql(max_hamming: int = 3) -> str:
     return f"""
     WITH th AS (
       SELECT doc_id AS doc,
-             list_transform(string_split_regex(trim(text), '\\s+'),
+             list_transform({tokens_sql('text')},
                             t -> {_md5_60('t')}) AS th
-      FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0
+      FROM documents WHERE {HAS_TEXT_SQL}
     ),
     fp AS (
       SELECT doc,

@@ -52,18 +52,13 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .functions.text import ngrams, tokens
-from .queries import _t, ngrams_sql, query
-
-# shared tokenization (identical to the pagerank/textmine queries)
-_TOKS_SQL = "string_split_regex(trim(text), '\\s+')"
+from .functions.text import has_text, ngrams, tokens
+from .queries import HAS_TEXT_SQL, _t, ngrams_sql, query, tokens_sql
 
 
 def _base_tokens(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return docs.filter(
-        F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
-    ).select("doc_id", tokens(F.col("text")).alias("__toks"))
+    docs = _t(spark, sf_dir, "documents").filter(has_text(F.col("text")))
+    return docs.select("doc_id", tokens(F.col("text")).alias("__toks"))
 
 
 # ---------------------------------------------------------------------------
@@ -75,9 +70,9 @@ _PMI_TOPK = 50
 
 _PMI_SQL = f"""
     WITH b AS (
-      SELECT {_TOKS_SQL} AS toks
+      SELECT {tokens_sql('text')} AS toks
       FROM documents
-      WHERE text IS NOT NULL AND length(trim(text)) > 0
+      WHERE {HAS_TEXT_SQL}
     ),
     uni AS (
       SELECT t AS w, count(*) AS c
@@ -161,9 +156,9 @@ _POSTINGS_CAP = 16
 
 _INVIDX_SQL = f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_TOKS_SQL}) AS term
+      SELECT doc_id, unnest({tokens_sql('text')}) AS term
       FROM documents
-      WHERE text IS NOT NULL AND length(trim(text)) > 0
+      WHERE {HAS_TEXT_SQL}
     ),
     per_doc AS (
       SELECT term, doc_id, count(*) AS tf FROM tok GROUP BY 1, 2
@@ -258,8 +253,8 @@ from .operators.dedup import WINNOW_POS_BITS as _POS_BITS  # noqa: E402
 _WINNOW_SQL = f"""
     WITH b AS (
       SELECT doc_id, {ngrams_sql('toks', _WIN_K)} AS grams
-      FROM (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
-            WHERE text IS NOT NULL AND length(trim(text)) > 0)
+      FROM (SELECT doc_id, {tokens_sql('text')} AS toks FROM documents
+            WHERE {HAS_TEXT_SQL})
     ),
     kg AS (
       SELECT doc_id, pos,
@@ -330,9 +325,9 @@ _CHUNK_TOKENS = 8
 
 _CHUNK_SQL = f"""
     WITH b AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks
+      SELECT doc_id, {tokens_sql('text')} AS toks
       FROM documents
-      WHERE text IS NOT NULL AND length(trim(text)) > 0
+      WHERE {HAS_TEXT_SQL}
     ),
     ch AS (
       SELECT doc_id, c AS chunk_idx,
@@ -405,7 +400,7 @@ def dedup_chunk_global(spark, sf_dir):
 
 def _labelprop_oracle_sql(rounds: int = 2) -> str:
     head = f"""
-    WITH b AS (SELECT {_TOKS_SQL} AS toks FROM documents WHERE text IS NOT NULL),
+    WITH b AS (SELECT {tokens_sql('text')} AS toks FROM documents WHERE text IS NOT NULL),
     bg AS (
       SELECT * FROM (SELECT unnest({ngrams_sql('toks', 2, ('u', 'v'))}, recursive := true)
                      FROM b)

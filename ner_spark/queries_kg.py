@@ -15,8 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .functions.text import tokens
-from .queries import _t, query
+from .functions.text import has_text, tokens
+from .queries import HAS_TEXT_SQL, _t, normalize_ws_sql, query, tokens_sql
 
 # surface -> base label used by every fixture below (SQL VALUES mirror)
 _LAB = {
@@ -640,17 +640,19 @@ def casen_corpus_markup(spark, sf_dir):
 # G1/G5/G6/G8/G9 scalar functions in one pass
 # ---------------------------------------------------------------------------
 
+_UNTAGGED_SQL = r"regexp_replace(tagged, '</?s\b[^>]*>', '', 'g')"
+
+
 @query(
     "text_scalar_functions",
-    r"""
+    f"""
     WITH w AS (
       SELECT doc_id, text,
              '<s id="1">' || replace(text, ' ', '   ') || '</s>' AS tagged
-      FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0
+      FROM documents WHERE {HAS_TEXT_SQL}
     )
     SELECT doc_id,
-           trim(regexp_replace(regexp_replace(tagged, '</?s\b[^>]*>', '', 'g'),
-                               '\s+', ' ', 'g')) AS cleaned,
+           {normalize_ws_sql(_UNTAGGED_SQL)} AS cleaned,
            substr(text, 6, 20) AS ctx,
            CAST(len(string_split('a_b_c_priority', '_')) AS BIGINT) AS weight,
            printf('part-%05d.parquet', CAST(doc_id % 100 AS INT)) AS fname
@@ -665,9 +667,7 @@ def text_scalar_functions(spark, sf_dir):
     each from SQL string primitives."""
     from .functions.text import context_window, method_weight, normalize_ws, strip_tags
 
-    docs = _t(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    )
+    docs = _t(spark, sf_dir, "documents").filter(has_text(F.col("text")))
     tagged = F.concat(
         F.lit('<s id="1">'), F.regexp_replace("text", " ", "   "), F.lit("</s>")
     )
@@ -822,7 +822,7 @@ _MANIFEST_SQL = f"""
     WITH d AS (
       -- docs_as_spans + S0 normalize (NULL span text joins to '')
       SELECT printf('d%09d', doc_id) AS did,
-             coalesce(trim(regexp_replace(text, '\\s+', ' ', 'g')), '') AS text
+             coalesce({normalize_ws_sql('text')}, '') AS text
       FROM documents
     ),
     s0 AS (   -- stage output bucketed on doc_id: one row per source doc
@@ -906,7 +906,7 @@ _CTX_KW_SQL = ", ".join(
     WITH aliases(entity_id, alias) AS (VALUES {_CTX_ALIAS_SQL}),
     kw(entity_id, kw) AS (VALUES {_CTX_KW_SQL}),
     tok AS (
-      SELECT DISTINCT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS t
+      SELECT DISTINCT doc_id, unnest({tokens_sql('lower(text)')}) AS t
       FROM documents WHERE text IS NOT NULL
     ),
     mention AS (
@@ -1137,9 +1137,9 @@ _NEG_K = 2  # corruptions per positive occurrence
 _NEG_SQL = f"""
     WITH surf(NE) AS (VALUES {{surf}}),
     d AS (
-      SELECT doc_id, text, string_split_regex(trim(text), '\\s+') AS toks
+      SELECT doc_id, text, {tokens_sql('text')} AS toks
       FROM documents
-      WHERE text IS NOT NULL AND length(trim(text)) > 0
+      WHERE {HAS_TEXT_SQL}
     ),
     m AS (
       SELECT d.doc_id, surf.NE, instr(d.text, surf.NE) AS pos
@@ -1189,9 +1189,7 @@ def kg_negative_samples(spark, sf_dir):
     because the entity vocabulary, not the corpus, bounds it)."""
     from .queries import _SURFACES
 
-    docs = _t(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
-    )
+    docs = _t(spark, sf_dir, "documents").filter(has_text(F.col("text")))
     d = docs.select(
         "doc_id", "text", tokens(F.col("text")).alias("toks")
     )

@@ -42,8 +42,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .functions.text import normalize_ws
 from .operators.dedup import md5_60
-from .queries import _t, query
+from .queries import _t, normalize_ws_sql, query
 
 #: tokens per training context
 _BUDGET = 256
@@ -57,7 +58,7 @@ _TARGET_FRAC = 0.4
 
 _MD5_60 = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 
-_TOKS_SQL = "string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')"
+_TOKS_SQL = f"string_split({normalize_ws_sql('text')}, ' ')"
 
 
 @query(
@@ -107,7 +108,7 @@ def pack_concat_cut(spark, sf_dir):
                 "lane"
             ),
             F.size(
-                F.split(F.trim(F.regexp_replace("text", r"\s+", " ")), " ")
+                F.split(normalize_ws(F.col("text")), " ")
             )
             .cast("long")
             .alias("n"),
@@ -242,7 +243,7 @@ def doc_chunk_split(spark, sf_dir):
         .filter(F.col("text").isNotNull())
         .select(
             "doc_id",
-            F.split(F.trim(F.regexp_replace("text", r"\s+", " ")), " ").alias(
+            F.split(normalize_ws(F.col("text")), " ").alias(
                 "toks"
             ),
         )

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from .functions.text import ngrams, tokens
 from .operators.scratch import scratch_persist
-from .queries import _t, ngrams_sql, query
+from .queries import _t, ngrams_sql, query, tokens_sql
 
 # ---------------------------------------------------------------------------
 # fuzzy entity linking
@@ -62,9 +62,9 @@ def _corrupt_expr(t: str) -> str:
     """
 
 
-_FUZZY_SQL = """
+_FUZZY_SQL = f"""
 WITH tokall AS (
-  SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS t
+  SELECT unnest({tokens_sql('lower(text)')}) AS t
   FROM documents WHERE text IS NOT NULL
 ),
 freq AS (
@@ -369,7 +369,7 @@ def events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _INC_SQL = f"""
 WITH RECURSIVE b AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
+  SELECT doc_id, {tokens_sql('text')} AS toks
   FROM documents WHERE text IS NOT NULL
 ),
 bg AS (SELECT unnest({ngrams_sql('toks', 2, ('u', 'v'))}, recursive := true) FROM b),
@@ -427,7 +427,7 @@ def kg_incremental_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _khop_oracle_sql(hops: int = 3) -> str:
     head = f"""
     WITH b AS (
-      SELECT string_split_regex(trim(text), '\\s+') AS toks
+      SELECT {tokens_sql('text')} AS toks
       FROM documents WHERE text IS NOT NULL
     ),
     bg AS (SELECT unnest({ngrams_sql('toks', 2, ('u', 'v'))}, recursive := true) FROM b),

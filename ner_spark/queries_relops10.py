@@ -46,10 +46,10 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .functions.text import tokens
+from .functions.text import has_text, tokens
 from .operators.dedup import HASH_P, affine_coeffs
 from .oracle_minhash import md5_60_sql
-from .queries import _SHINGLE_SQL, _t, query
+from .queries import HAS_TEXT_SQL, _SHINGLE_SQL, _t, query, tokens_sql
 
 # ---------------------------------------------------------------------------
 # sketch_histogram_quantiles: mergeable two-digit-mantissa quantile sketch
@@ -222,9 +222,9 @@ _RAKE_STOP_SQL = ", ".join(f"'{s}'" for s in _RAKE_STOP)
 _RAKE_SQL = f"""
     WITH toks AS (
       SELECT doc_id, i - 1 AS pos, t[i] AS term
-      FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
+      FROM (SELECT doc_id, {tokens_sql('text')} AS t
             FROM documents
-            WHERE text IS NOT NULL AND length(trim(text)) > 0),
+            WHERE {HAS_TEXT_SQL}),
            unnest(generate_series(1, len(t))) AS g(i)
     ),
     ns AS (
@@ -270,9 +270,7 @@ def text_keyword_rake(spark, sf_dir):
     interpreted HOFs), global word deg/freq statistics, and the
     order-free integer score sum_w floor(1000*deg/freq). Emits phrases
     occurring >= {min_occ} times with their RAKE score."""
-    docs = _t(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
-    )
+    docs = _t(spark, sf_dir, "documents").filter(has_text(F.col("text")))
     toks = docs.select(
         "doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "term")
     )

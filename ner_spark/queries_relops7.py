@@ -45,8 +45,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .functions.text import ngrams, tokens
-from .queries import _BIGRAM_EDGE_SQL, _t, ngrams_sql, query
+from .functions.text import has_text, ngrams, tokens
+from .queries import HAS_TEXT_SQL, _BIGRAM_EDGE_SQL, _t, ngrams_sql, query, tokens_sql
 
 # ---------------------------------------------------------------------------
 # tpch_q7: volume shipping between two nations
@@ -192,9 +192,9 @@ def tpch_q13(spark, sf_dir):
 
 _REP_SQL = f"""
     WITH base AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
+      SELECT doc_id, {tokens_sql('text')} AS toks
       FROM documents
-      WHERE text IS NOT NULL AND length(trim(text)) > 0
+      WHERE {HAS_TEXT_SQL}
     ),
     t AS (
       SELECT doc_id, len(toks) AS n_tokens,
@@ -250,7 +250,7 @@ def doc_repetition_signals(spark, sf_dir):
     toks = tokens(F.col("text"))
     t = (
         _t(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0))
+        .filter(has_text(F.col("text")))
         .select(
             "doc_id",
             toks.alias("toks"),
@@ -310,9 +310,9 @@ _SEG_W = 16
 
 _SEG_SQL = f"""
     WITH base AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
+      SELECT doc_id, {tokens_sql('text')} AS toks
       FROM documents
-      WHERE text IS NOT NULL AND length(trim(text)) > 0
+      WHERE {HAS_TEXT_SQL}
     ),
     idx AS (
       SELECT doc_id, toks,

@@ -47,8 +47,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .functions.text import has_text
 from .operators.dedup import md5_60
-from .queries import _t, query
+from .queries import HAS_TEXT_SQL, _t, query
 
 # ---------------------------------------------------------------------------
 # embedding_kmeans_lloyd: integer-exact fixed-iteration Lloyd k-means
@@ -258,7 +259,7 @@ _SHARD_SQL = f"""
              ('0x' || substr(md5('{_SHARD_SEED}:' || CAST(doc_id AS VARCHAR)),
                              1, 15))::BIGINT AS sort_key
       FROM documents
-      WHERE text IS NOT NULL AND length(trim(text)) > 0
+      WHERE {HAS_TEXT_SQL}
     )
     SELECT doc_id,
            CAST(sort_key % {_SHARD_N} AS INT) AS shard,
@@ -278,9 +279,7 @@ def training_shard_assign(spark, sf_dir):
     content-free, so the exchange is uniform regardless of data skew.
     Changing the seed string is a full deterministic re-shuffle (the
     per-epoch reshuffle primitive)."""
-    docs = _t(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
-    )
+    docs = _t(spark, sf_dir, "documents").filter(has_text(F.col("text")))
     key = md5_60(F.concat(F.lit(_SHARD_SEED + ":"), F.col("doc_id").cast("string")))
     keyed = docs.select("doc_id", key.cast("long").alias("sort_key"))
     shard = F.pmod(F.col("sort_key"), F.lit(_SHARD_N)).cast("int")

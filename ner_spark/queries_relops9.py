@@ -62,9 +62,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .functions.text import tokens
+from .functions.text import has_text, tokens
 from .operators.dedup import explode_ne, shingled
-from .queries import _SHINGLE_SQL, _t, query
+from .queries import HAS_TEXT_SQL, _SHINGLE_SQL, _t, query, tokens_sql
 
 # ---------------------------------------------------------------------------
 # ir_phrase_search: positional-index exact phrase matching
@@ -84,9 +84,9 @@ _PHRASE_VALUES = ",\n        ".join(
 
 _PHRASE_SQL = f"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
+      SELECT doc_id, {tokens_sql('text')} AS t
       FROM documents
-      WHERE text IS NOT NULL AND length(trim(text)) > 0
+      WHERE {HAS_TEXT_SQL}
     ),
     idx AS (
       SELECT doc_id, i - 1 AS pos, t[i] AS term
@@ -117,9 +117,7 @@ def ir_phrase_search(spark, sf_dir):
     pos - off; a start with all plen distinct offsets present is one
     occurrence. One broadcast join + two aggregates, zero string ops
     past tokenization."""
-    docs = _t(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
-    )
+    docs = _t(spark, sf_dir, "documents").filter(has_text(F.col("text")))
     idx = docs.select(
         "doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "term")
     )

@@ -43,9 +43,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.text import ngrams, tokens
+from .functions.text import has_text, ngrams, tokens
 from .operators.dedup import md5_60
-from .queries import _t, ngrams_sql, query
+from .queries import HAS_TEXT_SQL, _t, ngrams_sql, query, tokens_sql
 
 # ---------------------------------------------------------------------------
 # KMV distinct-count sketch
@@ -253,9 +253,9 @@ WITH RECURSIVE base AS (
   SELECT doc_id,
          ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
            % {_PACK_BUCKETS} AS bucket,
-         CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tokens
+         CAST(len({tokens_sql('text')}) AS BIGINT) AS n_tokens
   FROM documents
-  WHERE text IS NOT NULL AND length(trim(text)) > 0
+  WHERE {HAS_TEXT_SQL}
 ),
 ord AS (
   SELECT *, row_number() OVER (PARTITION BY bucket ORDER BY doc_id) AS rn
@@ -311,9 +311,7 @@ def pack_training_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched applyInPandas group; oracle = recursive-CTE replay of the
     same fold). Reference analogue: the corpus batching of
     src/utils/corpus.py generalized to token-budget packing."""
-    docs = _t(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    )
+    docs = _t(spark, sf_dir, "documents").filter(has_text(F.col("text")))
     base = docs.select(
         "doc_id",
         F.pmod(md5_60(F.col("doc_id").cast("string")), F.lit(_PACK_BUCKETS))
@@ -420,7 +418,7 @@ _SETOP_K = 256
 
 _SETOP_SQL = f"""
 WITH d AS (
-  SELECT lang, string_split_regex(trim(lower(text)), '\\s+') AS toks
+  SELECT lang, {tokens_sql('lower(text)')} AS toks
   FROM documents WHERE text IS NOT NULL AND lang IN ('en', 'fr')
 ),
 sh AS (SELECT DISTINCT lang, unnest({ngrams_sql('toks', 3)}) AS s FROM d),
@@ -670,9 +668,9 @@ _HLL_SQL = f"""
              CASE WHEN len(toks) >= 3
                   THEN list_distinct({ngrams_sql('toks', 3)})
                   ELSE [array_to_string(toks, ' ')] END AS shl
-      FROM (SELECT lang, string_split_regex(trim(text), '\\s+') AS toks
+      FROM (SELECT lang, {tokens_sql('text')} AS toks
             FROM documents
-            WHERE text IS NOT NULL AND length(trim(text)) > 0)
+            WHERE {HAS_TEXT_SQL})
     ),
     flat AS (SELECT lang, unnest(shl) AS s FROM sh),
     hashed AS (SELECT lang, ('0x' || substr(md5(s), 1, 15))::BIGINT AS h FROM flat),
@@ -723,10 +721,8 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.dedup import _shingles_of, explode_ne
 
-    docs = _t(spark, sf_dir, "documents")
-    base = docs.filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    ).select("lang", tokens(F.col("text")).alias("_toks"))
+    docs = _t(spark, sf_dir, "documents").filter(has_text(F.col("text")))
+    base = docs.select("lang", tokens(F.col("text")).alias("_toks"))
     flat = base.select("lang", explode_ne(_shingles_of("_toks", 3)).alias("s"))
     h = md5_60(F.col("s"))
     rest = F.shiftright(h, 8)

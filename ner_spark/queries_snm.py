@@ -20,7 +20,7 @@ semantics, and the Jaccard arithmetic.
 
 from __future__ import annotations
 
-from .queries import _t, query
+from .queries import HAS_TEXT_SQL, _t, query
 
 _SNM_WINDOW = 3
 _SNM_PCT = 80
@@ -36,7 +36,7 @@ _SNM_SQL = f"""
                string_split_regex(lower(text), '[^a-z0-9]+'),
                t -> t <> '')) AS toks
       FROM documents
-      WHERE text IS NOT NULL AND length(trim(text)) > 0
+      WHERE {HAS_TEXT_SQL}
     ),
     blocked AS (
       SELECT doc, skey, toks, substring(skey, 1, {_SNM_BLOCK_LEN}) AS blk
@@ -82,7 +82,7 @@ def _pass_pairs_sql(key_sql: str, tag: str) -> str:
                string_split_regex(lower(text), '[^a-z0-9]+'),
                t -> t <> '')) AS toks
       FROM documents
-      WHERE text IS NOT NULL AND length(trim(text)) > 0
+      WHERE {HAS_TEXT_SQL}
     ),
     blocked_{tag} AS (
       SELECT doc, skey, toks, substring(skey, 1, {_SNM_BLOCK_LEN}) AS blk
@@ -153,7 +153,7 @@ _ED_SQL = f"""
              substring(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
                        1, {_ED_MAX_CHARS}) AS pay
       FROM documents
-      WHERE text IS NOT NULL AND length(trim(text)) > 0
+      WHERE {HAS_TEXT_SQL}
     ),
     blocked AS (
       SELECT doc, skey, pay, substring(skey, 1, {_SNM_BLOCK_LEN}) AS blk

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .functions.text import tokens
+from .functions.text import has_text, tokens
 from .operators.textstats import (
     PII_EMAIL_RE,
     PII_PHONE_RE,
@@ -19,7 +19,7 @@ from .operators.textstats import (
     repetition_features,
     tfidf_topk,
 )
-from .queries import _t, ngrams_sql, query
+from .queries import HAS_TEXT_SQL, _t, ngrams_sql, query, tokens_sql
 
 
 @query(
@@ -57,9 +57,9 @@ def q_tfidf_topk(spark, sf_dir):
     "doc_repetition",
     f"""
     WITH b AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
+      SELECT doc_id, {tokens_sql('text')} AS toks
       FROM documents WHERE text IS NOT NULL
-        AND len(string_split_regex(trim(text), '\\s+')) >= 2
+        AND len({tokens_sql('text')}) >= 2
     ),
     words AS (
       SELECT doc_id, len(toks) AS n_tokens, unnest(toks) AS w FROM b
@@ -153,7 +153,7 @@ def q_pii_redact(spark, sf_dir):
 # higher-order array-function surface parity
 # ---------------------------------------------------------------------------
 
-_HOF_SQL = """
+_HOF_SQL = f"""
 SELECT doc_id,
        CAST(len(toks) AS INT) AS n_tokens,
        CAST(list_reduce(list_prepend(0, list_transform(toks, x -> length(x))),
@@ -163,8 +163,8 @@ SELECT doc_id,
        CAST(len(list_filter(toks, x -> length(x) >= 6)) AS INT) AS n_long,
        list_contains(toks, 'spark') AS mentions_spark
 FROM (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
-  FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0
+  SELECT doc_id, {tokens_sql('lower(text)')} AS toks
+  FROM documents WHERE {HAS_TEXT_SQL}
 )
 """
 
@@ -178,9 +178,7 @@ def doc_array_hof_stats(spark, sf_dir):
     (the measured anti-scaling cliff is HOF chains on post-aggregation
     collect_list results — see consensus.py); the fold stays integer so
     the replay is exact."""
-    docs = _t(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    )
+    docs = _t(spark, sf_dir, "documents").filter(has_text(F.col("text")))
     toked = docs.select(
         "doc_id", tokens(F.lower("text")).alias("toks")
     )

@@ -39,22 +39,20 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .functions.text import tokens
-from .queries import _t, query
+from .functions.text import has_text, tokens
+from .queries import HAS_TEXT_SQL, _t, query, tokens_sql
 
-_TOK_CTE = """
+_TOK_CTE = f"""
     tok AS (
       SELECT doc_id, lang, source,
-             unnest(string_split_regex(trim(text), '\\s+')) AS token
-      FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0
+             unnest({tokens_sql('text')}) AS token
+      FROM documents WHERE {HAS_TEXT_SQL}
     )
 """
 
 
 def _tok(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
-    )
+    docs = _t(spark, sf_dir, "documents").filter(has_text(F.col("text")))
     return docs.select(
         "doc_id",
         "lang",

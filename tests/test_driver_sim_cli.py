@@ -119,6 +119,25 @@ def test_named_subset_ngram_family_queries():
     )
 
 
+def test_named_subset_whitespace_family_queries():
+    """The queries on the whitespace rule that no other subset covers —
+    token counts and quality signals, language ID, fingerprints, packing,
+    vocabulary and sketch statistics, the inverted index and the KG text
+    queries, all built on ``functions.text.tokens``/``normalize_ws``/
+    ``has_text`` — hash-checked against oracles built on their DuckDB twins
+    ``queries.tokens_sql``/``normalize_ws_sql``/``HAS_TEXT_SQL``."""
+    _assert_subset_ok(
+        "doc_token_count,doc_quality_score,lang_id_predict,doc_fingerprint,"
+        "bpe_token_count,quality_features,text_scalar_functions,"
+        "kg_context_disambiguation,kg_negative_samples,mix_temperature_weights,"
+        "doc_lm_surprisal,vocab_oov_rate,doc_array_hof_stats,quality_filter_funnel,"
+        "kg_fuzzy_linking,pack_training_sequences,cms_heavy_hitters,"
+        "topk_tokens_per_lang,vocab_growth_heaps,text_inverted_index,"
+        "dedup_chunk_global,pack_concat_cut,doc_chunk_split,training_shard_assign,"
+        "ir_phrase_search,text_keyword_rake,lang_id_confusion"
+    )
+
+
 def test_register_ivf_oracle_drops_and_restores(tmp_path):
     """Importing the registry registers all four data-dependent oracles;
     ``register_ivf_oracle`` drops them for an sf_dir without embeddings

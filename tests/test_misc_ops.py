@@ -167,6 +167,53 @@ def test_ngrams_twins_follow_one_rule(spark):
         assert [joined(s) for _, s in got] == want, n
 
 
+#: null, empty, one word, and each whitespace-like character alone, leading,
+#: between two words and padded with spaces around runs of itself
+_WS_EDGES = [None, "", "ab"] + [
+    form
+    for c in " \t\n\x0b\f\r\xa0\u2003\u3000\u200b\x1c\x85"
+    for form in (c, c + "ab", f"a{c}b", f" {c}a{c}{c}b{c} ")
+]
+
+
+def test_whitespace_twins_follow_one_rule(spark):
+    """``tokens``, ``normalize_ws``, ``has_text`` and the ink length
+    (text minus whitespace) give the same value on Spark and on their
+    DuckDB twins for every edge string: Java's ``\\s`` has ``\\x0B`` and
+    RE2's does not, and Spark's ``trim`` strips U+0020 only."""
+    import duckdb
+
+    from ner_spark.functions.text import has_text, normalize_ws, tokens
+    from ner_spark.queries import HAS_TEXT_SQL, WS_CLASS, normalize_ws_sql, tokens_sql
+
+    assert len(_WS_EDGES) == 51
+    text = F.col("text")
+    df = spark.createDataFrame(list(enumerate(_WS_EDGES)), "id int, text string")
+    got_spark = [
+        tuple(r)[1:]
+        for r in df.select(
+            "id",
+            tokens(text),
+            normalize_ws(text),
+            has_text(text),
+            F.length(F.regexp_replace(text, r"\s+", "")),
+        )
+        .orderBy("id")
+        .collect()
+    ]
+    con = duckdb.connect()
+    sql = (
+        f"SELECT {tokens_sql('text')}, {normalize_ws_sql('text')}, {HAS_TEXT_SQL},"
+        f" length(regexp_replace(text, '{WS_CLASS}+', '', 'g'))"
+        " FROM (SELECT ?::VARCHAR AS text)"
+    )
+    got_duck = [con.execute(sql, [s]).fetchone() for s in _WS_EDGES]
+    differ = [
+        (s, a, b) for s, a, b in zip(_WS_EDGES, got_spark, got_duck, strict=True) if a != b
+    ]
+    assert not differ, differ
+
+
 def test_model_extractor_stub_and_real_branch(spark, gazetteer, patterns):
     """use_model=False pins the deterministic stub. The real nlp.pipe
     branch is exercised every run via the API shims in

@@ -12,6 +12,10 @@ Three static checks over the source tree (no Spark):
 2. No ``ALLOWED`` entry is stale.
 3. No module in ``ner_spark/``, ``tools/`` or ``tests/`` has an unused
    import, except on statements marked ``noqa: ...F401``.
+4. The whitespace rule (tokenize, collapse, blank-document filter) is
+   written only in its twin definitions: ``tokens``, ``normalize_ws`` and
+   ``has_text`` in ``functions/text.py`` and their DuckDB twins in
+   ``queries.py``.
 """
 
 from __future__ import annotations
@@ -162,3 +166,42 @@ def test_no_unused_imports():
         for path in _py_files(REPO / sub):
             unused += _unused_imports(path)
     assert not unused, f"unused imports: {unused}"
+
+
+#: an inline copy of the whitespace rule, on either engine
+_WS_RULE = re.compile(
+    r"string_split_regex\(trim|length\((F\.)?trim\(|'\\{1,2}s\+'"
+    r"|F\.trim\(F\.regexp_replace|F\.split\(F\.trim\("
+)
+_WS_TWINS = {
+    "ner_spark/functions/text.py": {"tokens", "normalize_ws", "has_text"},
+    "ner_spark/queries.py": {"WS_CLASS", "tokens_sql", "normalize_ws_sql", "HAS_TEXT_SQL"},
+}
+
+
+def _defined_lines(tree: ast.Module, names: set[str]) -> set[int]:
+    lines: set[int] = set()
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef):
+            bound = {node.name}
+        elif isinstance(node, ast.Assign):
+            bound = {t.id for t in node.targets if isinstance(t, ast.Name)}
+        else:
+            continue
+        if bound & names:
+            lines |= set(range(node.lineno, node.end_lineno + 1))
+    return lines
+
+
+def test_whitespace_rule_is_written_once():
+    stray = []
+    for path in _py_files(PACKAGE):
+        rel = path.relative_to(REPO).as_posix()
+        twins = _defined_lines(_parse(path), _WS_TWINS.get(rel, set()))
+        for i, line in enumerate(path.read_text(encoding="utf-8").splitlines(), 1):
+            if _WS_RULE.search(line) and i not in twins:
+                stray.append(f"{rel}:{i}: {line.strip()}")
+    assert not stray, (
+        "inline whitespace rule; call functions.text.tokens/normalize_ws/has_text "
+        f"or queries.tokens_sql/normalize_ws_sql/HAS_TEXT_SQL instead: {stray}"
+    )
